@@ -196,6 +196,7 @@ def main(argv: list[str] | None = None) -> int:
     corrections = corrections.persist()
     total = corrections.count()
     path = write_correction_file(corrections, args.out, fmt=args.format)
+    corrections.unpersist()
 
     print(f"Corrections written to: {path}")
     print(f"Total corrections: {total}")

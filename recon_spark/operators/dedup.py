@@ -2,11 +2,7 @@
 (hash-groupBy), MinHash + LSH banding, SimHash, and n-gram Jaccard
 verification.
 
-Cache lifecycle: the LSH operators ``persist()`` their signature/shingle
-frames (both sides of the band self-join read them); ownership passes to
-the CALLER — clear with ``spark.catalog.clearCache()`` after the
-consuming action, as ``bench.py`` / ``tools/check_correctness.py`` do
-between queries.
+Persisted signature/shingle frames go through :mod:`recon_spark.staging`.
 
 Scale design (100 TB):
 
@@ -37,27 +33,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import staging
 from . import text as T
 
 N_MINHASH = 12
 N_BANDS = 4  # 4 bands x 3 rows
 BAND_ROWS = N_MINHASH // N_BANDS
 SIMHASH_BITS = 32
-
-#: persisted frames :func:`near_dup_recall_from_shingles` staged
-#: internally (the ranking/sampling lifecycle contract, ADVICE r13):
-#: long-lived sessions that avoid a blanket clearCache can release
-#: precisely via :func:`release_staged`
-_STAGED: list[DataFrame] = []
-
-
-def release_staged() -> int:
-    """Unpersist every frame this module staged internally; returns how
-    many. Call after the consuming action."""
-    n = len(_STAGED)
-    while _STAGED:
-        _STAGED.pop().unpersist()
-    return n
 
 
 def exact_dedup(
@@ -210,7 +192,7 @@ def minhash_lsh_candidates(
     # 100 TB this is exactly what you'd materialize anyway: signatures are
     # ~100 bytes/doc vs KBs of text, so MEMORY_AND_DISK is cheap and the
     # join reads the compact form.
-    with_sig = with_sig.persist()
+    with_sig = staging.stage(with_sig)
 
     banded = with_sig.select(
         "id", "sig", F.explode(band_hashes(F.col("sig"), n_bands, rows)).alias("b")
@@ -274,14 +256,13 @@ def minhash_near_dup(
     staged = (
         docs if tokens_col else docs.withColumn("__toks", T.tokens(text_col))
     )
-    sh = (
+    sh = staging.stage(
         staged.select(
             F.col(id_col).alias("id"),
             T.shingles_from_tokens(
                 F.col(tokens_col or "__toks"), k
             ).alias("sh"),
         )
-        .persist()
     )
     return minhash_near_dup_from_shingles(sh, n_hashes, n_bands, threshold)
 
@@ -298,11 +279,10 @@ def minhash_near_dup_from_shingles(
     has already paid the tokenize+shingle pass (e.g. for the regime
     probe) reuses it for signatures AND the exact-Jaccard verify."""
     rows = n_hashes // n_bands
-    with_sig = (
+    with_sig = staging.stage(
         sh.withColumn("sig", signature_from_shingles(F.col("sh"), n_hashes))
         .select("id", "sig")
         .filter(F.col("sig").isNotNull())
-        .persist()
     )
     banded = with_sig.select(
         "id", "sig", F.explode(band_hashes(F.col("sig"), n_bands, rows)).alias("b")
@@ -361,15 +341,12 @@ def staged_shingles(
     persisted — the shared input of both exact n-gram Jaccard paths, so
     a caller running count-based AND prefix candidate generation over
     the same corpus (e.g. the graded parity fold in
-    registry.q_ngram_jaccard) pays one staging pass, not two. Cache
-    lifecycle passes to the caller (module-docstring contract)."""
-    return (
-        docs.withColumn("__toks", T.tokens(text_col))
-        .select(
+    registry.q_ngram_jaccard) pays one staging pass, not two."""
+    return staging.stage(
+        docs.withColumn("__toks", T.tokens(text_col)).select(
             F.col(id_col).alias("id"),
             T.shingles_from_tokens(F.col("__toks"), k).alias("sh"),
         )
-        .persist()
     )
 
 
@@ -510,14 +487,12 @@ def near_dup_recall_from_shingles(
     rows = n_hashes // n_bands
     # both sides of the band self-join read this frame: without the
     # persist the 12-md5-per-shingle signature pass runs twice (the
-    # minhash_lsh_candidates precedent); staged in this module's
-    # _STAGED so callers can release it precisely after the consuming
-    # action (registry drains into _stage_persist, bench's release
-    # hook calls release_staged — ADVICE r13)
-    banded = sigs.select(
-        "id", F.explode(band_hashes(F.col("sig"), n_bands, rows)).alias("b")
-    ).select("id", "b.band_idx", "b.band_hash").persist()
-    _STAGED.append(banded)
+    # minhash_lsh_candidates precedent)
+    banded = staging.stage(
+        sigs.select(
+            "id", F.explode(band_hashes(F.col("sig"), n_bands, rows)).alias("b")
+        ).select("id", "b.band_idx", "b.band_hash")
+    )
     cand = (
         banded.alias("a")
         .join(banded.alias("b"), ["band_idx", "band_hash"])
@@ -795,8 +770,6 @@ def ngram_jaccard_auto(
 
     NOTE the probe is an ACTION (one aggregate over the index, one
     collected row) — the plan downstream of this call is route-specific.
-    Cache lifecycle of the staged frames passes to the caller (module
-    docstring contract).
     """
     if sh is None:
         if docs is None:
@@ -835,13 +808,12 @@ def verify_candidates(
     """Second stage: join candidate pairs back to shingle sets and keep
     pairs whose exact n-gram Jaccard clears ``threshold``. Two equi-joins
     on the doc id (no fan-out: candidates << corpus)."""
-    sh = (
-        docs.withColumn("__toks", T.tokens(text_col))
-        .select(
+    # joined once per pair side — avoid re-shingling the corpus
+    sh = staging.stage(
+        docs.withColumn("__toks", T.tokens(text_col)).select(
             F.col(id_col).alias("id"),
             T.shingles_from_tokens(F.col("__toks"), k).alias("sh"),
         )
-        .persist()  # joined once per pair side — avoid re-shingling the corpus
     )
     out = (
         candidates.join(

@@ -49,6 +49,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import staging
 from . import text as T
 from .dedup import _hash32
 
@@ -57,22 +58,6 @@ from .dedup import _hash32
 #: corpus's ~31-token vocabulary + bigrams well spread
 DSIR_BUCKETS = 4096
 DSIR_ALPHA = 1.0
-
-#: persisted weight frames :func:`dsir_select` created internally
-#: (cache-lifecycle mirror of exactsubstr._AUTO_STAGED, r13 review:
-#: callers previously had no handle short of clearCache)
-_STAGED: list[DataFrame] = []
-
-
-def release_staged() -> int:
-    """Unpersist every weights frame :func:`dsir_select` staged
-    internally; returns how many. Call after the consuming ACTION —
-    the persist is load-bearing while the returned plan executes (the
-    frame feeds both the bucket-count aggregate and the row join)."""
-    n = len(_STAGED)
-    while _STAGED:
-        _STAGED.pop().unpersist()
-    return n
 
 
 def _bigrams(toks: Column) -> Column:
@@ -164,7 +149,7 @@ def dsir_log_weights(
     already use; the old hash-aggregate sum order was shuffle-arrival).
     The per-doc BUCKET int arrays (features hashed inline; transform()
     preserves order, so the fold's float sum is bit-identical to folding
-    the strings) are persisted once (``_STAGED``) and feed both passes,
+    the strings) are staged once and feed both passes,
     so the corpus is tokenized once, md5-hashed once per feature
     occurrence (not twice), exchanged never, and joined never (sf0.1
     A/B numbers in OPTIMIZATION_r14.md).
@@ -186,16 +171,15 @@ def dsir_log_weights(
     # (model explode + scoring fold) and caches a small int array per
     # doc instead of every unigram+bigram string. transform() preserves
     # array order, so the scoring fold visits the identical bucket
-    # sequence and the per-doc float sum is bit-identical. Handle in
-    # _STAGED; released by the registry/bench hooks after the consuming
-    # action.
-    staged = raw_docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.transform(
-            feats, lambda x: (_hash32(x) % n_buckets).cast("int")
-        ).alias("__b"),
-    ).persist()
-    _STAGED.append(staged)
+    # sequence and the per-doc float sum is bit-identical.
+    staged = staging.stage(
+        raw_docs.select(
+            F.col(id_col).alias("doc_id"),
+            F.transform(
+                feats, lambda x: (_hash32(x) % n_buckets).cast("int")
+            ).alias("__b"),
+        )
+    )
     exploded = (
         staged.filter(F.col("__b").isNotNull())
         .select("doc_id", F.explode("__b").alias("bucket"))
@@ -317,10 +301,7 @@ def dsir_select(
     cost of the tie-flood guarantee — a massive tie on a non-numeric
     id still serializes that one weight group. The weights frame is
     consumed twice (bucket counts + the row join), so the derived
-    frame is persisted here and the handle appended to ``_STAGED``;
-    call :func:`release_staged` (or ``spark.catalog.clearCache()``)
-    after the consuming action — same contract as exactsubstr's
-    staged frame.
+    frame is staged (:mod:`recon_spark.staging`).
     """
     from pyspark.sql.types import NumericType
 
@@ -340,14 +321,15 @@ def dsir_select(
         if isinstance(w.schema["doc_id"].dataType, NumericType)
         else F.lit(0).cast("long")
     )
-    rows = w.select(
-        "doc_id",
-        "n_feats",
-        "log_weight",
-        F.floor(F.col("log_weight") * F.lit(bucket_scale)).alias("__bk"),
-        blk.alias("__blk"),
-    ).persist()
-    _STAGED.append(rows)
+    rows = staging.stage(
+        w.select(
+            "doc_id",
+            "n_feats",
+            "log_weight",
+            F.floor(F.col("log_weight") * F.lit(bucket_scale)).alias("__bk"),
+            blk.alias("__blk"),
+        )
+    )
 
     counts = rows.groupBy("__bk").agg(F.count(F.lit(1)).alias("__bn"))
     # the ONLY global step: cumulative counts over the tiny bucket frame

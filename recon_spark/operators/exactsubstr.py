@@ -54,6 +54,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import staging
 from . import spans as SP
 from . import text as T
 
@@ -65,27 +66,6 @@ EXACT_SUBSTR_TOKENS = 50
 #: shortest docs exercise the no-window edge.
 GRADE_TOKENS = 12
 
-#: staged frames created INTERNALLY by the default path (caller passed
-#: ``staged=None``) — the caller never receives the handle, so without
-#: bookkeeping the O(corpus-tokens) cached frame would be unreleasable
-#: for the session (ADVICE r11). ``spark.catalog.clearCache()`` (the
-#: repo-wide cache contract) drops the executor memory; this list keeps
-#: the handles so :func:`release_auto_staged` can release them precisely
-#: without nuking unrelated caches.
-_AUTO_STAGED: list[DataFrame] = []
-
-
-def release_auto_staged() -> int:
-    """Unpersist every staged window-fingerprint frame the default path
-    created internally; returns how many. Call after the consuming
-    ACTION (not merely after building the plan — the persist is
-    load-bearing for plan shape: the posexplode must generate from a
-    cached array column, and the verdicts plan reads the index twice)."""
-    n = len(_AUTO_STAGED)
-    while _AUTO_STAGED:
-        _AUTO_STAGED.pop().unpersist()
-    return n
-
 
 def staged_window_fps(
     docs: DataFrame,
@@ -94,10 +74,10 @@ def staged_window_fps(
     text_col: str = "text",
 ) -> DataFrame:
     """``(doc_id, __fps)`` with every stride-1 L-token window hashed to
-    md5 — PERSISTED, because the index explode must generate from a
-    cached array column, not an in-plan lambda expression (the measured
-    Generate-outside-codegen trap in dedup.staged_shingles). Cache
-    lifecycle passes to the caller."""
+    md5 — staged (:mod:`recon_spark.staging`), because the index explode
+    must generate from a cached array column, not an in-plan lambda
+    expression (the measured Generate-outside-codegen trap in
+    dedup.staged_shingles)."""
     staged = docs.select(
         F.col(id_col).alias("doc_id"), T.tokens(text_col).alias("__toks")
     ).filter(F.col("__toks").isNotNull())
@@ -109,7 +89,7 @@ def staged_window_fps(
     fps = F.transform(
         idx, lambda i: F.md5(F.array_join(F.slice(toks, i + 1, l_tokens), " "))
     )
-    return staged.select("doc_id", fps.alias("__fps")).persist()
+    return staging.stage(staged.select("doc_id", fps.alias("__fps")))
 
 
 def exact_substr_index(
@@ -123,13 +103,9 @@ def exact_substr_index(
     stride-1 window start, fixed-width payload (no window text).
 
     When ``staged`` is None the window-fingerprint frame is created
-    (and persisted) here; the handle is tracked in ``_AUTO_STAGED`` so
-    :func:`release_auto_staged` can release it after the caller's
-    action (callers that manage staging themselves — the registry's
-    _stage_persist path — pass ``staged`` and are unaffected)."""
+    (and staged) here."""
     if staged is None:
         staged = staged_window_fps(docs, l_tokens, id_col, text_col)
-        _AUTO_STAGED.append(staged)
     return staged.select("doc_id", F.posexplode("__fps").alias("pos", "fp"))
 
 

@@ -48,22 +48,6 @@ from .text import tokens
 LANGID_NGRAM_MAX = 3
 LANGID_PROFILE_K = 200
 
-#: staged-frame ledger (the dsir/ranking._STAGED cache-lifecycle
-#: contract). Currently EMPTY by design: langid's duplicated subtrees
-#: share via ReusedExchange, and the persisted fused spelling measured
-#: slower (see :func:`langid_verdicts`) — the hook stays so the
-#: bench/registry release sites keep one uniform contract.
-_STAGED: list = []
-
-
-def release_staged() -> int:
-    """Unpersist every frame this module staged internally; returns how
-    many. Call after the consuming action."""
-    n = len(_STAGED)
-    while _STAGED:
-        _STAGED.pop().unpersist()
-    return n
-
 #: checksum-ordered verdict columns (single source for the Spark parity
 #: frame and the DuckDB replay)
 LANGID_COLUMNS: tuple[str, ...] = (

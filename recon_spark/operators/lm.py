@@ -38,6 +38,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import staging
 from . import text as T
 
 #: sentence-start pseudo-token (cannot collide: real tokens never hold a
@@ -80,17 +81,15 @@ def train_bigram_lm(
     ``unigrams (w1, c1)`` (context counts, BOS included), and ``vocab``
     (1 row: V = distinct next-tokens + 1 unseen class).
 
-    All three derive from ONE bigram-type aggregate (persisted — handle
-    in ``_STAGED``, the :func:`train_kn_lm` lifecycle): ``c1(w1) =
+    All three derive from ONE bigram-type aggregate (staged, see
+    :mod:`recon_spark.staging`): ``c1(w1) =
     Σ_w2 c2`` (every bigram occurrence with context ``w1`` is counted
     exactly once on either side) and ``V = |{w2}| + 1`` are exact
     rollups of the count table, so the corpus tokenize/explode/shuffle
     runs once instead of once per model table per consuming action
     (three full passes before; the scoring join re-executed each)."""
     bg = _bigrams(ref_docs, id_col, text_col, tokens_col)
-    big = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c2"))
-    big = big.persist()
-    _STAGED.append(big)
+    big = staging.stage(bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c2")))
     unigrams = big.groupBy("w1").agg(F.sum("c2").alias("c1"))
     vocab = big.agg((F.count_distinct("w2") + 1).alias("v"))
     return {"bigrams": big, "unigrams": unigrams, "vocab": vocab}
@@ -207,22 +206,6 @@ def perplexity_filter_threshold(
     return float(row[0])
 
 
-#: persisted model frames :func:`train_kn_lm` staged internally (the
-#: ranking/sampling `_STAGED` lifecycle: the bigram-type aggregate feeds
-#: the context rollup, the continuation rollup, the totals AND the
-#: scoring join — four consumers of one corpus tokenize+shuffle)
-_STAGED: list[DataFrame] = []
-
-
-def release_staged() -> int:
-    """Unpersist every frame :func:`train_kn_lm` staged internally;
-    returns how many. Call after the consuming action."""
-    n = len(_STAGED)
-    while _STAGED:
-        _STAGED.pop().unpersist()
-    return n
-
-
 def train_kn_lm(
     ref_docs: DataFrame,
     text_col: str = "text",
@@ -259,9 +242,9 @@ def train_kn_lm(
     aggregate, never the corpus again.
     """
     bg = _bigrams(ref_docs, id_col, text_col, tokens_col)
-    big = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).cast("long").alias("c2"))
-    big = big.persist()
-    _STAGED.append(big)
+    big = staging.stage(
+        bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).cast("long").alias("c2"))
+    )
     contexts = big.groupBy("w1").agg(
         F.sum("c2").cast("long").alias("c1"),
         F.count(F.lit(1)).cast("long").alias("n1f"),

@@ -39,20 +39,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-#: persisted frames :func:`bottomk_rows` staged internally (same
-#: cache-lifecycle contract as dsir._STAGED / exactsubstr._AUTO_STAGED:
-#: the persist is load-bearing while the returned plan executes — the
-#: frame feeds both the bucket-count aggregate and the row join)
-_STAGED: list[DataFrame] = []
-
-
-def release_staged() -> int:
-    """Unpersist every frame :func:`bottomk_rows` staged internally;
-    returns how many. Call after the consuming action."""
-    n = len(_STAGED)
-    while _STAGED:
-        _STAGED.pop().unpersist()
-    return n
+from .. import staging
 
 
 def bottomk_rows(
@@ -89,13 +76,13 @@ def bottomk_rows(
     serializes only its one bucket.
 
     The derived frame is consumed twice (bucket counts + the row join),
-    so it is persisted here and the handle appended to ``_STAGED``; call
-    :func:`release_staged` after the consuming action.
+    so it is staged (:mod:`recon_spark.staging`).
     """
-    rows = df.withColumn(
-        "__bk", F.floor(F.log2(F.col(key_col)) * F.lit(lg_scale)).cast("long")
-    ).persist()
-    _STAGED.append(rows)
+    rows = staging.stage(
+        df.withColumn(
+            "__bk", F.floor(F.log2(F.col(key_col)) * F.lit(lg_scale)).cast("long")
+        )
+    )
 
     counts = rows.groupBy("__bk").agg(F.count(F.lit(1)).alias("__bn"))
     w_cum = Window.orderBy(F.col("__bk").asc()).rowsBetween(
@@ -144,9 +131,9 @@ def ntile_bins(
     PERF: ``df`` is consumed TWICE (bucket-count aggregate + the row
     join), so it is persisted here — otherwise an expensive upstream
     lineage (e.g. text scoring) executes once per consumer (measured 2x
-    the scoring cost on data_quality_bins at 50k docs). Cache lifecycle
-    is handed to the caller, same contract as the minhash/tfidf
-    operators: the frame is two narrow columns plus the caller's id.
+    the scoring cost on data_quality_bins at 50k docs). The frame is
+    staged (:mod:`recon_spark.staging`): two narrow columns plus the
+    caller's id.
     """
     s = F.col(score_col)
     blk = F.floor(F.col(id_col) / F.lit(id_block))
@@ -156,7 +143,7 @@ def ntile_bins(
     # level would hit "cannot change storage level" (ADVICE r7). Both
     # consumers (the bucket-count aggregate and the row join) read
     # `rows`, so the cache reuse is identical.
-    rows = df.withColumn("__blk", blk).persist()
+    rows = staging.stage(df.withColumn("__blk", blk))
 
     counts = rows.groupBy(score_col, "__blk").agg(F.count(F.lit(1)).alias("__bn"))
     # the ONLY global step: cumulative counts over the bucket frame

@@ -23,23 +23,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import staging
+
 SPLIT_SALT = "split:v1"
-
-#: persisted base frames :func:`pps_sample` staged internally (the
-#: ranking/dsir._STAGED cache-lifecycle contract: the weighted base
-#: feeds BOTH the Σw aggregate and the bottom-k scan — without the
-#: persist the weight expression, a corpus tokenize in the graded fold,
-#: executes once per consumer, r13 review)
-_STAGED: list[DataFrame] = []
-
-
-def release_staged() -> int:
-    """Unpersist every frame :func:`pps_sample` staged internally;
-    returns how many. Call after the consuming action."""
-    n = len(_STAGED)
-    while _STAGED:
-        _STAGED.pop().unpersist()
-    return n
 
 #: uint32 thresholds for the default 90/5/5 split (integer compares only)
 TRAIN_NUM, VAL_NUM, DEN = 90, 5, 100
@@ -115,15 +101,14 @@ def stratified_sample(
     Value-identical to the per-stratum-window spelling (asserted in
     tests/test_sampling.py, incl. a single-stratum corpus) — the DuckDB
     oracle keeps the plain window SQL. The derived frame is consumed
-    twice (bucket counts + the row join), so it is persisted here and
-    the handle appended to ``_STAGED``; call :func:`release_staged`
-    after the consuming action (the registry row drains it into
-    ``_stage_persist``).
+    twice (bucket counts + the row join), so it is staged
+    (:mod:`recon_spark.staging`).
     """
-    rows = docs.withColumn("__hb", hash_bucket(id_col, salt)).withColumn(
-        "__bk", F.shiftright("__hb", _STRAT_SHIFT)
-    ).persist()
-    _STAGED.append(rows)
+    rows = staging.stage(
+        docs.withColumn("__hb", hash_bucket(id_col, salt)).withColumn(
+            "__bk", F.shiftright("__hb", _STRAT_SHIFT)
+        )
+    )
 
     counts = rows.groupBy(stratum_col, "__bk").agg(
         F.count(F.lit(1)).alias("__bn")
@@ -196,11 +181,13 @@ def contamination_check(
     from . import text as T
 
     base = with_split(docs, id_col, salt).withColumn("__toks", T.tokens(text_col))
-    sh = base.select(
-        F.col(id_col).alias("id"),
-        "split",
-        T.shingles_from_tokens(F.col("__toks"), k).alias("sh"),
-    ).persist()
+    sh = staging.stage(
+        base.select(
+            F.col(id_col).alias("id"),
+            "split",
+            T.shingles_from_tokens(F.col("__toks"), k).alias("sh"),
+        )
+    )
     train_sh = (
         sh.filter(F.col("split") == "train")
         .select(F.explode("sh").alias("shingle"))
@@ -356,22 +343,22 @@ def pps_sample(
     Scale shape: the key is a narrow projection riding the scan; the
     top-k is :func:`~.ranking.bottomk_rows` — bucket-pruned two-phase
     rank, no SinglePartition row sort; Σw is one 1-row aggregate off
-    the same persisted base the bottom-k reads (staged in this module's
-    ``_STAGED``; release after the consuming action).
+    the same staged base the bottom-k reads.
     """
     from .ranking import bottomk_rows
 
     w = F.col(weight_col).cast("double")
-    base = docs.filter(w.isNotNull() & (w > 0)).select(
-        F.col(id_col).alias("id"),
-        w.alias("weight"),
-        (
-            (hash_bucket(id_col, salt).cast("double") + F.lit(0.5))
-            / F.lit(float(_SCALE))
-            / w
-        ).alias("__key"),
-    ).persist()
-    _STAGED.append(base)
+    base = staging.stage(
+        docs.filter(w.isNotNull() & (w > 0)).select(
+            F.col(id_col).alias("id"),
+            w.alias("weight"),
+            (
+                (hash_bucket(id_col, salt).cast("double") + F.lit(0.5))
+                / F.lit(float(_SCALE))
+                / w
+            ).alias("__key"),
+        )
+    )
     tot = base.agg(F.sum("weight").alias("__wsum"))
     picked = bottomk_rows(base, "__key", "id", k)
     return (

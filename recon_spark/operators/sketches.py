@@ -58,6 +58,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import staging
+
 #: default DataSketches lgConfigK: 2^12 registers, ~1.6% rel. error
 HLL_LGK = 12
 
@@ -299,21 +301,6 @@ def rollup_quantiles(
 #: reported). Error bound is n/(MG_K+1).
 MG_K = 256
 
-#: persisted candidate frames :func:`frequent_items` staged internally
-#: (the cache-lifecycle contract of ranking/dsir._STAGED: the frame
-#: feeds both the bounded threshold collect and the returned plan —
-#: without the persist the mapInPandas corpus scan runs twice)
-_STAGED: list[DataFrame] = []
-
-
-def release_staged() -> int:
-    """Unpersist every frame :func:`frequent_items` staged internally;
-    returns how many. Call after the consuming action."""
-    n = len(_STAGED)
-    while _STAGED:
-        _STAGED.pop().unpersist()
-    return n
-
 
 def _mg_reduce(counts: dict, k: int) -> dict:
     """Shrink a counter dict to <= k entries by the MG decrement: subtract
@@ -382,8 +369,9 @@ def frequent_items(df: DataFrame, item_col: str, k: int = MG_K) -> DataFrame:
     (pytest-graded; the exact twins of top-item questions are the graded
     histogram/value-count rows).
     """
-    parts = mg_partials(df, item_col, k).persist()
-    _STAGED.append(parts)
+    # feeds both the bounded threshold collect and the returned plan:
+    # without the persist the mapInPandas corpus scan runs twice
+    parts = staging.stage(mg_partials(df, item_col, k))
     cand = (
         parts.filter(F.col("item").isNotNull())
         .groupBy("item")
@@ -565,8 +553,7 @@ def cm_parity(
     scratch)."""
     from .dedup import _hash32
 
-    cells = cm_cells(df, item_col, depth, width).persist()
-    _STAGED.append(cells)
+    cells = staging.stage(cm_cells(df, item_col, depth, width))
     cell_ck = _hash32(
         F.concat_ws(
             "|",

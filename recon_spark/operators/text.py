@@ -9,11 +9,7 @@ Python workers, predicate/column pruning reach the parquet scan.
 The DuckDB mirrors live in :mod:`recon_spark.oracles.llm_sql` and are
 generated from the same constants, so the two renderings cannot drift.
 
-Cache lifecycle: operators that ``persist()`` an intermediate frame
-(``tfidf_top_terms``'s tf aggregate) hand ownership to the CALLER — call
-``spark.catalog.clearCache()`` (or unpersist the returned plan's cached
-ancestor) once the consuming action finishes, as ``bench.py`` and
-``tools/check_correctness.py`` do between queries.
+Persisted intermediates go through :mod:`recon_spark.staging`.
 """
 
 from __future__ import annotations
@@ -21,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .. import staging
 from ..functions.normalizers import WS, _c
 
 #: word-splitting pattern: runs of non-alphanumerics (BPE-ish baseline)
@@ -308,7 +305,7 @@ def tfidf_top_terms(
     from pyspark.sql import Window
 
     toks = docs.select(F.col(id_col).alias("id"), F.explode(tokens(text_col)).alias("term"))
-    tf = toks.groupBy("id", "term").agg(F.count(F.lit(1)).alias("tc")).persist()
+    tf = staging.stage(toks.groupBy("id", "term").agg(F.count(F.lit(1)).alias("tc")))
     dl = tf.groupBy("id").agg(F.sum("tc").alias("n"))
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("dfc"))
     nd = tf.select("id").distinct().agg(F.count(F.lit(1)).alias("nd"))
@@ -350,21 +347,6 @@ BM25_K1 = 1.2
 BM25_B = 0.75
 BM25_TOPK = 10
 BM25_QUERY_TERMS = 3
-
-#: persisted tf frames :func:`bm25_topk` staged internally (the
-#: ranking/dsir._STAGED cache-lifecycle contract: tf feeds dl, dfreq,
-#: nd and the postings join — without the persist the corpus tokenizes
-#: once per consumer)
-_STAGED: list[DataFrame] = []
-
-
-def release_staged() -> int:
-    """Unpersist every frame :func:`bm25_topk` staged internally;
-    returns how many. Call after the consuming action."""
-    n = len(_STAGED)
-    while _STAGED:
-        _STAGED.pop().unpersist()
-    return n
 
 
 def bm25_topk(
@@ -411,16 +393,14 @@ def bm25_topk(
     sort, r13 review). Strictly monotone for distinct micros: adjacent
     reciprocals differ by ~1/m² while a double ulp near 1/m is
     ~2^-52/m — distinct for any m < 4.5e15. Exact micros ties order by
-    doc id, matching the oracle's (micros DESC, id ASC). The staged
-    frames follow the caller-clearCache contract.
+    doc id, matching the oracle's (micros DESC, id ASC).
     """
     from .ranking import bottomk_rows
 
     toks = docs.select(
         F.col(id_col).alias("id"), F.explode(tokens(text_col)).alias("term")
     )
-    tf = toks.groupBy("id", "term").agg(F.count(F.lit(1)).alias("tc")).persist()
-    _STAGED.append(tf)
+    tf = staging.stage(toks.groupBy("id", "term").agg(F.count(F.lit(1)).alias("tc")))
     dl = tf.groupBy("id").agg(F.sum("tc").alias("n"))
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("dfc"))
     nd = tf.select("id").distinct().agg(F.count(F.lit(1)).alias("nd"))
@@ -790,24 +770,18 @@ def pmi_collocations(
     # the scan+tokenize runs once, not once per table (r14; the unigram
     # and bigram explodes still run separately, but off the cached
     # arrays instead of re-reading and re-splitting the corpus)
-    toks = (
-        docs.select(tokens(text_col).alias("__toks"))
-        .filter(F.size("__toks") > 0)
-        .persist()
+    toks = staging.stage(
+        docs.select(tokens(text_col).alias("__toks")).filter(F.size("__toks") > 0)
     )
-    _STAGED.append(toks)
     # both count tables are vocabulary-bounded and each is read by
-    # multiple consumers (totals + the joins back) — persist them so the
+    # multiple consumers (totals + the joins back) — stage them so the
     # corpus tokenize/explode lineage runs once per table, not once per
-    # consumer (the tfidf tf-aggregate convention; handles in _STAGED,
-    # released by the registry/bench hooks after the consuming action)
-    uni = (
+    # consumer (the tfidf tf-aggregate convention)
+    uni = staging.stage(
         toks.select(F.explode("__toks").alias("term"))
         .groupBy("term")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .persist()
     )
-    _STAGED.append(uni)
     n_uni = uni.agg(F.sum("c").cast("long").alias("n_unigrams"))
     pairs = toks.filter(F.size("__toks") > 1).select(
         F.explode(
@@ -817,13 +791,11 @@ def pmi_collocations(
             )
         ).alias("p")
     )
-    bi = (
+    bi = staging.stage(
         pairs.select(F.col("p.a").alias("term_a"), F.col("p.b").alias("term_b"))
         .groupBy("term_a", "term_b")
         .agg(F.count(F.lit(1)).cast("long").alias("c_ab"))
-        .persist()
     )
-    _STAGED.append(bi)
     n_bi = bi.agg(F.sum("c_ab").cast("long").alias("n_bigrams"))
     out = (
         bi.filter(F.col("c_ab") >= min_count)

@@ -19,32 +19,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import staging
 from ..operators import components, dedup, lm, packing, sampling
 from ..operators import text as T
-
-#: persisted text-editing substrate :func:`build_training_corpus` stages
-#: internally (r14, guide §2.4/§5): when Arrow-pass / column-algebra text
-#: edits (NFC, C4 lines, paragraph dedup) are followed by a stage whose
-#: internals consume their input twice (span_dedup / exact_substr join
-#: their fingerprint verdicts back against the same docs), the edited
-#: corpus is persisted once instead of re-running the Python-boundary
-#: map per consumer. Handles here; :func:`release_staged` (or the
-#: caller's ``spark.catalog.clearCache()``) after the consuming action.
-_STAGED: list[DataFrame] = []
-
-#: persist the text-edited corpus ahead of the double-consuming
-#: span/exactsubstr stages (A/B toggle so the decision stays measurable;
-#: see OPTIMIZATION_r14.md for the sf0.1 numbers behind the default)
-_STAGE_EDITED_DOCS = True
-
-
-def release_staged() -> int:
-    """Unpersist every frame :func:`build_training_corpus` staged
-    internally; returns how many. Call after the consuming action."""
-    n = len(_STAGED)
-    while _STAGED:
-        _STAGED.pop().unpersist()
-    return n
 
 
 def build_training_corpus(
@@ -157,22 +134,7 @@ def build_training_corpus(
     (one driver action over the scored frame); every other stage stays
     lazy.
 
-    CACHE CONTRACT: the deduped ``survivors`` frame stays persisted —
-    it feeds the RETURNED plan in three places (LSH pairs, the
-    cluster-drop anti-join, the packing tail), so it cannot be released
-    here without re-running the dedup lineage once per consumer at the
-    caller's action. Call ``spark.catalog.clearCache()`` after consuming
-    the result (and between repeated builds in a long-lived session), as
-    ``bench.py`` / ``tools/check_correctness.py`` do. The perplexity
-    stage's scored frame is fully drained and unpersisted internally.
-    The exact_substr stage's internally-created window-fingerprint
-    frame is additionally tracked in
-    ``operators.exactsubstr._AUTO_STAGED`` — callers that want to
-    release it precisely (without dropping unrelated caches) call
-    ``exactsubstr.release_auto_staged()`` after the consuming action.
-    The DSIR stage's internally-persisted weights frame is tracked the
-    same way (``operators.dsir._STAGED`` / ``dsir.release_staged()``,
-    r13 review)."""
+    Frames the returned plan still reads go through :mod:`recon_spark.staging`."""
     # Lean staging: the pipeline consumes ONLY the quality flags and the
     # exact-dup fingerprint — computing the full with_text_stats battery
     # here also paid for min_shingle_hash (md5 per shingle per doc),
@@ -221,9 +183,9 @@ def build_training_corpus(
                 docs, id_col=id_col, text_col=text_col
             ).select(id_col, F.col("clean_text").alias(text_col))
 
-    if _STAGE_EDITED_DOCS and (
-        unicode_form is not None or c4_lines or dedup_paras
-    ) and (exact_substr_tokens is not None or boilerplate_spans is not None):
+    if (unicode_form is not None or c4_lines or dedup_paras) and (
+        exact_substr_tokens is not None or boilerplate_spans is not None
+    ):
         # r14 (guide §2.4/§5): the span/exactsubstr stages below consume
         # their input TWICE (window-fingerprint aggregate + the verdict
         # join back), so without a cache the text-editing lineage above —
@@ -235,8 +197,7 @@ def build_training_corpus(
         # the store-the-derived-form tradeoff the survivors cache
         # already makes (disk-backed persist vs re-running a Python
         # boundary pass per consumer).
-        docs = docs.persist()
-        _STAGED.append(docs)
+        docs = staging.stage(docs)
 
     if exact_substr_tokens is not None:
         # ExactSubstr (round 11, operators/exactsubstr.py): Lee et al.
@@ -316,9 +277,8 @@ def build_training_corpus(
     # survivors feeds the LSH stage, the cluster-drop anti-join, the LM
     # scorer and the packing tail — persist so the staging + dedup
     # window lineage executes once, not once per consumer (measured ~2x
-    # on the e2e bench entry). Cache lifecycle belongs to the caller
-    # (same contract as the minhash/tfidf/ntile operators).
-    survivors = dedup.exact_dedup(clean, F.col("fingerprint"), [id_col]).persist()
+    # on the e2e bench entry)
+    survivors = staging.stage(dedup.exact_dedup(clean, F.col("fingerprint"), [id_col]))
 
     if near_dup_method == "minhash":
         pairs = dedup.minhash_near_dup(
@@ -341,10 +301,12 @@ def build_training_corpus(
         from fractions import Fraction
 
         fr = Fraction(near_dup_threshold).limit_denominator(10**6)
-        sh = survivors.select(
-            F.col(id_col).alias("id"),
-            T.shingles_from_tokens(F.col("__toks"), 3).alias("sh"),
-        ).persist()
+        sh = staging.stage(
+            survivors.select(
+                F.col(id_col).alias("id"),
+                T.shingles_from_tokens(F.col("__toks"), 3).alias("sh"),
+            )
+        )
         pairs = dedup.ngram_jaccard_auto(
             None, sh=sh, t_num=fr.numerator, t_den=fr.denominator
         ).select("id_a", "id_b")

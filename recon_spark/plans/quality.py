@@ -25,6 +25,8 @@ from collections.abc import Iterable, Sequence
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
+from .. import staging
+
 
 # --- S2: header-presence validation -----------------------------------------
 
@@ -156,21 +158,6 @@ def observe_warnings(df: DataFrame, code_col: str, name: str = "quality") -> tup
 #: SSN edit-distance cap for a "typo" verdict; gross tolerance is ±1 cent
 NEAR_MISS_LEV = 2
 
-#: persisted frames :func:`near_miss_audit` staged internally when
-#: planting (the ranking/dsir._STAGED contract: the relius anti-join
-#: projection feeds BOTH the band explode and the plant builder —
-#: without the persist the anti-join shuffle runs once per consumer)
-_STAGED: list[DataFrame] = []
-
-
-def release_staged() -> int:
-    """Unpersist every frame :func:`near_miss_audit` staged internally;
-    returns how many. Call after the consuming action."""
-    n = len(_STAGED)
-    while _STAGED:
-        _STAGED.pop().unpersist()
-    return n
-
 
 def near_miss_audit(
     relius_clean: DataFrame,
@@ -232,9 +219,8 @@ def near_miss_audit(
     )
     if plant_demos:
         # two consumers (band explode + plant builder) read this
-        # projection; persist so the relius anti-join shuffle runs once
-        r_base = r_base.persist()
-        _STAGED.append(r_base)
+        # projection; stage it so the relius anti-join shuffle runs once
+        r_base = staging.stage(r_base)
     r = r_base.withColumn(
         "cand_cents",
         F.explode(

@@ -14,6 +14,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from . import staging
 from .engines import age_taxcode, ira_rollover, match_planid, roth_taxable
 from .functions import normalizers as N
 from .operators import cleaning
@@ -24,52 +25,22 @@ from .sources import fixtures
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
-#: staging area — the PUBLIC ``QUERIES``/``ORACLES`` dicts are built at
+#: registrations — the PUBLIC ``QUERIES``/``ORACLES`` dicts are built at
 #: the bottom of this module from ``_GRADING_ORDER``, because the driver
 #: grades queries in dict (= registration) order with a finite budget
 #: (~50 rows observed in round 4): ordering is a graded property and must
 #: be explicit, not an accident of file layout.
-_STAGED: dict[str, tuple[QueryFn, str | None]] = {}
+_REGISTERED: dict[str, tuple[QueryFn, str | None]] = {}
 
 
 def register(name: str, oracle: str | None = None):
     def deco(fn: QueryFn) -> QueryFn:
-        if name in _STAGED:
+        if name in _REGISTERED:
             raise ValueError(f"duplicate query registration: {name}")
-        _STAGED[name] = (fn, oracle)
+        _REGISTERED[name] = (fn, oracle)
         return fn
 
     return deco
-
-
-#: staged-persist ledger — the cache contract for query builders.
-#: Some builders persist a heavy intermediate (the token-array frame in
-#: ``q_text_stats``, the shingle index shared by the two exact n-gram
-#: paths, the SimHash signature frame) because several branches of ONE
-#: query consume it. The builder cannot unpersist before returning (the
-#: returned lazy plan still reads the cache), so every such frame is
-#: registered here via :func:`_stage_persist` and released by
-#: :func:`release_staged_frames`, which the per-query
-#: ``_with_session_hygiene`` wrapper invokes before building the NEXT
-#: query. A long-lived session driving many registry queries therefore
-#: holds at most one query's staged frames; unpersisting a frame an old
-#: returned DataFrame still references only costs recompute, never
-#: correctness (tests/test_registry_extras.py pins the bounded growth).
-_STAGED_PERSISTS: list[DataFrame] = []
-
-
-def _stage_persist(df: DataFrame) -> DataFrame:
-    """Persist ``df`` and track it for release at the next query build."""
-    _STAGED_PERSISTS.append(df.persist())
-    return df
-
-
-def release_staged_frames() -> int:
-    """Unpersist every tracked staging frame; returns how many."""
-    n = len(_STAGED_PERSISTS)
-    while _STAGED_PERSISTS:
-        _STAGED_PERSISTS.pop().unpersist()
-    return n
 
 
 def _issues_joined(df: DataFrame) -> DataFrame:
@@ -967,13 +938,6 @@ def q_user_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("n_mgg_rows"),
         F.coalesce(F.sum(hh_ck), F.lit(0)).cast("long").alias("mgg_ck"),
     )
-    # the replay staged per-batch count frames + the merge candidate
-    # frame internally (each feeds both its bounded collects and the
-    # returned lazy plan); hand the handles to the registry's release
-    # mechanism so they stay cached through the consuming action
-    # (ADVICE r13)
-    while _HH._STAGED:
-        _stage_persist(_HH._STAGED.pop())
     # round-14 fold: the Count-Min sketch (operators/sketches.cm_cells /
     # cm_point_estimates — the one sketch whose state is EXACTLY
     # partition-invariant, so the full cell grid AND the point-estimate
@@ -984,8 +948,6 @@ def q_user_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators import sketches as _SK
 
     cm_parity = _SK.cm_parity(ev, "user_id")
-    while _SK._STAGED:
-        _stage_persist(_SK._STAGED.pop())
     # round-14 fold #3: the profiler's equi-depth histogram
     # (operators/profile.profile_histogram — ANALYZE's selectivity
     # statistic; edges from the distributed two-phase percentile rank,
@@ -994,11 +956,8 @@ def q_user_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     # recomputes edges with quantile_cont and replays membership +
     # counts (plans_sql.histogram_parity_ctes).
     from .operators import profile as _prof
-    from .operators import ranking as _rank
 
     hist_parity = _prof.histogram_parity(orders, plans_sql.HIST_COLS)
-    while _rank._STAGED:
-        _stage_persist(_rank._STAGED.pop())
     return (
         out.crossJoin(F.broadcast(z_parity))
         .crossJoin(F.broadcast(hh_parity))
@@ -1179,10 +1138,6 @@ def q_warning_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("e")
     ).select("e.*")
     nm = quality.near_miss_audit(t["relius"], t["matrix"], plant_demos=True)
-    # the plant path stages a persisted frame internally; hand it to the
-    # registry's release mechanism so session hygiene stays uniform
-    while quality._STAGED:
-        _stage_persist(quality._STAGED.pop())
     nm_ck = DD._hash32(
         F.concat_ws(
             "|",
@@ -1373,17 +1328,12 @@ def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # chains). Only the Arrow embedder still tokenizes itself, by
     # contract: it occupies the external-encoder batch interface over RAW
     # text (a GPU model server gets strings, not our token arrays).
-    toked = _stage_persist(docs.withColumn("__toks", T.tokens("text")))
+    toked = staging.stage(docs.withColumn("__toks", T.tokens("text")))
     emb = E.embed_texts(docs, dim=dim, out="__emb")
     model = L.train_bigram_lm(
         S.with_split(toked).filter(F.col("split") == "train"),
         tokens_col="__toks",
     )
-    # train_bigram_lm stage-persists its bigram-type aggregate (r14
-    # optimization — one corpus pass instead of three); adopt the handle
-    # into the registry ledger (the q_tfidf pattern) for session hygiene
-    while L._STAGED:
-        _stage_persist(L._STAGED.pop())
     lm_sub = L.score_count_substrate(toked, model, tokens_col="__toks")
     # round-7 fold: the 32-bit SimHash signature (DD.with_simhash, staged
     # token-hash array) — integer-exact md5-derived bit algebra, so the
@@ -1523,7 +1473,7 @@ def q_mixing_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stratum; the rollup is persisted because temperature + unimax +
     # the final select now fan it out to several consumers, and it is
     # |strata|-sized metadata (the persist-only-metadata rule).
-    per = _stage_persist(per)
+    per = staging.stage(per)
     per = sampling.unimax_mixture(sampling.temperature_mixture(per))
     tot = per.agg(F.sum("n_tokens").alias("t"))
     feats = _dsir.dsir_features(docs)
@@ -1556,7 +1506,7 @@ def q_mixing_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # BPE fold: hist feeds two consumers (pair rollup + checksum);
     # persisting the vocabulary-sized aggregate keeps its corpus scan
     # single-pass
-    hist = _stage_persist(_bpe.word_histogram(docs))
+    hist = staging.stage(_bpe.word_histogram(docs))
     bpe_parity = _bpe.pair_counts_parity(hist)
     hist_parity = _bpe.histogram_parity(hist)
     return (
@@ -1706,7 +1656,6 @@ def q_data_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     window: value-identity between those two spellings is exactly
     what the checksum certifies."""
     from .operators import lines as _lines
-    from .operators import ranking as _ranking
     from .operators import sampling
 
     docs = _load_table(spark, sf_dir, "documents")
@@ -1747,12 +1696,6 @@ def q_data_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .crossJoin(F.broadcast(GOPHER.gopher_parity(docs)))
     )
-    # pps_sample + its bottom-k stage persisted frames internally; hand
-    # the handles to the registry's release mechanism so session hygiene
-    # stays uniform
-    for lst in (_ranking._STAGED, sampling._STAGED):
-        while lst:
-            _stage_persist(lst.pop())
     return out
 
 
@@ -1787,9 +1730,8 @@ def q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stage the 1-row parity frame: it feeds BOTH the hits cross-join
     # and the sentinel branch, and without the cache the full-corpus NFC
     # map pass executes once per consumer (2x MapInPandas in the
-    # executed plan, r13 review); _stage_persist so the session hygiene
-    # wrapper releases it like every other registry-internal cache
-    parity = F.broadcast(_stage_persist(_un.nfc_parity(docs)))
+    # executed plan, r13 review)
+    parity = F.broadcast(staging.stage(_un.nfc_parity(docs)))
     # round-14 fold: PMI collocation mining (operators/text.
     # pmi_collocations — Church & Hanks 1990 word-association table,
     # zero windows) as (n_pmi_rows, pmi_ck): the oracle rebuilds bigram
@@ -1797,11 +1739,7 @@ def q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pinned-order PMI micros from scratch (llm_sql.pmi_ctes). Staged
     # like nfc_parity — the 1-row frame feeds both the hits cross-join
     # and the sentinel branch.
-    pmi = F.broadcast(_stage_persist(T.pmi_parity(docs)))
-    # pmi_collocations staged its vocab-sized count tables internally;
-    # hand the handles to the registry's release mechanism
-    while T._STAGED:
-        _stage_persist(T._STAGED.pop())
+    pmi = F.broadcast(staging.stage(T.pmi_parity(docs)))
     # round-14 fold: rank-order char-n-gram language ID
     # (operators/langid.py, Cavnar & Trenkle 1994 — profiles trained on
     # the same deterministic hash split this row already replays) rides
@@ -1813,7 +1751,7 @@ def q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pytest-graded on planted multilingual corpora (test_langid).
     from .operators import langid as _LID
 
-    lid = F.broadcast(_stage_persist(_LID.langid_parity(docs)))
+    lid = F.broadcast(staging.stage(_LID.langid_parity(docs)))
     sentinel = parity.crossJoin(pmi).crossJoin(lid).select(
         F.lit(-1).cast("long").alias("id"),
         F.lit(0).cast("long").alias("n_shared"),
@@ -1968,14 +1906,6 @@ def tfidf_with_repetition_parity(docs: DataFrame) -> DataFrame:
     # oracle recomputes counts and the pinned term-ascending fold off
     # the same tf substrate it already replays (llm_sql.ENT_CTES).
     ent_parity = T.entropy_parity(docs)
-    # bm25_topk/train_kn_lm + the bottom-k stage persisted frames
-    # internally; hand the handles to the registry's release mechanism
-    # (the q_data_sample pattern) so session hygiene stays uniform
-    from .operators import ranking as _ranking
-
-    for lst in (_ranking._STAGED, T._STAGED, _lm._STAGED):
-        while lst:
-            _stage_persist(lst.pop())
     return (
         out.crossJoin(F.broadcast(rep_parity))
         .crossJoin(F.broadcast(fert_parity))
@@ -2024,7 +1954,7 @@ def chunk_docs_with_span_parity(docs: DataFrame, aug: DataFrame) -> DataFrame:
     # tokenize + explode + first-occurrence agg runs once per lap, not
     # twice (r9 VERDICT "What's wrong" #1 — the fold was paying its
     # certificate double).
-    verdicts = _stage_persist(SP.span_dedup_verdicts(aug))
+    verdicts = staging.stage(SP.span_dedup_verdicts(aug))
     v_ck = DD._hash32(
         F.concat_ws(
             "|",
@@ -2142,8 +2072,8 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     build of a session pays it; plan-audit/explain tooling re-building
     this query gets the cached local frame."""
     aug = docs_aug(spark, sf_dir)
-    sh = _stage_persist(DD.staged_shingles(aug))
-    index = _stage_persist(DD.shingle_index(sh))
+    sh = DD.staged_shingles(aug)
+    index = staging.stage(DD.shingle_index(sh))
     out = dedup_exact_with_simhash_parity(aug, sh=sh, index=index)
 
     # round-12 fold (r11 VERDICT task #1, the last perf_weak): the
@@ -2181,10 +2111,6 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # measurement a user would size (n_hashes, n_bands) with is itself
     # driver-graded.
     out = out.crossJoin(F.broadcast(DD.near_dup_recall_from_shingles(sh)))
-    # the recall evaluator persisted its banded frame internally; hand
-    # the handle to the registry's release mechanism (ADVICE r13)
-    while DD._STAGED:
-        _stage_persist(DD._STAGED.pop())
 
     from .operators import spans as SP
 
@@ -2302,7 +2228,7 @@ def dedup_exact_with_simhash_parity(
     # from its COUNT-BASED pair set, so a prefix twin that drops or
     # invents one pair flips the hash on every row
     if sh is None:
-        sh = _stage_persist(DD.staged_shingles(aug))
+        sh = DD.staged_shingles(aug)
     px = DD.ngram_jaccard_pairs_prefix_from_shingles(sh, index=index)
     px_ck = DD._hash32(
         F.concat(
@@ -2374,7 +2300,7 @@ def exact_substr_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
         # serialize on the single-split fixture parquet (gopher lesson)
         .repartition(spark.sparkContext.defaultParallelism)
     )
-    staged = _stage_persist(ES.staged_window_fps(aug, ES.GRADE_TOKENS))
+    staged = ES.staged_window_fps(aug, ES.GRADE_TOKENS)
     return ES.exact_substr_dedup(aug, ES.GRADE_TOKENS, staged=staged)
 
 
@@ -2409,7 +2335,7 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     that row's oracle) but no longer costs bench wall time. This row now
     prices exactly what a user runs: one candidate generator."""
     return DD.ngram_jaccard_pairs_from_shingles(
-        _stage_persist(DD.staged_shingles(docs_aug(spark, sf_dir)))
+        DD.staged_shingles(docs_aug(spark, sf_dir))
     )
 
 
@@ -2422,7 +2348,7 @@ def ngram_jaccard_with_prefix_parity(aug: DataFrame) -> DataFrame:
     sh = DD.staged_shingles(aug)
     # one explode materialization feeds the count join's two sides AND
     # the prefix path's dfreq/window (~0.6s off the fold at sf0.1)
-    index = _stage_persist(DD.shingle_index(sh))
+    index = staging.stage(DD.shingle_index(sh))
     pairs = DD.ngram_jaccard_pairs_from_shingles(sh, index=index)
     prefix = DD.ngram_jaccard_pairs_prefix_from_shingles(sh, index=index)
     pair_ck = DD._hash32(
@@ -2454,7 +2380,7 @@ def simhash_banded_pairs(docs: DataFrame) -> DataFrame:
     """Banded Hamming pair join over a (doc_id, text) frame — the body of
     :func:`q_simhash_pairs`, frame-level so the dedup_exact parity fold
     and the differential fuzz reuse the identical composition."""
-    sims = _stage_persist(  # read by both sides of the band self-join
+    sims = staging.stage(  # read by both sides of the band self-join
         DD.with_simhash(docs, out="sh")
         .select(F.col("doc_id").alias("id"), "sh")
         .filter(F.col("sh").isNotNull())
@@ -2515,7 +2441,7 @@ def q_similarity_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the truth set / PQ code table are single subplans Spark's
     exchange reuse materializes once across the union branches.
 
-    Honest negative on the r9 #5 _stage_persist suggestion, measured at
+    Honest negative on the r9 #5 staging suggestion, measured at
     sf0.1 (best-of-3 noop): persisting the truth/codes/shortlist frames
     is SLOWER here (8.6s vs 7.2s) — at embeddings scale (2k rows) the
     cache barriers break whole-plan pipelining and exchange reuse
@@ -2552,7 +2478,7 @@ def emb_near_dup_with_semdedup_parity(aug: DataFrame) -> DataFrame:
     from .operators import semdedup as SD
 
     out = similarity.cosine_near_dup_pairs(aug, threshold=0.95)
-    ranked = _stage_persist(SD.assign_with_rank(aug))
+    ranked = staging.stage(SD.assign_with_rank(aug))
     verdicts = SD.semdedup_verdicts(aug, ranked=ranked)
     ck = DD._hash32(
         F.concat_ws(
@@ -2688,7 +2614,7 @@ def q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     dup flag from raw text (llm_sql._PHASH_CTES)."""
     docs = _load_table(spark, sf_dir, "documents")
     frames = multimodal.sample_frames(multimodal.attach_binary(docs))
-    ph = F.broadcast(_stage_persist(multimodal.phash_parity(docs)))
+    ph = F.broadcast(staging.stage(multimodal.phash_parity(docs)))
     return frames.select(
         "id",
         "frame_idx",
@@ -2857,10 +2783,10 @@ _GRADING_ORDER = [
 ]
 
 assert len(_GRADING_ORDER) <= 50, f"{len(_GRADING_ORDER)} queries exceed the grading budget"
-assert set(_GRADING_ORDER) == set(_STAGED), (
+assert set(_GRADING_ORDER) == set(_REGISTERED), (
     "registry/order drift: "
-    f"missing={sorted(set(_STAGED) - set(_GRADING_ORDER))} "
-    f"unknown={sorted(set(_GRADING_ORDER) - set(_STAGED))}"
+    f"missing={sorted(set(_REGISTERED) - set(_GRADING_ORDER))} "
+    f"unknown={sorted(set(_GRADING_ORDER) - set(_REGISTERED))}"
 )
 
 def _with_session_hygiene(fn: QueryFn) -> QueryFn:
@@ -2877,10 +2803,9 @@ def _with_session_hygiene(fn: QueryFn) -> QueryFn:
     @functools.wraps(fn)
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
         # cache contract: drop the PREVIOUS query's staged persists so a
-        # long session never accumulates token/shingle caches (see
-        # _STAGED_PERSISTS; the prior query's result plan merely loses
-        # its cache if re-executed)
-        release_staged_frames()
+        # long session never accumulates token/shingle caches (the prior
+        # query's result plan merely loses its cache if re-executed)
+        staging.release_staged()
         spark.conf.set("spark.sql.unionOutputPartitioning", "false")
         return fn(spark, sf_dir)
 
@@ -2888,8 +2813,8 @@ def _with_session_hygiene(fn: QueryFn) -> QueryFn:
 
 
 QUERIES: dict[str, QueryFn] = {
-    n: _with_session_hygiene(_STAGED[n][0]) for n in _GRADING_ORDER
+    n: _with_session_hygiene(_REGISTERED[n][0]) for n in _GRADING_ORDER
 }
 ORACLES: dict[str, str] = {
-    n: _STAGED[n][1] for n in _GRADING_ORDER if _STAGED[n][1] is not None
+    n: _REGISTERED[n][1] for n in _GRADING_ORDER if _REGISTERED[n][1] is not None
 }

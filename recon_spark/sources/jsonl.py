@@ -27,6 +27,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import staging
+
 CORRUPT_COL = "_corrupt_record"
 
 
@@ -47,19 +49,16 @@ def read_jsonl(
     malformed lines yield a row with every schema field NULL and the
     raw line captured in ``_corrupt_record``.
 
-    The returned frame is CACHED: Spark refuses any query whose
-    referenced columns are only the internal corrupt-record column
-    (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN) unless the
-    parsed result is cached or saved first — and the split/audit
-    helpers are exactly such queries. Cache lifecycle belongs to the
-    caller (unpersist after the ingest lands — the operator _STAGED
-    convention)."""
-    return (
+    The returned frame is staged (:mod:`recon_spark.staging`): Spark
+    refuses any query whose referenced columns are only the internal
+    corrupt-record column (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN)
+    unless the parsed result is cached first, and the split/audit
+    helpers are exactly such queries."""
+    return staging.stage(
         spark.read.schema(jsonl_schema_with_corrupt(schema))
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", CORRUPT_COL)
         .json(path)
-        .cache()
     )
 
 

@@ -55,30 +55,12 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import staging
+
 #: summary size per batch fragment (and per merged report)
 MGG_K = 64
 
 FRAGMENT_SCHEMA = "item string, c long, __batch_id long"
-
-#: persisted count/candidate frames staged by :func:`mg_batch_fragment`
-#: / :func:`merge_fragments` (the ranking/sampling lifecycle contract,
-#: ADVICE r13): each frame feeds BOTH the eager bounded collects (the
-#: (k+1)-th threshold, the total) and the returned LAZY plan — an
-#: immediate unpersist after the collects would recompute the count
-#: aggregate at the consuming action. The registry fold drains this
-#: into _stage_persist; bench's release hook and the foreachBatch
-#: writer (whose write IS the consuming action) call
-#: :func:`release_staged`.
-_STAGED: list[DataFrame] = []
-
-
-def release_staged() -> int:
-    """Unpersist every frame this module staged internally; returns how
-    many. Call after the consuming action."""
-    n = len(_STAGED)
-    while _STAGED:
-        _STAGED.pop().unpersist()
-    return n
 
 
 def _kth_threshold(cand: DataFrame, count_col: str, k: int) -> int:
@@ -100,14 +82,13 @@ def mg_batch_fragment(
     function of the batch (the idempotence anchor); shared by the
     ``foreachBatch`` writer and the graded in-plan replay."""
     spark = batch_df.sparkSession
-    counts = (
+    # feeds both the eager bounded collects and the returned lazy plan
+    counts = staging.stage(
         batch_df.select(F.col(item_col).cast("string").alias("item"))
         .filter(F.col("item").isNotNull())
         .groupBy("item")
         .agg(F.count(F.lit(1)).alias("c"))
-        .persist()
     )
-    _STAGED.append(counts)
     d = _kth_threshold(counts, "c", k)
     tot = counts.agg(F.coalesce(F.sum("c"), F.lit(0)).alias("n")).collect()[0].n
     frag = counts.filter(F.col("c") > d).select(
@@ -133,7 +114,7 @@ def heavy_hitters_writer(
             .parquet(store_dir)
         )
         # the write above is this batch's consuming action
-        release_staged()
+        staging.release_staged()
 
     return apply_batch
 
@@ -143,13 +124,12 @@ def merge_fragments(frags: DataFrame, k: int = MGG_K) -> DataFrame:
     err_bound)``: est is the lower bound, ``true <= est + err_bound``
     with ``err_bound = n_total DIV (k+1)`` (n_total from the sentinels).
     Works for ANY subset of batches — mergeability is the point."""
-    cand = (
+    # feeds both the bounded threshold collect and the returned lazy plan
+    cand = staging.stage(
         frags.filter(F.col("item").isNotNull())
         .groupBy("item")
         .agg(F.sum("c").alias("s"))
-        .persist()
     )
-    _STAGED.append(cand)
     d = _kth_threshold(cand, "s", k)
     n_total = frags.filter(F.col("item").isNull()).agg(
         F.coalesce(F.sum("c"), F.lit(0)).cast("long").alias("n_total")

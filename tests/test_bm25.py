@@ -11,7 +11,7 @@ import pandas as pd
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from recon_spark.operators import ranking
+from recon_spark import staging
 from recon_spark.operators import text as T
 from recon_spark.oracles import llm_sql
 
@@ -39,8 +39,7 @@ def test_bm25_ranks_denser_matches_higher(spark):
         + [(10 + i, f"fill{i} alpha{i} beta{i} gamma{i} delta{i} x{i} y{i} z{i}") for i in range(6)]
     )
     got = T.bm25_topk(_df(spark, docs), n_query_terms=2, k=10).collect()
-    ranking.release_staged()
-    T.release_staged()
+    staging.release_staged()
     by_rank = {r.rank: r.doc_id for r in got}
     micros = {r.doc_id: r.bm25_micros for r in got}
     assert set(micros) == {1, 2, 3, 4}  # only matching docs
@@ -66,7 +65,7 @@ def test_bm25_matches_global_window_spelling(spark):
         (r.doc_id, r.rank): r.bm25_micros
         for r in T.bm25_topk(frame, k=10).collect()
     }
-    ranking.release_staged()
+    staging.release_staged()
     # naive: same scoring body, global window on (micros desc, id asc)
     # — recompute scores via bm25_topk with k >= n (every scored doc),
     # then re-rank in one window
@@ -78,7 +77,7 @@ def test_bm25_matches_global_window_spelling(spark):
         .filter(F.col("rank") <= 10)
         .collect()
     }
-    ranking.release_staged()
+    staging.release_staged()
     assert got == naive
 
 
@@ -100,7 +99,7 @@ def test_bm25_duckdb_differential_fuzz(spark):
             }
         )
         got = T.bm25_parity(spark.createDataFrame(pdf)).collect()[0]
-        ranking.release_staged()
+        staging.release_staged()
         con = duckdb.connect()
         con.register("documents", pdf)
         exp = con.execute(

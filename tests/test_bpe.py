@@ -191,11 +191,11 @@ def test_max_words_cap_is_deterministic(spark):
 def test_graded_fold_matches_oracle_sf0001(spark):
     """The hosting data_mixing_weights row (with the round-12 BPE parity
     fold) end-to-end at sf0.001 vs DuckDB over the same parquet."""
-    from recon_spark import registry
+    from recon_spark import registry, staging
 
     out = registry.QUERIES["data_mixing_weights"](spark, "/root/testdata/sf0.001")
     got = sorted(tuple(r) for r in out.collect())
-    registry.release_staged_frames()
+    staging.release_staged()
     con = duckdb.connect()
     con.execute(
         "CREATE VIEW documents AS SELECT * FROM "

@@ -12,6 +12,7 @@ import duckdb
 
 from pyspark.sql import functions as F
 
+from recon_spark import staging
 from recon_spark.operators import sketches as SK
 
 
@@ -19,7 +20,7 @@ def _cells(df, **kw):
     out = sorted(
         (r.row, r.bucket, r.cnt) for r in SK.cm_cells(df, "item", **kw).collect()
     )
-    SK.release_staged()
+    staging.release_staged()
     return out
 
 
@@ -113,7 +114,7 @@ def test_differential_fuzz_vs_duckdb(spark):
             [(i, u) for i, u in enumerate(uids)], "event_id long, user_id long"
         ).repartition(5)
         got = SK.cm_parity(ev, "user_id", depth=3, width=16, query_mod=3).collect()[0]
-        SK.release_staged()
+        staging.release_staged()
         con = duckdb.connect()
         con.execute("CREATE TABLE events (event_id BIGINT, user_id BIGINT)")
         con.executemany(

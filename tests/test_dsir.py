@@ -11,6 +11,7 @@ import random
 import duckdb
 import pytest
 
+from recon_spark import staging
 from recon_spark.operators import dsir
 from recon_spark.oracles import llm_sql
 
@@ -269,7 +270,7 @@ def test_target_pred_matches_subset_frame(spark):
     with pytest.raises(ValueError):
         dsir.dsir_log_weights(raw, None)
     spark.catalog.clearCache()
-    dsir.release_staged()
+    staging.release_staged()
 
 
 def test_null_empty_docs_anchor_at_zero(spark):

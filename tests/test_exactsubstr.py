@@ -10,7 +10,7 @@ import random
 import duckdb
 from pyspark.sql import functions as F
 
-from recon_spark import registry
+from recon_spark import registry, staging
 from recon_spark.operators import exactsubstr as ES
 from recon_spark.operators import spans as SP
 from recon_spark.oracles import llm_sql
@@ -132,7 +132,7 @@ def test_exact_substr_graded_composition_matches_oracle(spark):
     got = sorted(
         map(tuple, registry.exact_substr_corpus_clean(spark, SF).collect())
     )
-    registry.release_staged_frames()
+    staging.release_staged()
     con = duckdb.connect()
     con.execute(
         "CREATE VIEW documents AS SELECT * FROM "
@@ -172,23 +172,21 @@ def test_exact_substr_rejects_l_tokens_below_two(spark):
         ES.exact_substr_dedup(docs, l_tokens=1)
 
 
-def test_release_auto_staged_tracks_default_path(spark):
+def test_release_staged_tracks_default_path(spark):
     """The default path (staged=None) persists a window-fingerprint frame
-    the caller never receives; release_auto_staged() must release it
+    the caller never receives; staging.release_staged() must release it
     (ADVICE r11 medium)."""
-    ES.release_auto_staged()  # drain anything earlier tests left
+    staging.release_staged()  # drain anything earlier tests left
     docs = _df(spark, [(1, "a b c d e f g h"), (2, "a b c d e f g h")])
     out = ES.exact_substr_dedup(docs, l_tokens=4)
-    assert len(ES._AUTO_STAGED) == 1
-    staged = ES._AUTO_STAGED[0]
+    (staged,) = staging._LEDGER
     out.collect()
     assert staged.storageLevel.useMemory  # persisted while consuming
-    assert ES.release_auto_staged() == 1
-    assert not ES._AUTO_STAGED
+    assert staging.release_staged() == 1
+    assert not staging._LEDGER
     assert not staged.storageLevel.useMemory  # actually unpersisted
 
-    # explicitly-staged callers are NOT tracked (lifecycle is theirs)
+    # a caller passing its own staged frame adds no second entry
     st = ES.staged_window_fps(docs, 4)
     ES.exact_substr_dedup(docs, l_tokens=4, staged=st).collect()
-    assert ES.release_auto_staged() == 0
-    st.unpersist()
+    assert staging.release_staged() == 1

@@ -12,6 +12,7 @@ import duckdb
 
 from pyspark.sql import functions as F
 
+from recon_spark import staging
 from recon_spark.operators import langid as LID
 
 
@@ -138,7 +139,7 @@ def test_verdicts_match_composition(spark):
         r.doc_id: (r.true_lang, r.split, r.pred_lang, r.best_dist, r.correct)
         for r in LID.langid_verdicts(docs, k=k).collect()
     }
-    LID.release_staged()
+    staging.release_staged()
     assert got == want
 
 

@@ -9,6 +9,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from recon_spark import staging
 from recon_spark.operators import lm
 
 
@@ -187,7 +188,7 @@ def test_kn_probabilities_by_hand(spark):
     # doc 12: q unseen everywhere: p(q|<s>)=(0+.5*1*pc[q])/3, then unseen context q -> pc[q]
     want_12 = math.log(0.5 * 1 * pc["q"] / 3) + math.log(pc["q"])
     assert scored[12].logprob == pytest.approx(want_12, rel=1e-12)
-    lm.release_staged()
+    staging.release_staged()
 
 
 def test_kn_ney_discount_estimate(spark):
@@ -203,7 +204,7 @@ def test_kn_ney_discount_estimate(spark):
     est = lm.score_kn_perplexity(docs, kn).first()
     fixed = lm.score_kn_perplexity(docs, kn, discount=1.0 / 3.0).first()
     assert est.logprob == pytest.approx(fixed.logprob, rel=1e-12)
-    lm.release_staged()
+    staging.release_staged()
 
 
 def test_kn_substrate_by_hand(spark):
@@ -232,7 +233,7 @@ def test_kn_substrate_by_hand(spark):
     # (a,z) unseen bigram, z unseen continuation; context a seen
     assert (r11.kn_sum_c2, r11.kn_unseen_bigrams) == (3, 1)
     assert (r11.kn_sum_n1b, r11.kn_unseen_cont) == (1, 1)
-    lm.release_staged()
+    staging.release_staged()
 
 
 def test_kn_in_domain_beats_token_soup(spark):
@@ -255,7 +256,7 @@ def test_kn_in_domain_beats_token_soup(spark):
     )
     got = {r.doc_id: r.perplexity for r in lm.score_kn_perplexity(probe, kn).collect()}
     assert got[1000] < got[1001]
-    lm.release_staged()
+    staging.release_staged()
 
 
 def test_kn_nonvacuous_on_fixture(spark):
@@ -279,4 +280,4 @@ def test_kn_nonvacuous_on_fixture(spark):
     ).first()
     assert agg.c2 > 0 and agg.ub > 0 and agg.uc > 0 and agg.ucont > 0
     assert agg.n1 > 0 and agg.n2 > 0
-    lm.release_staged()
+    staging.release_staged()

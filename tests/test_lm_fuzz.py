@@ -18,6 +18,7 @@ import random
 import duckdb
 from pyspark.sql import functions as F
 
+from recon_spark import staging
 from recon_spark.operators import lm, sampling
 from recon_spark.oracles import llm_sql
 
@@ -112,5 +113,5 @@ def test_kn_substrate_differential_fuzz(spark):
             for r in con.execute(llm_sql.KN_SUBSTRATE_SQL).fetchall()
         }
         con.close()
-        lm.release_staged()
+        staging.release_staged()
         assert got == want, f"trial {trial}: KN substrate drift"

@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from recon_spark import staging
 from recon_spark.operators import ranking, sampling
 from recon_spark.oracles import llm_sql
 
@@ -39,8 +40,7 @@ def test_bottomk_matches_global_window(spark, n, k):
         .collect()
     }
     got = {(r.id, r.rank) for r in ranking.bottomk_rows(df, "key", "id", k).collect()}
-    ranking.release_staged()
-    sampling.release_staged()
+    staging.release_staged()
     assert got == expected
 
 
@@ -49,7 +49,7 @@ def test_bottomk_all_ties_serialize_one_bucket_only(spark):
     id tiebreak) — it serializes its one bucket, not the corpus."""
     df = spark.range(200).select("id", F.lit(0.125).alias("key"))
     got = sorted(r.id for r in ranking.bottomk_rows(df, "key", "id", 7).collect())
-    ranking.release_staged()
+    staging.release_staged()
     assert got == list(range(7))
 
 
@@ -60,15 +60,16 @@ def test_bottomk_no_global_row_window(spark):
         "id", (F.col("id").cast("double") + 1.0).alias("key")
     )
     plan = _plan(ranking.bottomk_rows(df, "key", "id", 10))
-    ranking.release_staged()
+    staging.release_staged()
     assert "hashpartitioning(__bk" in plan
 
 
 def test_bottomk_releases_staged(spark):
     df = spark.range(10).select("id", (F.col("id") + 1.0).alias("key"))
+    staging.release_staged()
     ranking.bottomk_rows(df, "key", "id", 3).collect()
-    assert ranking.release_staged() >= 1
-    assert ranking.release_staged() == 0
+    assert staging.release_staged() >= 1
+    assert staging.release_staged() == 0
 
 
 # --- pps_sample -----------------------------------------------------------------
@@ -85,13 +86,14 @@ def _docs(spark, n=400):
 
 
 def test_pps_release_staged_contract(spark):
-    """pps_sample persists its weighted base internally; the module's
-    release handle must drain it (and a second call must be a no-op)."""
+    """pps_sample persists its weighted base internally; the staging
+    ledger must drain it (and a second call must be a no-op)."""
     df = spark.range(10).select(F.col("id").alias("doc_id"), F.lit(2.0).alias("w"))
+    staging.release_staged()
     sampling.pps_sample(df, "w", 3).collect()
-    ranking.release_staged()
-    assert sampling.release_staged() >= 1
-    assert sampling.release_staged() == 0
+    # the weighted base plus the bottom-k stage's derived frame
+    assert staging.release_staged() >= 2
+    assert staging.release_staged() == 0
 
 
 def test_pps_sample_matches_global_window_spelling(spark):
@@ -122,8 +124,7 @@ def test_pps_sample_matches_global_window_spelling(spark):
             docs.select("doc_id", F.size(F.split("text", " ")).alias("w")), "w", 50
         ).collect()
     }
-    ranking.release_staged()
-    sampling.release_staged()
+    staging.release_staged()
     assert got == expected
 
 
@@ -133,16 +134,14 @@ def test_pps_sample_excludes_nonpositive_and_null_weights(spark):
         "doc_id long, w double",
     )
     got = sorted(r.id for r in sampling.pps_sample(df, "w", 10).collect())
-    ranking.release_staged()
-    sampling.release_staged()
+    staging.release_staged()
     assert got == [1, 5]
 
 
 def test_pps_sample_k_exceeds_n_returns_all(spark):
     df = spark.range(5).select(F.col("id").alias("doc_id"), F.lit(2.0).alias("w"))
     rows = sampling.pps_sample(df, "w", 100).collect()
-    ranking.release_staged()
-    sampling.release_staged()
+    staging.release_staged()
     assert len(rows) == 5
     # equal weights, k>n: every inclusion probability clamps to 1
     assert all(r.p_micros == 1_000_000 for r in rows)
@@ -160,8 +159,7 @@ def test_pps_inclusion_proportional_to_weight(spark):
     for t in range(n_trials):
         for r in sampling.pps_sample(docs, "w", k, salt=f"pps:t{t}").collect():
             counts[r.id] = counts.get(r.id, 0) + 1
-    ranking.release_staged()
-    sampling.release_staged()
+    staging.release_staged()
     docs.unpersist()
     # group doc inclusion frequency by weight (weights 1..8, 25 docs each)
     by_w = {wt: 0.0 for wt in range(1, 9)}
@@ -187,8 +185,7 @@ def test_pps_key_bit_parity_with_duckdb(spark):
             llm_sql.PPS_K,
         ).collect()
     }
-    ranking.release_staged()
-    sampling.release_staged()
+    staging.release_staged()
     con = duckdb.connect()
     con.register("documents", docs.toPandas())
     sql = f"WITH {llm_sql.pps_parity_ctes()} SELECT id, w, rank, p_micros FROM pps_rows"

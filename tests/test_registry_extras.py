@@ -72,12 +72,12 @@ def test_graded_queries_pin_union_partitioning_off(spark):
 
 
 def test_long_session_staged_persist_growth_bounded(spark):
-    """Cache contract (registry._STAGED_PERSISTS): builders that persist
-    a staging frame (text_stats token pass, the shared shingle index,
-    the SimHash signature frame) hand it to the ledger, and the next
-    query build releases it — so N queries back-to-back hold at most one
-    query's staged frames, not N caches."""
-    from recon_spark import registry
+    """Cache contract (recon_spark.staging): builders that persist a
+    frame their returned plan still reads (text_stats token pass, the
+    shared shingle index, the MinHash signature/shingle frames) stage
+    it, and the next query build releases it — so N queries back-to-back
+    hold at most one query's staged frames, not N caches."""
+    from recon_spark import registry, staging
 
     jsc = spark.sparkContext._jsc
     spark.catalog.clearCache()
@@ -86,22 +86,27 @@ def test_long_session_staged_persist_growth_bounded(spark):
     # SQL cache) until the ContextCleaner GCs them — measure GROWTH over
     # the baseline, not absolute counts
     base = jsc.getPersistentRDDs().size()
-    persisting = ["text_stats", "dedup_ngram_jaccard", "dedup_exact_documents"]
+    persisting = [
+        "text_stats",
+        "dedup_ngram_jaccard",
+        "dedup_exact_documents",
+        "dedup_minhash_lsh",
+    ]
     high_water = 0
     for _ in range(2):  # two laps = a long session in miniature
         for name in persisting:
             assert registry.QUERIES[name](spark, SF).count() > 0
             high_water = max(high_water, jsc.getPersistentRDDs().size())
     # at most the CURRENT query's staged frames are ever live; a leak
-    # would accumulate 2 laps x 3 queries of token/shingle caches.
+    # would accumulate 2 laps x 4 queries of token/shingle caches.
     # Bound = 4 since round 10: dedup_exact's Bloom-gate replay holds
     # its replay corpus + one micro-batch's fps + verdicts persists
     # concurrently mid-drain (all released before the builder returns —
-    # the no-growth assertion below is the leak check proper).
+    # the assertion below is the leak check proper).
     assert high_water - base <= 4
-    # two-tier contract: the ledger releases registry-staged frames;
-    # operator-internal persists (dedup.py module docstring) are
-    # caller-owned and fall to clearCache, as bench/check_correctness do
-    assert registry.release_staged_frames() >= 1
+    # one tier: the ledger alone frees everything the queries persisted,
+    # so a following clearCache finds nothing left to drop
+    assert staging.release_staged() >= 1
+    after_release = jsc.getPersistentRDDs().size()
     spark.catalog.clearCache()
-    assert jsc.getPersistentRDDs().size() <= base
+    assert after_release == jsc.getPersistentRDDs().size()

@@ -118,7 +118,7 @@ def test_substrate_matches_duckdb_fuzz(spark):
 def test_tfidf_repetition_fold_differential_fuzz(spark):
     """The EXACT graded composition (registry.tfidf_with_repetition_parity)
     vs the VERBATIM grading SQL (llm_sql.TFIDF_SQL) over ugly corpora."""
-    from recon_spark import registry
+    from recon_spark import registry, staging
     from tests.test_dedup_fuzz import _corpus
 
     rnd = random.Random(0x5EEDD)
@@ -138,7 +138,7 @@ def test_tfidf_repetition_fold_differential_fuzz(spark):
              r.n_ent_rows, r.ent_ck)
             for r in registry.tfidf_with_repetition_parity(docs).collect()
         )
-        registry.release_staged_frames()
+        staging.release_staged()
         spark.catalog.clearCache()
         con = duckdb.connect()
         con.execute(

@@ -13,7 +13,7 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from recon_spark import registry
+from recon_spark import registry, staging
 from recon_spark.operators import semdedup as SD
 from recon_spark.oracles import llm_sql
 
@@ -167,7 +167,7 @@ def test_semdedup_parity_fold_differential_fuzz(spark):
             (r.id_a, r.id_b, round(r.score, 9), r.n_semdedup_pruned, r.semdedup_ck)
             for r in registry.emb_near_dup_with_semdedup_parity(aug).collect()
         )
-        registry.release_staged_frames()
+        staging.release_staged()
         spark.catalog.clearCache()
         want = sorted(
             (a, b, round(s, 9), n, ck)

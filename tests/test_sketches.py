@@ -8,6 +8,7 @@ import random
 
 from pyspark.sql import functions as F
 
+from recon_spark import staging
 from recon_spark.operators import sketches as SK
 
 SF = "/root/testdata/sf0.001"
@@ -329,7 +330,7 @@ def test_mg_band_and_guarantee_across_partitionings(spark):
         n = sum(exact.values())
         k = 64
         got = {r.item: (r.est, r.n_total, r.err_bound) for r in SK.frequent_items(df, "item", k).collect()}
-        SK.release_staged()
+        staging.release_staged()
         assert len(got) <= k
         bound = n // (k + 1)
         for item, (est, n_total, err_bound) in got.items():
@@ -349,7 +350,7 @@ def test_mg_exact_when_distinct_below_k(spark):
     ).repartition(8)
     exact = {r.item: r.c for r in df.groupBy("item").agg(F.count("*").alias("c")).collect()}
     got = {r.item: r.est for r in SK.frequent_items(df, "item", 64).collect()}
-    SK.release_staged()
+    staging.release_staged()
     assert got == exact
 
 
@@ -358,7 +359,7 @@ def test_mg_skips_nulls_and_counts_total(spark):
         [("a",), ("a",), (None,), ("b",), (None,)], "item string"
     )
     rows = SK.frequent_items(df, "item", 8).collect()
-    SK.release_staged()
+    staging.release_staged()
     assert {r.item for r in rows} == {"a", "b"}
     assert all(r.n_total == 3 for r in rows)
 

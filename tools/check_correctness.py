@@ -169,8 +169,8 @@ def main():
             print(f"✗ {nm}: {err}")
         else:
             print(f"✓ {nm} ({len(duck_rows)} rows) [{time.time()-t0:.1f}s]")
-        # operators persist() intermediates and leave cache lifecycle to
-        # the caller — drop blocks so 49 queries don't accumulate caches
+        # the next query's build releases the staging ledger; this also
+        # drops anything cached outside it
         spark.catalog.clearCache()
     print(f"\n{failures} failures / {len(qs)} queries")
     sys.exit(1 if failures else 0)

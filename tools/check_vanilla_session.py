@@ -11,6 +11,11 @@ exists for exactly that gap; this tool proves the whole surface executes
 and row-counts correctly without our factory. Value-level compare is
 `tools/check_correctness.py`'s job.
 
+It also checks the cache contract: after each query,
+``staging.release_staged()`` must free every persisted RDD the query
+left behind, so a following ``clearCache()`` finds nothing more to drop
+(a grading session need not call ``clearCache`` at all).
+
 Usage: python tools/check_vanilla_session.py [sf_dir]
 """
 
@@ -34,6 +39,8 @@ def main() -> None:
 
     import __spark_entry__ as E
 
+    from recon_spark import staging
+
     spark = (
         SparkSession.builder.master("local[8]")
         .appName("vanilla-check")
@@ -47,7 +54,8 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     qs, oracles = E.queries(), E.oracle_sql()
-    fails = 0
+    jsc = spark.sparkContext._jsc
+    fails = leaks = 0
     for nm, fn in qs.items():
         try:
             n_spark = len(fn(spark, sf_dir).collect())
@@ -67,9 +75,18 @@ def main() -> None:
             msg = str(ex).splitlines()[0][:200]
             print(f"ERROR {nm}: {type(ex).__name__}: {msg}")
         finally:
+            staging.release_staged()
+            after_release = jsc.getPersistentRDDs().size()
             spark.catalog.clearCache()
-    print(f"vanilla-session check: {fails} failures / {len(qs)} queries")
-    sys.exit(1 if fails else 0)
+            left = after_release - jsc.getPersistentRDDs().size()
+            if left:
+                leaks += 1
+                print(f"LEDGER LEAK {nm}: {left} persisted RDDs outlive release_staged()")
+    print(
+        f"vanilla-session check: {fails} failures, {leaks} ledger leaks "
+        f"/ {len(qs)} queries"
+    )
+    sys.exit(1 if fails or leaks else 0)
 
 
 if __name__ == "__main__":

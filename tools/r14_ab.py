@@ -22,12 +22,14 @@ def main() -> None:
     laps = int(sys.argv[2]) if len(sys.argv) > 2 else 3
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+    from recon_spark import staging
     from recon_spark.session import get_spark
 
     spark = get_spark("r14_ab")
 
     def release_all():
         spark.catalog.clearCache()
+        staging.release_staged()
 
     if case == "gopher":
         from recon_spark.operators import repetition
@@ -206,10 +208,6 @@ def main() -> None:
             return dsir.dsir_select(docs, None, k=k, weights=w)
 
         variants = {"old_weights_winrank": old_form, "new_rowlocal": new_form}
-
-        def release_all():  # noqa: F811 — dsir arm also drains dsir._STAGED
-            spark.catalog.clearCache()
-            dsir.release_staged()
 
     elif case == "semdedup":
         from recon_spark.operators import semdedup

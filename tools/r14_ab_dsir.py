@@ -23,6 +23,7 @@ def main() -> None:
     laps = int(sys.argv[1]) if len(sys.argv) > 1 else 3
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+    from recon_spark import staging
     from recon_spark.operators import dsir, sampling
     from recon_spark.operators import text as T
     from recon_spark.operators.dedup import _hash32
@@ -46,10 +47,7 @@ def main() -> None:
         n_buckets, alpha = dsir.DSIR_BUCKETS, dsir.DSIR_ALPHA
         toks = T.tokens("text")
         feats = F.concat(toks, dsir._bigrams(toks))
-        staged = raw_docs.select(
-            F.col("doc_id"), feats.alias("__f")
-        ).persist()
-        dsir._STAGED.append(staged)
+        staged = staging.stage(raw_docs.select(F.col("doc_id"), feats.alias("__f")))
         exploded = staged.filter(F.col("__f").isNotNull()).select(
             "doc_id", F.explode("__f").alias("feat")
         )
@@ -109,7 +107,7 @@ def main() -> None:
             fn().write.format("noop").mode("overwrite").save()
             dt = time.time() - t0
             spark.catalog.clearCache()
-            dsir.release_staged()
+            staging.release_staged()
             mins[name] = min(mins.get(name, 1e9), dt)
             print(f"lap{lap} {name:8s} {dt:6.2f}s", flush=True)
     print("== min ==")

@@ -24,6 +24,7 @@ def main() -> None:
     laps = int(sys.argv[1]) if len(sys.argv) > 1 else 4
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+    from recon_spark import staging
     from recon_spark.operators import dedup
     from recon_spark.registry import docs_aug
     from recon_spark.session import get_spark
@@ -97,7 +98,7 @@ def main() -> None:
             fn().write.format("noop").mode("overwrite").save()
             dt = time.time() - t0
             spark.catalog.clearCache()
-            dedup.release_staged()
+            staging.release_staged()
             mins[name] = min(mins.get(name, 1e9), dt)
             print(f"lap{lap} {name:8s} {dt:6.2f}s", flush=True)
     print("== min ==")

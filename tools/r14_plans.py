@@ -21,6 +21,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
     from bench import EXTRA_QUERIES
+    from recon_spark import staging
     from recon_spark.registry import QUERIES
     from recon_spark.session import get_spark
 
@@ -37,28 +38,7 @@ def main() -> None:
             f.write(buf.getvalue())
         print(path, len(buf.getvalue().splitlines()), "lines")
         spark.catalog.clearCache()
-        from recon_spark.operators import exactsubstr as _es
-
-        _es.release_auto_staged()
-        for mod in (
-            "recon_spark.operators.dedup",
-            "recon_spark.operators.dsir",
-            "recon_spark.operators.langid",
-            "recon_spark.operators.lm",
-            "recon_spark.operators.ranking",
-            "recon_spark.operators.sketches",
-            "recon_spark.operators.sampling",
-            "recon_spark.operators.text",
-            "recon_spark.plans.corpus",
-            "recon_spark.plans.quality",
-            "recon_spark.streaming.heavy_hitters",
-        ):
-            import importlib
-
-            m = importlib.import_module(mod)
-            rel = getattr(m, "release_staged", None)
-            if rel is not None:
-                rel()
+        staging.release_staged()
     spark.stop()
 
 

@@ -58,6 +58,7 @@ def main() -> None:
     laps = int(sys.argv[1]) if len(sys.argv) > 1 else 2
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+    from recon_spark import staging
     from recon_spark.plans import corpus
     from recon_spark.operators import sampling
     from recon_spark.session import get_spark
@@ -66,31 +67,7 @@ def main() -> None:
 
     def release_all():
         spark.catalog.clearCache()
-        import importlib
-
-        for mod in (
-            "recon_spark.operators.dedup",
-            "recon_spark.operators.dsir",
-            "recon_spark.operators.exactsubstr",
-            "recon_spark.operators.langid",
-            "recon_spark.operators.lm",
-            "recon_spark.operators.profile",
-            "recon_spark.operators.ranking",
-            "recon_spark.operators.sketches",
-            "recon_spark.operators.sampling",
-            "recon_spark.operators.text",
-            "recon_spark.plans.corpus",
-            "recon_spark.plans.quality",
-        ):
-            m = importlib.import_module(mod)
-            rel = getattr(m, "release_staged", None) or getattr(
-                m, "release_auto_staged", None
-            )
-            if rel is not None:
-                rel()
-        from recon_spark.operators import exactsubstr as _es
-
-        _es.release_auto_staged()
+        staging.release_staged()
 
     def build(**kw):
         pages = pages_frame(spark, sf_dir)
