@@ -8,6 +8,11 @@ chosen so the same logical plans scale to a multi-executor cluster:
   raise this to ~2-3x total cores; AQE coalesces the excess)
 - UTC session timezone so timestamps hash-match the DuckDB oracle
 - Arrow enabled for the few Pandas-UDF paths (similarity / multimodal)
+- C2 JIT thresholds raised 10x for the driver JVM (``DRIVER_JIT_OPTIONS``):
+  a batch run lives a minute or two, and HotSpot's C2 compiler threads
+  used 46% of the process tree's CPU on the benchmark's month-end close
+  (108 of 235 s) compiling lukewarm Catalyst, Janino and driver code that
+  C1 already runs well enough; truly hot executor loops still reach C2
 """
 
 from __future__ import annotations
@@ -18,6 +23,19 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+#: HotSpot tier-4 (C2) compile thresholds at 10x their JDK 17 defaults
+#: (5000, 600, 15000, 40000), so C2 compiles only methods and loops that
+#: are truly hot; the rest stays at tier 3 (C1). Set under
+#: ``spark.driver.defaultJavaOptions``, which Spark prepends to a caller's
+#: ``spark.driver.extraJavaOptions``, so both reach the JVM. They take
+#: effect only when this factory launches the driver JVM. Spark starts it
+#: with ``-XX:+IgnoreUnrecognizedVMOptions``, so a misspelled flag is
+#: dropped silently: tests/test_session.py reads the effective values.
+DRIVER_JIT_OPTIONS = (
+    "-XX:Tier4InvocationThreshold=50000 -XX:Tier4MinInvocationThreshold=6000 "
+    "-XX:Tier4CompileThreshold=150000 -XX:Tier4BackEdgeThreshold=400000"
+)
+
 
 def get_spark(
     app_name: str = "recon_spark",
@@ -26,7 +44,7 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 4)
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or len(os.sched_getaffinity(0))
     if shuffle_partitions is None:
         shuffle_partitions = max(cpus, 8)
     builder = (
@@ -39,6 +57,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.defaultJavaOptions", DRIVER_JIT_OPTIONS)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # The rule engines compile to wide Project stages (hundreds of
