@@ -553,7 +553,8 @@ def cm_parity(
     scratch)."""
     from .dedup import _hash32
 
-    cells = staging.stage(cm_cells(df, item_col, depth, width))
+    # both branches sit in this one plan, so exchange reuse shares the cells
+    cells = cm_cells(df, item_col, depth, width)
     cell_ck = _hash32(
         F.concat_ws(
             "|",

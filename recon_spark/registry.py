@@ -429,10 +429,11 @@ def q_normalizers_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("engine_a_match_planid", engines_sql.ENGINE_A_SQL)
 def q_engine_a(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # materialized=False: the engine queries ARE the engines' lineage
-    # measurement; only downstream consumers read the persisted outputs
-    out = _engine_outputs(spark, sf_dir, materialized=False)["engine_a"]
-    return out.select(*match_planid.OUTPUT_COLUMNS)
+    # the engine step is the engine's write: the first call in a session
+    # materializes the output every later consumer reads (_engine_step)
+    return _engine_step(spark, sf_dir, "engine_a").select(
+        *match_planid.OUTPUT_COLUMNS
+    )
 
 
 @register("engine_b_age_taxcode", engines_sql.ENGINE_B_SQL)
@@ -443,7 +444,7 @@ def q_engine_b(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("engine_c_roth_taxable", engines_sql.ENGINE_C_SQL)
 def q_engine_c(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _engine_outputs(spark, sf_dir, materialized=False)["engine_c"]
+    return _engine_step(spark, sf_dir, "engine_c")
 
 
 @register("engine_d_ira_rollover", engines_sql.ENGINE_D_SQL)
@@ -490,7 +491,9 @@ def q_corrections_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     # branches end-to-end (measured 13.4s vs ~6s in round 6). With the
     # engine outputs materialized (_engine_outputs), the sort's child is
     # a parquet scan + filter + project, so the sampling pass re-reads a
-    # deliverable-sized file instead of re-running joins.
+    # deliverable-sized file instead of re-running joins. In a close the
+    # engine steps have already written those outputs, so this query
+    # runs neither engine; called first, it pays both writes.
     u = (
         q_corrections_a(spark, sf_dir, sort=False)
         .withColumn("engine", F.lit("engine_a"))
@@ -585,8 +588,9 @@ def q_corrections_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ENGINE_PLAN_MEMO: dict[tuple[str, str, int, str], DataFrame] = {}
 
 #: parquet materialization memo for the engine outputs — the
-#: "reconcile once, analyze many" tier above the clean-once tables.
-_ENGINE_TABLE_MEMO: dict[tuple[str, str, int], dict[str, DataFrame]] = {}
+#: "reconcile once, analyze many" tier above the clean-once tables; same
+#: key scheme as _ENGINE_PLAN_MEMO, one entry per written engine.
+_ENGINE_TABLE_MEMO: dict[tuple[str, str, int, str], DataFrame] = {}
 
 #: engines whose outputs downstream consumers actually read (A and C
 #: feed corrections + most analytics; B and D are each consumed by a
@@ -596,8 +600,12 @@ _MATERIALIZED_ENGINES = ("engine_a", "engine_c")
 _ENGINE_NAMES = ("engine_a", "engine_b", "engine_c", "engine_d")
 
 
+def _engine_key(spark: SparkSession, sf_dir: str, eng: str) -> tuple[str, str, int, str]:
+    return (spark.sparkContext.applicationId, sf_dir, len(fixtures._RAW_OVERRIDE), eng)
+
+
 def _lazy_engine_output(spark: SparkSession, sf_dir: str, eng: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, len(fixtures._RAW_OVERRIDE), eng)
+    key = _engine_key(spark, sf_dir, eng)
     df = _ENGINE_PLAN_MEMO.get(key)
     if df is None:
         t = clean_tables(spark, sf_dir)
@@ -617,32 +625,71 @@ def _lazy_engine_output(spark: SparkSession, sf_dir: str, eng: str) -> DataFrame
     return df
 
 
+def _materialized_engine_output(spark: SparkSession, sf_dir: str, eng: str) -> DataFrame:
+    """The engine's output written once per session as parquet and read
+    back; later calls return the same read-back."""
+    key = _engine_key(spark, sf_dir, eng)
+    df = _ENGINE_TABLE_MEMO.get(key)
+    if df is None:
+        import sys
+        import tempfile
+
+        try:
+            path = f"{tempfile.mkdtemp(prefix='recon_engines_')}/{eng}"
+            _lazy_engine_output(spark, sf_dir, eng).write.mode("overwrite").parquet(path)
+            df = spark.read.parquet(path)
+        except Exception as exc:  # noqa: BLE001
+            # same correctness-gate insurance as clean_tables: lazy
+            # plans are value-identical, so degrade instead of failing
+            # the downstream queries
+            print(
+                f"_engine_outputs: materialization of {eng} unavailable "
+                f"({exc!r}); falling back to the lazy plan",
+                file=sys.stderr,
+            )
+            df = _lazy_engine_output(spark, sf_dir, eng)
+        _ENGINE_TABLE_MEMO[key] = df
+    return df
+
+
+def _engine_step(spark: SparkSession, sf_dir: str, eng: str) -> DataFrame:
+    """An engine query's frame: on the first call in a session the step
+    IS the engine's write, and it returns the read-back that corrections
+    and the analytics reads then reuse; once the output is written,
+    later calls run the lazy lineage again, so repeated runs (bench.py's
+    steady laps) still time the full engine."""
+    if _engine_key(spark, sf_dir, eng) in _ENGINE_TABLE_MEMO:
+        return _lazy_engine_output(spark, sf_dir, eng)
+    return _materialized_engine_output(spark, sf_dir, eng)
+
+
 class _EngineOutputs:
     """Lazy per-engine view over the engine outputs.
 
     ``materialized=True`` (default for the downstream consumers): the
-    Engine A and Engine C outputs — read by corrections + six merged
+    Engine A and Engine C outputs — read by corrections + six
     analytics queries — are executed ONCE per session and persisted as
     parquet, mirroring the reference deployment where engine results
-    are written deliverables the analytics layer then reads. The first
-    consumer pays the engine execution + write (visible in its bench
-    number); every later consumer reads an output-sized parquet scan
-    instead of re-running the full join/window lineage. Engines B and D
-    stay lazy — a decision re-measured in round 7 AFTER the kpi/monthly/
-    crosstab merges (sf0.1, local[32]): adding B+D to the tier grows the
-    one-time write 5.2s → 8.3s while the only consumer that improves
-    materially is analytics_kpi_all (2.8 → 1.3s cold, 1.6 → 0.7s
-    steady); crosstab/monthly/corrections move ≤0.2s. One improved
-    consumer does not repay a +3.1s tier cost in a single-pass session,
-    so lazy stays; a deployment running many KPI-style consumers per
-    session would flip _MATERIALIZED_ENGINES to all four. Parquet
-    round-trips every engine output type exactly, so the DuckDB oracles
-    are untouched.
+    are written deliverables the analytics layer then reads. Each engine
+    is written on its own, by whichever comes first: its engine query
+    (``engine_a_match_planid`` / ``engine_c_roth_taxable``, the close's
+    first steps — see :func:`_engine_step`) or, in a session that skips
+    it, the first consumer that reads it. Every later consumer reads an
+    output-sized parquet scan instead of re-running the full join/window
+    lineage. Engines B and D stay lazy — a decision re-measured in round
+    7 AFTER the kpi/monthly/crosstab merges (sf0.1, local[32]): adding
+    B+D to the tier grows the one-time write 5.2s → 8.3s while the only
+    consumer that improves materially is analytics_kpi_all (2.8 → 1.3s
+    cold, 1.6 → 0.7s steady); crosstab/monthly/corrections move ≤0.2s.
+    One improved consumer does not repay a +3.1s tier cost in a
+    single-pass session, so lazy stays; a deployment running many
+    KPI-style consumers per session would flip _MATERIALIZED_ENGINES to
+    all four. Parquet round-trips every engine output type exactly, so
+    the DuckDB oracles are untouched. If a write fails, that engine
+    falls back to its lazy plan for the rest of the session.
 
-    ``materialized=False``: lazy analyzed plans (the engine queries
-    themselves use this, so their bench numbers remain honest full-
-    lineage measurements) — and only the ACCESSED engine's plan is
-    built.
+    ``materialized=False``: lazy analyzed plans, nothing written — and
+    only the ACCESSED engine's plan is built.
     """
 
     def __init__(self, spark: SparkSession, sf_dir: str, materialized: bool):
@@ -650,44 +697,11 @@ class _EngineOutputs:
 
     def __getitem__(self, eng: str) -> DataFrame:
         if self._materialized and eng in _MATERIALIZED_ENGINES:
-            return self._tables()[eng]
+            return _materialized_engine_output(self._spark, self._sf_dir, eng)
         return _lazy_engine_output(self._spark, self._sf_dir, eng)
 
     def items(self):
         return [(eng, self[eng]) for eng in _ENGINE_NAMES]
-
-    def _tables(self) -> dict[str, DataFrame]:
-        spark, sf_dir = self._spark, self._sf_dir
-        key = (spark.sparkContext.applicationId, sf_dir, len(fixtures._RAW_OVERRIDE))
-        memo = _ENGINE_TABLE_MEMO.get(key)
-        if memo is None:
-            import sys
-            import tempfile
-
-            try:
-                base_dir = tempfile.mkdtemp(prefix="recon_engines_")
-                memo = {}
-                for eng in _MATERIALIZED_ENGINES:
-                    path = f"{base_dir}/{eng}"
-                    _lazy_engine_output(spark, sf_dir, eng).write.mode(
-                        "overwrite"
-                    ).parquet(path)
-                    memo[eng] = spark.read.parquet(path)
-            except Exception as exc:  # noqa: BLE001
-                # same correctness-gate insurance as clean_tables: lazy
-                # plans are value-identical, so degrade instead of
-                # failing the seven downstream queries
-                print(
-                    f"_engine_outputs: materialization unavailable ({exc!r}); "
-                    "falling back to lazy plans",
-                    file=sys.stderr,
-                )
-                memo = {
-                    eng: _lazy_engine_output(spark, sf_dir, eng)
-                    for eng in _MATERIALIZED_ENGINES
-                }
-            _ENGINE_TABLE_MEMO[key] = memo
-        return memo
 
 
 def _engine_outputs(
@@ -825,15 +839,12 @@ def q_crosstab_all(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("analytics_action_mix_engine_c", plans_sql.ACTION_MIX_C_SQL)
 def q_action_mix_c(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = clean_tables(spark, sf_dir)
-    out = roth_taxable.run_roth_taxable_analysis(t["matrix"], t["demo"], t["basis"])
-    return analytics.build_action_mix(out)
+    return analytics.build_action_mix(_engine_outputs(spark, sf_dir)["engine_c"])
 
 
 @register("analytics_unmatched_engine_a", plans_sql.UNMATCHED_A_SQL)
 def q_unmatched_a(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = clean_tables(spark, sf_dir)
-    out = match_planid.reconcile_relius_matrix(t["relius"], t["matrix"])
+    out = _engine_outputs(spark, sf_dir)["engine_a"]
     # Serialized as integer micros (BIGINT): DECIMAL output cells hash
     # unstably in the driver's comparator even when values are equal
     # (hash-red in r2+r3 with exact-value local parity), while integer
@@ -880,7 +891,9 @@ def q_user_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     (plans_sql.zorder_parity_ctes), so a single bit position off in any
     row flips the hash. The quantizer's 2-value stats aggregate is the
     operator's one (tiny, eager) driver action — noted, same class as
-    the IVF centroid collect."""
+    the IVF centroid collect — and the only eager action left in this
+    read: the Misra-Gries, Count-Min and histogram riders are plan-side
+    1-row aggregates, cross-joined, and run with the collect."""
     from .operators import zorder as Z
 
     ev = _load_table(spark, sf_dir, "events")
@@ -915,7 +928,8 @@ def q_user_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (streaming/heavy_hitters.py) replayed IN-PLAN over the
     # deterministic event_id % 3 micro-batch split: per-batch exact
     # counts reduced to <= k-row fragments + total sentinels, merged
-    # with the Agarwal combine. Micro-batch boundaries are DATA (not
+    # with the Agarwal combine — one plan over one events scan, no
+    # driver round trip. Micro-batch boundaries are DATA (not
     # physical partitions), so the whole verdict — survivors, lower
     # bounds, n_total, the n/(k+1) band — is engine-replayable; the
     # oracle recomputes it from scratch (plans_sql.mgg_parity_ctes).

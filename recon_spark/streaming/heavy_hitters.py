@@ -34,28 +34,32 @@ Determinism + grading: unlike the batch sketch (whose partition
 boundaries are physical-plan-dependent), the micro-batch boundaries are
 DATA (whatever arrived), so for a deterministic batch split the whole
 store and the merged verdict are engine-replayable. The graded fold
-(``analytics_user_reach``) composes :func:`mg_batch_fragment` over a
-deterministic ``event_id % n`` split of the events table IN-PLAN and
-checksums the merged top table against a full DuckDB replay
-(plans_sql.mgg_parity_ctes); the side-effectful store/stream machinery
-(parquet fragments, dynamic-overwrite idempotence, a real availableNow
-drain) is pytest-verified (tests/test_streaming_heavy_hitters.py), the
-same split as the exactly-once sinks.
+(``analytics_user_reach``) builds every fragment of a deterministic
+``event_id % n`` split of the events table IN-PLAN with the same pure
+function the writer uses (:func:`mg_fragments`) and checksums the merged
+top table against a full DuckDB replay (plans_sql.mgg_parity_ctes); the
+side-effectful store/stream machinery (parquet fragments,
+dynamic-overwrite idempotence, a real availableNow drain) is
+pytest-verified (tests/test_streaming_heavy_hitters.py), the same split
+as the exactly-once sinks.
 
-Scale shape (100 TB/day): per batch, one map-side-combinable count
-aggregate + a (k+1)-row TakeOrdered (bounded driver action, the
-bounded-model convention); state grows k+1 rows per batch regardless of
-item cardinality; the read merges ``n_batches x (k+1)`` rows.
+Scale shape (100 TB/day): one map-side-combinable ``(batch, item)``
+count aggregate for all batches at once; each batch's MG decrement is
+its (k+1)-th count, a ``row_number() = k+1`` filter that Spark plans as
+a partial/final ``WindowGroupLimit`` (k+1 rows per batch and task cross
+the exchange), and the merge's decrement is a (k+1)-row
+``TakeOrderedAndProject``. Both decrements and the total are joined back
+as tiny broadcast frames, so building the report runs no Spark job on
+the driver; state grows k+1 rows per batch regardless of item
+cardinality, and the read merges ``n_batches x (k+1)`` rows.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-
-from .. import staging
 
 #: summary size per batch fragment (and per merged report)
 MGG_K = 64
@@ -63,39 +67,60 @@ MGG_K = 64
 FRAGMENT_SCHEMA = "item string, c long, __batch_id long"
 
 
-def _kth_threshold(cand: DataFrame, count_col: str, k: int) -> int:
-    """The (k+1)-th largest counter (0 when <= k candidates): the MG
-    decrement. Bounded TakeOrdered collect — k+1 rows."""
-    top = (
-        cand.orderBy(F.col(count_col).desc(), F.col("item").asc())
-        .limit(k + 1)
-        .collect()
+def _kth_count(df: DataFrame, count_col: str, k: int, by: list[str]) -> DataFrame:
+    """The (k+1)-th largest counter per ``by`` group as ``(*by, __d)``,
+    no row for a group with <= k candidates: the MG decrement. The
+    ``row_number() = k+1`` filter plans as a WindowGroupLimit (a
+    TakeOrderedAndProject when ``by`` is empty), so at most k+1 rows per
+    group are sorted."""
+    w = Window.partitionBy(*by).orderBy(F.col(count_col).desc(), F.col("item").asc())
+    return (
+        df.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == k + 1)
+        .select(*by, F.col(count_col).alias("__d"))
     )
-    return int(top[k][count_col]) if len(top) > k else 0
+
+
+def mg_fragments(
+    df: DataFrame, item_col: str, batch: Column, k: int = MGG_K
+) -> DataFrame:
+    """Every batch's store fragment as ``(item, c, __batch_id)``: the
+    batch's exact counts reduced to <= k MG rows, plus one ``item IS
+    NULL`` sentinel carrying the batch's total item count. A pure
+    function of each batch's rows (the idempotence anchor), computed from
+    ONE ``(batch, item)`` count aggregate; shared by the ``foreachBatch``
+    writer (``batch = F.lit(batch_id)``) and the graded replay
+    (``batch = id % n``). Null items keep their own count group, so a
+    batch of null items still yields its zero sentinel."""
+    counts = df.groupBy(
+        batch.alias("__batch_id"), F.col(item_col).cast("string").alias("item")
+    ).agg(F.count(F.lit(1)).alias("c"))
+    items = counts.filter(F.col("item").isNotNull())
+    d = _kth_count(items, "c", k, ["__batch_id"])
+    frag = (
+        items.join(F.broadcast(d), "__batch_id", "left")
+        .select(
+            "item",
+            (F.col("c") - F.coalesce(F.col("__d"), F.lit(0))).cast("long").alias("c"),
+            "__batch_id",
+        )
+        .filter(F.col("c") > 0)
+    )
+    sentinel = counts.groupBy("__batch_id").agg(
+        F.lit(None).cast("string").alias("item"),
+        F.coalesce(
+            F.sum(F.when(F.col("item").isNotNull(), F.col("c"))), F.lit(0)
+        ).cast("long").alias("c"),
+    )
+    return frag.unionByName(sentinel)
 
 
 def mg_batch_fragment(
     batch_df: DataFrame, item_col: str, k: int = MGG_K
 ) -> DataFrame:
-    """One micro-batch's store fragment: the batch's exact counts reduced
-    to <= k MG rows, plus the ``item IS NULL`` total sentinel. Pure
-    function of the batch (the idempotence anchor); shared by the
-    ``foreachBatch`` writer and the graded in-plan replay."""
-    spark = batch_df.sparkSession
-    # feeds both the eager bounded collects and the returned lazy plan
-    counts = staging.stage(
-        batch_df.select(F.col(item_col).cast("string").alias("item"))
-        .filter(F.col("item").isNotNull())
-        .groupBy("item")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    d = _kth_threshold(counts, "c", k)
-    tot = counts.agg(F.coalesce(F.sum("c"), F.lit(0)).alias("n")).collect()[0].n
-    frag = counts.filter(F.col("c") > d).select(
-        "item", (F.col("c") - F.lit(d)).cast("long").alias("c")
-    )
-    sentinel = spark.createDataFrame([(None, int(tot))], "item string, c long")
-    return frag.unionByName(sentinel)
+    """One micro-batch's store fragment as ``(item, c)``: :func:`mg_fragments`
+    with the whole frame as one batch."""
+    return mg_fragments(batch_df, item_col, F.lit(0), k).select("item", "c")
 
 
 def heavy_hitters_writer(
@@ -106,15 +131,12 @@ def heavy_hitters_writer(
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         (
-            mg_batch_fragment(batch_df, item_col, k)
-            .withColumn("__batch_id", F.lit(batch_id))
+            mg_fragments(batch_df, item_col, F.lit(batch_id), k)
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("__batch_id")
             .parquet(store_dir)
         )
-        # the write above is this batch's consuming action
-        staging.release_staged()
 
     return apply_batch
 
@@ -124,22 +146,24 @@ def merge_fragments(frags: DataFrame, k: int = MGG_K) -> DataFrame:
     err_bound)``: est is the lower bound, ``true <= est + err_bound``
     with ``err_bound = n_total DIV (k+1)`` (n_total from the sentinels).
     Works for ANY subset of batches — mergeability is the point."""
-    # feeds both the bounded threshold collect and the returned lazy plan
-    cand = staging.stage(
+    cand = (
         frags.filter(F.col("item").isNotNull())
         .groupBy("item")
         .agg(F.sum("c").alias("s"))
     )
-    d = _kth_threshold(cand, "s", k)
+    d = _kth_count(cand, "s", k, []).agg(
+        F.coalesce(F.max("__d"), F.lit(0)).alias("__d")
+    )
     n_total = frags.filter(F.col("item").isNull()).agg(
         F.coalesce(F.sum("c"), F.lit(0)).cast("long").alias("n_total")
     )
     return (
-        cand.filter(F.col("s") > d)
+        cand.crossJoin(F.broadcast(d))
+        .filter(F.col("s") > F.col("__d"))
         .crossJoin(F.broadcast(n_total))
         .select(
             "item",
-            (F.col("s") - F.lit(d)).cast("long").alias("est"),
+            (F.col("s") - F.col("__d")).cast("long").alias("est"),
             "n_total",
             F.expr(f"n_total DIV {k + 1}").alias("err_bound"),
         )
@@ -163,14 +187,9 @@ def replay_heavy_hitters(
 ) -> DataFrame:
     """The graded fold's IN-PLAN twin of the store pipeline: split the
     frame into ``n_batches`` deterministic micro-batches
-    (``id % n_batches`` — the replay convention), build each batch's
+    (``id % n_batches`` — the replay convention), build every batch's
     fragment with the same pure function the writer uses, and merge.
     No side effects; byte-equal to writing fragments and reading them
     back (pytest pins that round-trip)."""
-    frags = None
-    for b in range(n_batches):
-        f = mg_batch_fragment(
-            events.filter(F.col(id_col) % n_batches == b), item_col, k
-        )
-        frags = f if frags is None else frags.unionByName(f)
-    return merge_fragments(frags, k)
+    frags = mg_fragments(events, item_col, F.col(id_col) % n_batches, k)
+    return merge_fragments(frags.select("item", "c"), k)

@@ -110,3 +110,34 @@ def test_long_session_staged_persist_growth_bounded(spark):
     after_release = jsc.getPersistentRDDs().size()
     spark.catalog.clearCache()
     assert after_release == jsc.getPersistentRDDs().size()
+
+
+def test_engine_outputs_lazy_and_materialized_give_same_rows(spark, monkeypatch):
+    """Engines A and C are written once per session by their engine step;
+    the reads over the written outputs must equal the same builders over
+    the lazy lineage, and an engine step's first call (the write) must
+    return the same rows as its second (the lineage)."""
+    from recon_spark import registry as R
+    from recon_spark.plans import analytics
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()), key=repr)
+
+    def written(df):
+        return any("recon_engines_" in f for f in df.inputFiles())
+
+    monkeypatch.setattr(R, "_ENGINE_TABLE_MEMO", {})
+    for name in ("engine_a_match_planid", "engine_c_roth_taxable"):
+        fn = R._REGISTERED[name][0]
+        first = fn(spark, SF)
+        second = fn(spark, SF)
+        assert written(first) and not written(second), name
+        assert rows(first) == rows(second), name
+
+    lazy = R._engine_outputs(spark, SF, materialized=False)
+    assert rows(R.q_action_mix_c(spark, SF)) == rows(
+        analytics.build_action_mix(lazy["engine_c"])
+    )
+    assert rows(R.q_unmatched_a(spark, SF)) == rows(
+        analytics.build_unmatched_summary(lazy["engine_a"], micros=True)
+    )

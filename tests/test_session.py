@@ -1,5 +1,5 @@
 """The driver JVM that get_spark launches runs with the C2 thresholds of
-``session.DRIVER_JIT_OPTIONS``.
+``session.DRIVER_JIT_OPTIONS`` and a heap sized to the host.
 
 Spark starts the driver with ``-XX:+IgnoreUnrecognizedVMOptions``, so a
 misspelled flag starts cleanly and leaves the default in place. The test
@@ -8,7 +8,9 @@ therefore reads the effective values from HotSpot, not the argument list.
 
 from __future__ import annotations
 
-from recon_spark.session import DRIVER_JIT_OPTIONS
+import os
+
+from recon_spark.session import DRIVER_JIT_OPTIONS, driver_memory
 
 EXPECTED = {
     "Tier4InvocationThreshold": "50000",
@@ -32,3 +34,17 @@ def test_driver_jvm_runs_with_raised_c2_thresholds(spark):
 def test_flags_ride_on_default_java_options(spark):
     conf = spark.sparkContext.getConf().get("spark.driver.defaultJavaOptions")
     assert conf == DRIVER_JIT_OPTIONS
+
+
+def test_default_driver_heap_is_sized_to_the_host():
+    """60% of physical RAM, capped at 24g: a 15 GiB host gets 9 GiB, a
+    64 GiB host the cap."""
+    assert driver_memory(15 * 2**30) == "9216m"
+    assert driver_memory(40 * 2**30) == "24576m"
+    assert driver_memory(64 * 2**30) == "24576m"
+    assert driver_memory(2**30) == "614m"
+
+
+def test_session_heap_follows_the_sizing(spark):
+    want = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or driver_memory()
+    assert spark.sparkContext.getConf().get("spark.driver.memory") == want

@@ -1,8 +1,9 @@
 """Streaming Misra-Gries heavy-hitter rollup (streaming/heavy_hitters.py):
 the store round-trip vs the in-plan replay twin, batch-id replay
-idempotence, a REAL availableNow drain, the mergeability band, and the
-empty-batch sentinel. The merged verdict itself is driver-graded as the
-parity fold on analytics_user_reach."""
+idempotence, a REAL availableNow drain, the mergeability band, the
+empty-batch sentinel, and the replay staying one lazy plan. The merged
+verdict itself is driver-graded as the parity fold on
+analytics_user_reach."""
 
 from __future__ import annotations
 
@@ -10,6 +11,7 @@ import os
 
 from pyspark.sql import functions as F
 
+from recon_spark.operators import sketches as SK
 from recon_spark.streaming import heavy_hitters as HH
 
 
@@ -112,3 +114,18 @@ def test_all_null_batch_writes_zero_sentinel(spark):
     df = spark.createDataFrame([(1, None), (2, None)], "event_id long, user_id string")
     rows = HH.mg_batch_fragment(df, "user_id", k=4).collect()
     assert [(r.item, r.c) for r in rows] == [(None, 0)]
+
+
+def test_replay_and_cm_parity_build_without_spark_jobs(spark):
+    """The analytics_user_reach riders are plan-side: building the MG
+    replay and the Count-Min certificate submits no Spark job (no driver
+    collect, no staged frame), and each batch's (k+1)-th count runs as a
+    WindowGroupLimit, so at most k+1 rows per batch are sorted."""
+    ev = _events(spark)
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    hh = HH.replay_heavy_hitters(ev, "user_id", 3, k=16)
+    SK.cm_parity(ev, "user_id")
+    assert set(tracker.getJobIdsForGroup(None)) - before == set()
+    hh.collect()
+    assert "WindowGroupLimit" in hh._jdf.queryExecution().executedPlan().toString()
