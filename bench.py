@@ -295,79 +295,13 @@ def _q_corpus_build(spark, sf_dir):
 
 def _q_corpus_build_full(spark, sf_dir):
     """FULL-STACK corpus build (VERDICT r12 #3): every round-12 stage in
-    COMPOSITION — NFC normalize -> C4 line filter -> within-doc paragraph
-    dedup -> boilerplate spans -> quality/exact-dedup -> regime-adaptive
-    near-dup ('auto') -> perplexity filter -> split -> BPE-budgeted
-    packing. The standalone entries price each stage alone; this one
-    prices their interactions (unicode rewrites text before any
-    fingerprint; C4 drops pages before dedup; packing budgets by trained
-    subword counts).
+    COMPOSITION over a page-shaped corpus derived from the fixture
+    documents — the benchmark's ``corpus_prep`` build
+    (``perfbench.run.corpus_full``), priced here next to the standalone
+    per-stage entries."""
+    from perfbench.run import corpus_full
 
-    The flat fixture rows have no line/sentence structure (single line,
-    no terminal punctuation — C4 would drop 100% and the composition
-    would run on an empty corpus), so the entry derives a deterministic
-    PAGE-shaped corpus first: 5 fixture docs -> one page, one doc per
-    line with a terminal period; every 7th page re-pastes its first line
-    (paragraph-dedup work), every 11th gets an unpunctuated short line
-    (C4 line-drop work), every 13th leads with a decomposed-accent line
-    (NFC work)."""
-    from pyspark.sql import functions as F
-
-    from recon_spark.plans import corpus
-    from recon_spark.operators import sampling
-    from recon_spark.sources.tpch import load
-
-    docs = (
-        load(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .filter(F.col("text").isNotNull())
-    )
-    pid = F.col("doc_id")
-    pages = (
-        docs.groupBy(F.floor(F.col("doc_id") / 5).alias("doc_id"))
-        .agg(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(F.col("doc_id").alias("k"), F.col("text").alias("t"))
-                    )
-                ),
-                lambda s: F.concat(s["t"], F.lit(".")),
-            ).alias("__ls")
-        )
-    )
-    ls = F.col("__ls")
-    ls = F.when(pid % 7 == 0, F.concat(F.slice(ls, 1, 1), ls)).otherwise(ls)
-    ls = F.when(
-        pid % 11 == 0, F.concat(ls, F.array(F.lit("no punct tail")))
-    ).otherwise(ls)
-    ls = F.when(
-        pid % 13 == 0,
-        F.concat(
-            # decomposed accent (e + U+0301): real NFC edits to price
-            F.array(F.lit("café menu offers plenty of seasonal words here.")),
-            ls,
-        ),
-    ).otherwise(ls)
-    # NOT persisted: an A/B lap at sf0.1 measured 11.5s (no cache) vs
-    # 11.8s (pages.persist()) — the perplexity stage's eager drain plus
-    # the survivors cache already bound how often the page shuffle
-    # re-executes, so the cache would cost memory for nothing.
-    pages = pages.select(
-        "doc_id", F.array_join(ls, "\n").alias("text")
-    ).repartition(spark.sparkContext.defaultParallelism)
-    ref = sampling.with_split(pages).filter(F.col("split") == "train")
-    return corpus.build_training_corpus(
-        pages,
-        perplexity_keep=0.95,
-        perplexity_ref=ref,
-        unicode_form="NFC",
-        c4_lines=True,
-        dedup_paras=True,
-        boilerplate_spans=8,
-        near_dup_method="auto",
-        bpe_merges=200,
-    )
+    return corpus_full(spark, sf_dir)
 
 
 def _q_dsir_select(spark, sf_dir):
@@ -648,56 +582,6 @@ EXTRA_QUERIES = {
 }
 
 
-#: jiffies -> seconds for /proc accounting
-_CLK_TCK = os.sysconf("SC_CLK_TCK")
-
-
-def _system_busy_jiffies() -> int:
-    """Total busy jiffies across all CPUs (user+nice+system+irq+softirq+
-    steal — idle and iowait excluded) from /proc/stat."""
-    with open("/proc/stat") as f:
-        p = f.readline().split()
-    u, n, s, _idle, _iow, irq, sirq, steal = (int(x) for x in p[1:9])
-    return u + n + s + irq + sirq + steal
-
-
-def _own_tree_jiffies() -> int:
-    """Busy jiffies consumed by THIS process and every live descendant
-    (the Spark JVM, pyspark daemons/workers), including reaped children
-    via cutime/cstime — one /proc sweep, ~ms."""
-    import glob as _glob
-
-    me = os.getpid()
-    stats: dict[int, tuple[int, int]] = {}
-    for path in _glob.glob("/proc/[0-9]*/stat"):
-        try:
-            with open(path) as f:
-                raw = f.read()
-        except OSError:  # raced a process exit
-            continue
-        try:
-            rp = raw.rindex(")")  # comm can contain spaces/parens
-            pid = int(raw.split(" ", 1)[0])
-            rest = raw[rp + 2 :].split()
-            ppid = int(rest[1])
-            jiff = int(rest[11]) + int(rest[12]) + int(rest[13]) + int(rest[14])
-        except (ValueError, IndexError):
-            continue
-        stats[pid] = (ppid, jiff)
-    kids: dict[int, list[int]] = {}
-    for pid, (ppid, _) in stats.items():
-        kids.setdefault(ppid, []).append(pid)
-    own, stack, seen = 0, [me], set()
-    while stack:
-        p = stack.pop()
-        if p in seen or p not in stats:
-            continue
-        seen.add(p)
-        own += stats[p][1]
-        stack.extend(kids.get(p, []))
-    return own
-
-
 def _git_sha() -> str | None:
     import subprocess
 
@@ -747,6 +631,7 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
+    from perfbench.proc import CpuWindow
     from recon_spark import staging
     from recon_spark.registry import QUERIES
     from recon_spark.session import get_spark
@@ -920,7 +805,7 @@ def main() -> None:
             # attributable from the JSON alone instead of needing a
             # forensic re-run.
             la[name] = round(os.getloadavg()[0], 1)
-            busy0, own0 = _system_busy_jiffies(), _own_tree_jiffies()
+            ext = CpuWindow()
             t0 = time.time()
             try:
                 fn = QUERIES.get(name) or EXTRA_QUERIES[name]
@@ -934,12 +819,7 @@ def main() -> None:
                 # external CPU during THIS query's window, in cores
                 # (sampled before clearCache so only the timed window
                 # counts)
-                dt = max(time.time() - t0, 1e-3)
-                d_busy = _system_busy_jiffies() - busy0
-                d_own = max(_own_tree_jiffies() - own0, 0)
-                le[name] = round(
-                    max(d_busy - d_own, 0) / dt / _CLK_TCK, 2
-                )
+                le[name] = round(ext.external_cores(), 2)
                 # drop what this query cached: the SQL cache plus the
                 # staging ledger's handles, so one query's cache neither
                 # warms the next lap nor holds executor memory meanwhile

@@ -14,19 +14,10 @@ token SLICE equals the phrase's token sequence — so "Hash-Join!"
 matches the phrase "hash join", but "hashjoin" does not. Counts are
 occurrence counts over all start positions (overlaps included).
 
-Two value-identical forms (the repo's twin convention, parity-asserted):
-
-- :func:`blocklist_verdicts` — per-phrase counts compiled INLINE into
-  the projection (zero shuffle, rides the scan). Per-row cost is
-  O(n_tokens x n_phrases) in codegen'd column algebra; right for lists
-  up to a few hundred phrases (C4's is ~400).
-- :func:`blocklist_verdicts_join` — the big-list scale path: posexplode
-  tokens once, join the BROADCAST (token, phrase, offset) table, and a
-  k-token phrase match is a (doc, phrase, pos - offset) group reaching
-  count k. Fan-out is one row per (token occurrence x phrases carrying
-  that token), i.e. proportional to actual hit density, not list size;
-  both joins are map-side against a bounded table, then one
-  map-side-combinable aggregation.
+:func:`blocklist_verdicts` compiles the per-phrase counts INLINE into
+the projection (zero shuffle, rides the scan). Per-row cost is
+O(n_tokens x n_phrases) in codegen'd column algebra; right for lists up
+to a few hundred phrases (C4's is ~400).
 
 All counters are exact BIGINTs and the verdict table is fully
 deterministic, so the whole thing is DuckDB-replayable
@@ -143,56 +134,6 @@ def blocklist_verdicts(
         ],
     )
     return _verdict_from_counts(base, plist, id_col)
-
-
-def blocklist_verdicts_join(
-    docs: DataFrame,
-    phrases: tuple[str, ...] = DEFAULT_BLOCKLIST,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Scale twin for big lists: a k-token phrase matches at start
-    position ``pos - offset`` when all k (token, offset) pairs hit —
-    i.e. the (doc, phrase, start) group from the broadcast token join
-    reaches size k. Value-identical to the inline form (parity-asserted
-    in tests)."""
-    spark = docs.sparkSession
-    plist = phrase_tokens(phrases)
-    prows = [
-        (pi, j, t, len(pt))
-        for pi, (_, pt) in enumerate(plist)
-        for j, t in enumerate(pt)
-    ]
-    ptab = F.broadcast(
-        spark.createDataFrame(prows, "pi int, j int, tok string, k int")
-    )
-    pos = docs.select(
-        id_col,
-        F.posexplode_outer(
-            tokens(F.coalesce(F.col(text_col).cast("string"), F.lit("")))
-        ).alias("pos", "tok"),
-    )
-    starts = (
-        pos.join(ptab, "tok")
-        .select(id_col, "pi", "k", (F.col("pos") - F.col("j")).alias("start"))
-        .groupBy(id_col, "pi", "k", "start")
-        .agg(F.count(F.lit(1)).alias("m"))
-        .filter(F.col("m") == F.col("k"))
-    )
-    counts = starts.groupBy(id_col, "pi").agg(
-        F.count(F.lit(1)).cast("long").alias("c")
-    )
-    wide = docs.select(id_col).join(counts, id_col, "left").groupBy(id_col).agg(
-        *[
-            F.coalesce(
-                F.sum(F.when(F.col("pi") == i, F.col("c"))), F.lit(0)
-            )
-            .cast("long")
-            .alias(f"__c{i}")
-            for i in range(len(plist))
-        ]
-    )
-    return _verdict_from_counts(wide, plist, id_col)
 
 
 def blocklist_hit_expr(

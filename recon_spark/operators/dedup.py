@@ -12,8 +12,7 @@ Scale design (100 TB):
   duplicate cluster (empty docs, boilerplate — 1e6-1e7 copies in web
   corpora) would serialize one task under an ordered per-key window;
   the aggregate form reduces it map-side and leaves only an equi-join
-  probe, the shape AQE skew-split handles. The textbook ``row_number``
-  spelling remains as the tested twin (``hot_safe=False``).
+  probe, the shape AQE skew-split handles.
 - **MinHash-LSH** never compares all pairs: signatures are computed in a
   narrow map stage, exploded to ``bands`` rows per doc, and candidates
   come from an equi-join on ``(band_idx, band_hash)`` — i.e. only
@@ -47,33 +46,21 @@ def exact_dedup(
     key: Column,
     order_cols: list[str],
     id_col: str = "doc_id",
-    hot_safe: bool = True,
 ) -> DataFrame:
     """Keep one row per ``key``; deterministic winner via ``order_cols``
     (which must be a TOTAL order within each key group — the callers
-    pass the unique row id — else all tied winners survive under the
-    default form).
+    pass the unique row id — else all tied winners survive).
 
     Generalization of the cleaners' D1 dedup to arbitrary content keys.
 
-    ``hot_safe=True`` (default, r13 advice) computes the winner via a
-    ``groupBy(key).agg(min_by(order, order))`` + equi-join instead of a
-    per-key ordered ``row_number`` window: web corpora routinely carry
-    duplicate clusters of 10^6-10^7 copies (empty documents, boilerplate
-    pages), and an ordered window serializes each cluster through one
-    task, while the aggregate form is map-side combining (partial min
-    per input partition) and the join back is a plain equi-join — the
-    one shape AQE's skew-join splitting handles. Same remedy as
-    spans.span_dedup_verdicts(hot_safe=True) (spans.py:150).
-    ``hot_safe=False`` keeps the textbook window spelling as the tested
-    twin (value-parity asserted in tests/test_llm_ops.py)."""
-    if not hot_safe:
-        w = Window.partitionBy(key).orderBy(*[F.col(c).asc() for c in order_cols])
-        return (
-            df.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
+    The winner comes from a ``groupBy(key).agg(min_by(order, order))``
+    + equi-join instead of a per-key ordered ``row_number`` window: web
+    corpora routinely carry duplicate clusters of 10^6-10^7 copies
+    (empty documents, boilerplate pages), and an ordered window
+    serializes each cluster through one task, while the aggregate form
+    is map-side combining (partial min per input partition) and the
+    join back is a plain equi-join — the one shape AQE's skew-join
+    splitting handles. Same remedy as spans.span_dedup_verdicts."""
     # BOTH sides of the winner join read this frame (the min_by
     # aggregate and the probe side) and the two exchanges have
     # different children, so the upstream lineage executes twice.
@@ -86,8 +73,7 @@ def exact_dedup(
         "__o", F.struct(*[F.col(c) for c in order_cols])
     )
     # null-safe equi-join (still a plain shuffle-hash join key): a NULL
-    # content key forms one group under the window spelling, so the
-    # aggregate twin must not silently drop it the way `=` would
+    # content key forms one group, which `=` would silently drop
     first = (
         withk.groupBy("__k")
         .agg(F.min_by("__o", "__o").alias("__f"))

@@ -255,7 +255,6 @@ def dsir_select(
     bucket_scale: float = 1024.0,
     id_block: int = 1 << 20,
     target_pred: Column | None = None,
-    weights: DataFrame | None = None,
 ) -> DataFrame:
     """Deterministic top-k selection by (log_weight desc, doc_id asc):
     (doc_id, n_feats, log_weight, rank). ``target_pred`` as in
@@ -305,16 +304,9 @@ def dsir_select(
     """
     from pyspark.sql.types import NumericType
 
-    # ``weights``: a pre-built (doc_id, n_feats, log_weight) frame —
-    # skips the scoring pass (A/B harnesses, callers that already
-    # scored); the default builds it via :func:`dsir_log_weights`.
-    w = (
-        weights
-        if weights is not None
-        else dsir_log_weights(
-            raw_docs, target_docs, n_buckets, alpha, id_col, text_col,
-            target_pred=target_pred,
-        )
+    w = dsir_log_weights(
+        raw_docs, target_docs, n_buckets, alpha, id_col, text_col,
+        target_pred=target_pred,
     )
     blk = (
         F.floor(F.col("doc_id") / F.lit(id_block))

@@ -8,17 +8,13 @@ That is a real (if simple) embedding — deterministic, vocabulary-free,
 engine-portable — not a stub; swapping in a neural encoder changes ONE
 function body, not the pipeline.
 
-Two implementations with identical output (asserted in
-tests/test_embed.py):
-
-- :func:`embed_texts` — ``mapInPandas`` + numpy, Arrow-batched. This is
-  the REAL-VOLUME shape: batched rows in, a matrix of vectors out —
-  exactly the batch contract a GPU model server or sentence-transformer
-  would occupy, so the surrounding plumbing (schema, batching,
-  partition-parallelism) is production-shaped today.
-- :func:`embed_texts_exprs` — pure column algebra (no Python workers),
-  O(dim x tokens) per row. The oracle-able twin used for value parity
-  and for clusters where Python workers are undesirable.
+:func:`embed_texts` is ``mapInPandas`` + numpy, Arrow-batched: batched
+rows in, a matrix of vectors out — exactly the batch contract a GPU
+model server or sentence-transformer would occupy, so the surrounding
+plumbing (schema, batching, partition-parallelism) is production-shaped
+today. The DuckDB oracle replays the same math in SQL
+(``oracles.llm_sql.embedding_micros``), and the graded ``text_stats``
+row compares the two at micros precision.
 
 Composition: embed -> :func:`recon_spark.operators.similarity.ivf_topk`
 (or the LSH/brute-force paths) gives document-level ANN end-to-end from
@@ -28,71 +24,12 @@ near-duplicate text pair lands in each other's top-k).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from . import text as T
 
 DEFAULT_DIM = 64
 EMBED_SALT = "embed:v1"
-
-
-def _bucket_and_sign_sql_compatible(tok: Column, dim: int) -> tuple[Column, Column]:
-    """(dimension index, sign) per token, both md5-derived so every
-    engine reproduces them bit-identically (same recipe as the MinHash /
-    split-coin hashing elsewhere in this package)."""
-    h = F.md5(F.concat(F.lit(EMBED_SALT), tok))
-    bucket = (F.conv(F.substring(h, 1, 8), 16, 10).cast("long") % dim).cast("int")
-    sign = F.when(
-        F.conv(F.substring(h, 9, 1), 16, 10).cast("int") % 2 == 0, F.lit(1.0)
-    ).otherwise(F.lit(-1.0))
-    return bucket, sign
-
-
-def pair_expr(tok: Column, dim: int) -> Column:
-    """Per-token ``struct(b, s)`` (dimension, sign) — stage
-    ``F.transform(toks, lambda t: pair_expr(t, dim))`` as a COLUMN so
-    md5 runs once per token, then feed :func:`embedding_from_pairs`."""
-    b, s = _bucket_and_sign_sql_compatible(tok, dim)
-    return F.struct(b.alias("b"), s.alias("s"))
-
-
-def embedding_from_pairs(pairs: Column, dim: int) -> Column:
-    """L2-normalized hashed embedding from a STAGED (bucket, sign) pair
-    array; NULL when the array is empty. ``pairs`` must be a plain
-    column reference (same staging rule as every array op in
-    operators/text.py)."""
-
-    def dim_value(i: Column) -> Column:
-        return F.aggregate(
-            pairs,
-            F.lit(0.0),
-            lambda acc, p: acc + F.when(p["b"] == i, p["s"]).otherwise(F.lit(0.0)),
-        )
-
-    raw = F.transform(F.sequence(F.lit(0), F.lit(dim - 1)), dim_value)
-    norm = F.sqrt(F.aggregate(raw, F.lit(0.0), lambda a, x: a + x * x))
-    return F.when(norm > 0, F.transform(raw, lambda x: x / norm))
-
-
-def embed_texts_exprs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    dim: int = DEFAULT_DIM,
-    out: str = "embedding",
-) -> DataFrame:
-    """Column-algebra hashing-trick embedder: ``(id, embedding)`` with an
-    L2-normalized ``array<double>`` of length ``dim``; rows with no
-    tokens get a NULL embedding. O(dim x tokens) expression work per row
-    — fine for document-sized rows; the Arrow path is the hot-path twin.
-    """
-    staged = docs.withColumn("__toks", T.tokens(text_col)).withColumn(
-        "__pairs", F.transform(F.col("__toks"), lambda t: pair_expr(t, dim))
-    )
-    return staged.select(
-        F.col(id_col), embedding_from_pairs(F.col("__pairs"), dim).alias(out)
-    )
 
 
 def embed_texts(
@@ -104,11 +41,11 @@ def embed_texts(
 ) -> DataFrame:
     """Arrow-batched hashing-trick embedder (the production-shaped path):
     one ``mapInPandas`` stage, each batch tokenized and scattered into a
-    numpy ``(rows, dim)`` matrix, L2-normalized per row. Output matches
-    :func:`embed_texts_exprs` bit-for-bit on the doubles (same md5
-    bucket/sign derivation, and summation order per dimension is the
-    token order in both paths — Python float addition and Spark double
-    addition agree operation-for-operation)."""
+    numpy ``(rows, dim)`` matrix, L2-normalized per row. Each token's
+    dimension is the first 8 hex digits of ``md5(EMBED_SALT || token)``
+    mod ``dim`` and its sign the parity of the 9th, so any engine with
+    md5 reproduces the vectors; per dimension the signs add up in token
+    order."""
     import hashlib
     import re
 

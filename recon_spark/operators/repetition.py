@@ -148,156 +148,6 @@ def repetition_ngram_substrate(
     )
 
 
-def _sorted_run_stats(grams_sorted: Column) -> Column:
-    """``struct(top_cnt, top_len, dup)`` over a SORTED gram array via a
-    single left fold (run-length encoding): per finished run of equal
-    grams, roll the run into the top-gram argmax and the duplicated-char
-    sum. The tie rule reproduces ``max(struct(cnt, gram))`` exactly —
-    ascending traversal + ``run >= top_cnt`` replacement keeps the
-    lexicographically LARGEST gram among count ties."""
-    zero = F.struct(
-        F.lit(None).cast("string").alias("prev"),
-        F.lit(0).cast("long").alias("run"),
-        F.lit(0).cast("long").alias("top_cnt"),
-        F.lit(0).cast("long").alias("top_len"),
-        F.lit(0).cast("long").alias("dup"),
-    )
-
-    def _closed(acc):
-        """(top_cnt, top_len, dup) with acc's open run rolled in."""
-        plen = F.length(acc["prev"]).cast("long")
-        better = acc["run"] >= acc["top_cnt"]
-        return (
-            F.when(better, acc["run"]).otherwise(acc["top_cnt"]),
-            F.when(better, plen).otherwise(acc["top_len"]),
-            acc["dup"]
-            + F.when(acc["run"] > 1, acc["run"] * plen).otherwise(F.lit(0)),
-        )
-
-    def _merge(acc, x):
-        tc, tl, dp = _closed(acc)
-        return (
-            F.when(
-                acc["prev"].eqNullSafe(x),
-                F.struct(
-                    x.alias("prev"),
-                    (acc["run"] + 1).alias("run"),
-                    acc["top_cnt"].alias("top_cnt"),
-                    acc["top_len"].alias("top_len"),
-                    acc["dup"].alias("dup"),
-                ),
-            )
-            .when(
-                acc["prev"].isNull(),
-                F.struct(
-                    x.alias("prev"),
-                    F.lit(1).cast("long").alias("run"),
-                    acc["top_cnt"].alias("top_cnt"),
-                    acc["top_len"].alias("top_len"),
-                    acc["dup"].alias("dup"),
-                ),
-            )
-            .otherwise(
-                F.struct(
-                    x.alias("prev"),
-                    F.lit(1).cast("long").alias("run"),
-                    tc.alias("top_cnt"),
-                    tl.alias("top_len"),
-                    dp.alias("dup"),
-                )
-            )
-        )
-
-    def _finish(acc):
-        tc, tl, dp = _closed(acc)
-        return F.struct(
-            tc.alias("top_cnt"), tl.alias("top_len"), dp.alias("dup")
-        )
-
-    return F.aggregate(grams_sorted, zero, _merge, _finish)
-
-
-def repetition_ngram_substrate_local(
-    docs: DataFrame,
-    ns: tuple[int, ...] = ALL_NS,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    tokens_col: str | None = None,
-) -> DataFrame:
-    """ROW-LOCAL twin of :func:`repetition_ngram_substrate` — identical
-    output frame (same columns, same values per (doc, n); asserted in
-    tests/test_repetition.py), ZERO shuffles.
-
-    Why it exists (r14, guide §2.4 "remove shuffles outright"): the
-    exploded form fans every document into ~9x n_tokens gram rows, and
-    its ``max(struct(cnt, gram))`` argmax is not hash-aggregable (struct
-    buffer), so BOTH aggregation levels run as SortAggregate with a full
-    Sort of the gram frame before each (plan: Sort+SortAggregate over
-    the (doc, n, gram, cnt) frame twice). All of a document's grams
-    start on one row, so the whole battery is computable per row: sort
-    each n's gram array once and fold the sorted runs (run-length
-    encoding) — O(T log T) comparisons per document, no gram row ever
-    leaves its task, and the only remaining plan nodes are a Project +
-    a metadata-sized posexplode of 9 structs per doc.
-
-    Regime note (the :func:`~.text.repetition_stats` precedent): per-row
-    work grows with document length; for BOOK-length documents the
-    exploded twin distributes a single document's grams across tasks and
-    is the right form. For web/corpus-shaped documents this one removes
-    two corpus-sized sort+shuffle pairs.
-
-    MEASURED r14 (sf0.1, local[32], alternating A/B, noop sink): the
-    interpreted higher-order-function fold costs MORE than the shuffles
-    it saves on this hardware — ~10.7s flat vs ~6.5s steady for the
-    exploded form — so the exploded substrate stays on the bench/graded
-    path and this twin is kept as the tested shuffle-free alternative
-    for shuffle-bound (wide-cluster) deployments, where the §2.2
-    quadratic shuffle-block growth shifts the crossover."""
-    toks = F.col(tokens_col) if tokens_col else T.tokens(text_col)
-    staged = docs.select(
-        F.col(id_col).alias("doc_id"), toks.alias("__toks")
-    ).filter(F.size("__toks") > 0)
-    t = F.col("__toks")
-
-    def _grams(n: int) -> Column:
-        return F.transform(
-            F.sequence(F.lit(0), F.size(t) - n),
-            lambda i: F.array_join(F.slice(t, i + 1, n), " "),
-        )
-
-    per_n = [
-        F.when(
-            F.size(t) >= n,
-            F.struct(
-                F.lit(n).alias("n"),
-                _sorted_run_stats(F.array_sort(_grams(n))).alias("rs"),
-            ),
-        )
-        for n in ns
-    ]
-    rows = staged.select(
-        "doc_id",
-        F.length(F.array_join(t, " ")).cast("long").alias("total_chars"),
-        F.explode(
-            F.filter(F.array(*per_n), lambda x: x.isNotNull())
-        ).alias("g"),
-    )
-    top_cnt = F.col("g.rs.top_cnt")
-    top_chars = (top_cnt * F.col("g.rs.top_len")).cast("long")
-    return rows.select(
-        "doc_id",
-        F.col("g.n").cast("int").alias("n"),
-        top_cnt.cast("long").alias("top_cnt"),
-        top_chars.alias("top_chars"),
-        F.col("g.rs.dup").cast("long").alias("dup_chars"),
-        "total_chars",
-        (top_chars.cast("double") / F.col("total_chars")).alias("top_char_frac"),
-        (F.col("g.rs.dup").cast("double") / F.col("total_chars")).alias(
-            "dup_char_frac"
-        ),
-    )
-
-
 def gopher_repetition_flags(
     substrate: DataFrame,
     top_max: dict[int, float] | None = None,

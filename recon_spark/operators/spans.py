@@ -43,9 +43,10 @@ Per-task memory is bounded by one document's window list (collect_list
 per doc), never the corpus. The hot-key risk is a boilerplate span
 occurring millions of times: the rank window over one span hash is a
 single reducer for that key — AQE cannot split a window — so the
-verdict join uses count + min-position instead of row_number when
-``hot_safe`` (two map-side-combinable aggregations, no per-key
-ordering; value-identical, asserted in tests).
+verdicts use count + min-position instead of row_number (two
+map-side-combinable aggregations, no per-key ordering). The DuckDB
+oracle replays the row_number form (llm_sql.SPAN_DEDUP_CTES,
+cdc_parity_ctes), and the tests compare the two.
 
 Reference parity: no reference counterpart — beyond-reference
 LLM-pipeline surface (brief: "Deduplication ... each as a queries()
@@ -111,19 +112,17 @@ def span_dedup_verdicts(
     k: int = SPAN_TOKENS,
     id_col: str = "doc_id",
     text_col: str = "text",
-    hot_safe: bool = True,
     stride: int | None = None,
 ) -> DataFrame:
-    """(doc_id, pos, span, keep): ``keep`` is true iff this occurrence is
-    the corpus-wide FIRST (lowest doc_id, then lowest pos) of its span
-    text. Unique spans are trivially first -> kept.
+    """(doc_id, pos, span, keep, n_occ): ``keep`` is true iff this
+    occurrence is the corpus-wide FIRST (lowest doc_id, then lowest pos)
+    of its span text; ``n_occ`` counts the span's occurrences. Unique
+    spans are trivially first -> kept.
 
-    ``hot_safe=True`` (default) computes first-occurrence via a grouped
-    (min doc_id, min pos within that doc) aggregation — two map-side
-    combining shuffles, no per-key ordered window, so a span occurring
-    millions of times cannot serialize into one reducer.
-    ``hot_safe=False`` is the textbook row_number form (kept because it
-    is the obvious formulation; value-identical, asserted in tests).
+    First-occurrence comes from a grouped (min doc_id, min pos within
+    that doc) aggregation — map-side combining, no per-key ordered
+    window, so a span occurring millions of times cannot serialize into
+    one reducer.
 
     ``stride`` < k enables OVERLAPPING windows (round 10, closing the
     aligned-window recall gap — r9 VERDICT "What's missing" #4): a
@@ -136,16 +135,6 @@ def span_dedup_verdicts(
     recall for a 1/s window count.
     """
     spans = token_spans(docs, k, id_col, text_col, stride)
-    if not hot_safe:
-        w = Window.partitionBy("span").orderBy("doc_id", "pos")
-        wc = Window.partitionBy("span")
-        return spans.select(
-            "doc_id",
-            "pos",
-            "span",
-            (F.row_number().over(w) == 1).alias("keep"),
-            F.count(F.lit(1)).over(wc).alias("n_occ"),
-        )
     first = spans.groupBy("span").agg(
         F.min_by(F.struct("doc_id", "pos"), F.struct("doc_id", "pos")).alias("__f"),
         F.count(F.lit(1)).alias("__n"),
@@ -392,7 +381,6 @@ def cdc_span_dedup(
     p: int = CDC_P,
     id_col: str = "doc_id",
     text_col: str = "text",
-    hot_safe: bool = True,
 ) -> DataFrame:
     """Cleaned corpus over content-defined segments: every segment text
     occurring more than once in the corpus is removed everywhere except
@@ -402,29 +390,25 @@ def cdc_span_dedup(
     partition the token stream completely, so the rebuild is the
     pos-ordered join of kept segments (no remainder tail).
 
-    Verdict computation reuses the hot-safe grouped first-occurrence
-    shape (two map-side-combinable aggs, no per-span-key ordered
-    window) — the same hot-key discipline as the fixed-window form.
+    Verdict computation reuses the grouped first-occurrence shape (a
+    map-side-combinable agg, no per-span-key ordered window) — the same
+    hot-key discipline as the fixed-window form.
     """
     spans = cdc_spans(docs, p, id_col, text_col)
-    if hot_safe:
-        first = spans.groupBy("span").agg(
-            F.min_by(
-                F.struct("doc_id", "pos"), F.struct("doc_id", "pos")
-            ).alias("__f")
-        )
-        verdicts = spans.join(first, "span").select(
-            "doc_id",
-            "pos",
-            "span",
-            (
-                (F.col("doc_id") == F.col("__f.doc_id"))
-                & (F.col("pos") == F.col("__f.pos"))
-            ).alias("keep"),
-        )
-    else:
-        w = Window.partitionBy("span").orderBy("doc_id", "pos")
-        verdicts = spans.withColumn("keep", F.row_number().over(w) == 1)
+    first = spans.groupBy("span").agg(
+        F.min_by(
+            F.struct("doc_id", "pos"), F.struct("doc_id", "pos")
+        ).alias("__f")
+    )
+    verdicts = spans.join(first, "span").select(
+        "doc_id",
+        "pos",
+        "span",
+        (
+            (F.col("doc_id") == F.col("__f.doc_id"))
+            & (F.col("pos") == F.col("__f.pos"))
+        ).alias("keep"),
+    )
     per_doc = verdicts.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_spans"),
         F.count_if(~F.col("keep")).cast("long").alias("n_removed"),

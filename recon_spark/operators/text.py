@@ -481,10 +481,8 @@ def repetition_stats(toks: Column) -> tuple[Column, Column]:
     type-token ratio (distinct/total) and the mode token's frequency
     share. O(tokens x distinct) per row in column algebra — fine for
     document-sized rows (a web corpus); a BOOK-length document makes a
-    single row's expression evaluation quadratic — for such corpora use
-    :func:`repetition_stats_exploded`, the linear shuffle-based twin
-    (value-identical on non-empty docs, asserted in tests/test_corpus.py).
-    Both signals NULL for empty docs.
+    single row's expression evaluation quadratic. Both signals NULL for
+    empty docs.
 
     PERF: like every array op in this module, ``toks`` must be a plain
     column reference (see shingles_from_tokens).
@@ -497,39 +495,6 @@ def repetition_stats(toks: Column) -> tuple[Column, Column]:
     ttr = F.when(n > 0, F.size(distinct).cast("double") / n)
     top_share = F.when(n > 0, top.cast("double") / n)
     return ttr, top_share
-
-
-def repetition_stats_exploded(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Shuffle-based twin of :func:`repetition_stats` for long-document
-    corpora: ``(id, ttr, top_token_share)``, one row per non-empty doc.
-
-    The column-algebra form evaluates O(tokens x distinct) WORK PER ROW
-    inside one task — quadratic for a book-length document. This variant
-    is linear: explode -> count per (doc, token) -> roll up per doc. Two
-    shuffles, both map-side combining, and per-task memory is bounded by
-    the aggregation hash map rather than any single document's token
-    array, so one pathological document can never stall a task.
-
-    Differences from the column form, by construction: empty/whitespace
-    docs produce NO row here (vs a row with NULL signals), and the
-    output is an aggregate frame to join back rather than two appended
-    columns. Values are identical on every non-empty doc
-    (tests/test_corpus.py asserts exact parity at sf0.001).
-    """
-    tok = docs.select(F.col(id_col), F.explode(tokens(text_col)).alias("__t"))
-    per = tok.groupBy(id_col, "__t").agg(F.count(F.lit(1)).alias("__c"))
-    agg = per.groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("__distinct"),
-        F.sum("__c").alias("__total"),
-        F.max("__c").alias("__top"),
-    )
-    return agg.select(
-        id_col,
-        (F.col("__distinct").cast("double") / F.col("__total")).alias("ttr"),
-        (F.col("__top").cast("double") / F.col("__total")).alias("top_token_share"),
-    )
 
 
 def chunk_documents(
@@ -872,9 +837,8 @@ def token_entropy(
     (doc, term) groupBy, then a per-doc sorted fold over the
     types-bounded count list. Scale shape: the groupBy is
     map-side-combinable; the collect_list is bounded by the doc's
-    distinct-token count (the repetition_stats_exploded precedent for
-    book-length docs). Empty/null docs anchor with counts 0 and NULL
-    entropies."""
+    distinct-token count, so book-length docs stay linear. Empty/null
+    docs anchor with counts 0 and NULL entropies."""
     tf = (
         docs.select(id_col, F.explode(tokens(text_col)).alias("term"))
         .groupBy(id_col, "term")
@@ -923,51 +887,11 @@ def token_entropy(
     )
 
 
-def token_entropy_rowlocal(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Value-identical row-local twin: counts derived inside the row
-    from the token array (``transform(array_sort(array_distinct))`` +
-    filter-size), zero shuffle — the narrow-scan form for typical web
-    documents. O(n_types * n_tokens) per row, so book-length docs
-    should use the exploded primary (parity asserted in tests)."""
-    toks = tokens(F.coalesce(_c(text_col).cast("string"), F.lit("")))
-    base = docs.select(id_col, toks.alias("__toks"))
-    types = F.array_sort(F.array_distinct(F.col("__toks")))
-    n = F.size(F.col("__toks")).cast("long")
-    counts = F.transform(
-        types,
-        lambda t: F.size(F.filter(F.col("__toks"), lambda x: x == t)).cast(
-            "double"
-        ),
-    )
-    h_raw = -F.aggregate(
-        counts,
-        F.lit(0.0),
-        lambda acc, c: acc + (c / n) * F.log(c / n),
-    )
-    n_types = F.size(types).cast("long")
-    return base.select(
-        id_col,
-        n.alias("n_tokens"),
-        n_types.alias("n_types"),
-        F.when(n > 0, F.round(h_raw * 1_000_000.0).cast("long")).alias(
-            "h_micros"
-        ),
-        F.when(
-            n_types >= 2,
-            F.round(
-                h_raw / F.log(n_types.cast("double")) * 1_000_000.0
-            ).cast("long"),
-        ).alias("h_norm_micros"),
-    )
-
-
 def entropy_norm_micros_from_tokens(toks_col: Column) -> Column:
     """Normalized-entropy micros as a single Column over an existing
     token-array column — the inline form the corpus pipeline filters on
-    (zero shuffle; NULL when fewer than 2 types). Same pinned fold as
-    the row-local twin."""
+    (zero shuffle; NULL when fewer than 2 types). Same pinned
+    term-ascending fold as :func:`token_entropy`'s ``h_norm_micros``."""
     types = F.array_sort(F.array_distinct(toks_col))
     n = F.size(toks_col).cast("long")
     counts = F.transform(

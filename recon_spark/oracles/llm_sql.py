@@ -188,8 +188,9 @@ EMBED_SALT = _E.EMBED_SALT
 
 
 def embedding_micros(toks_col: str, dim: int = EMBED_GRADED_DIM) -> str:
-    """DuckDB mirror of operators/embed.py embedding_from_pairs,
-    serialized as ';'-joined micros (NULL for token-less docs)."""
+    """DuckDB replay of operators/embed.py embed_texts (md5 bucket and
+    sign per token, signed histogram, L2 norm), serialized as ';'-joined
+    micros (NULL for token-less docs)."""
     h = f"md5('{EMBED_SALT}' || t)"
     bucket = f"CAST(CAST(concat('0x', substr({h}, 1, 8)) AS UBIGINT) % {dim} AS INT)"
     sign = (

@@ -1,7 +1,8 @@
 """Phrase-blocklist filter (operators/blocklist.py, r14): word-boundary
-semantics, overlap counting, inline-vs-join twin parity, null/empty
-anchoring, summary rollup, DuckDB differential fuzz through the graded
-CTEs, and fixture non-vacuity of the multi-token branch."""
+semantics, overlap counting, null/empty anchoring, summary rollup,
+DuckDB parity through the graded CTEs on an edge-case corpus and on
+seeded fuzz corpora, and fixture non-vacuity of the multi-token
+branch."""
 
 from __future__ import annotations
 
@@ -69,11 +70,23 @@ def test_empty_phrase_rejected(spark):
         BL.phrase_tokens(("ok phrase", "!!!"))
 
 
+def _duckdb_parity(rows, phrases=None):
+    from recon_spark.oracles import plans_sql
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+    out = con.sql(
+        f"WITH {plans_sql.blocklist_parity_ctes(phrases)} SELECT * FROM bl_parity"
+    ).fetchone()
+    con.close()
+    return out
+
+
 def test_join_twin_value_identical(spark):
-    """The broadcast-join scale path must agree with the inline form
-    cell-for-cell — including a repeated-token phrase, the case where
-    the (doc, phrase, start) group logic has to count offsets, not just
-    distinct tokens."""
+    """The verdict table equals the DuckDB replay on NULL and empty
+    docs, overlapping and repeated-token phrases ("a a"), and a
+    four-token phrase over five input partitions."""
     rnd = random.Random(0xB10C)
     vocab = ["a", "b", "c", "hash", "join", "scan"]
     rows = [(999, None), (998, "")]
@@ -83,9 +96,8 @@ def test_join_twin_value_identical(spark):
         )
     docs = spark.createDataFrame(rows, "doc_id long, text string").repartition(5)
     phrases = ("a a", "hash join", "scan", "b c a")
-    inline = _v(BL.blocklist_verdicts(docs, phrases))
-    joined = _v(BL.blocklist_verdicts_join(docs, phrases))
-    assert inline == joined
+    got = BL.blocklist_parity(docs, phrases).collect()[0]
+    assert (got.n_bl_rows, got.bl_ck) == _duckdb_parity(rows, phrases)
 
 
 def test_summary_rollup(spark):
@@ -99,7 +111,6 @@ def test_summary_rollup(spark):
 
 
 def test_differential_fuzz_vs_duckdb(spark):
-    from recon_spark.oracles import plans_sql
     from tests.test_dedup_fuzz import _corpus
 
     rnd = random.Random(0xB10C2)
@@ -111,14 +122,7 @@ def test_differential_fuzz_vs_duckdb(spark):
             rows.append((i, t))
         docs = spark.createDataFrame(rows, "doc_id long, text string")
         got = BL.blocklist_parity(docs).collect()[0]
-        con = duckdb.connect()
-        con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
-        con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
-        want = con.sql(
-            f"WITH {plans_sql.blocklist_parity_ctes()} SELECT * FROM bl_parity"
-        ).fetchone()
-        con.close()
-        assert (got.n_bl_rows, got.bl_ck) == want, f"trial {trial}"
+        assert (got.n_bl_rows, got.bl_ck) == _duckdb_parity(rows), f"trial {trial}"
 
 
 def test_fixture_multi_token_branch_non_vacuous():

@@ -61,26 +61,6 @@ def test_no_quality_reject_reaches_packing(spark):
     assert joined.filter(F.col("len") < 5).count() == 0
 
 
-def test_repetition_stats_exploded_matches_column_form(spark):
-    """The linear shuffle-based twin must be value-identical to the
-    column-algebra form on every non-empty document (the column form's
-    empty docs carry NULL signals and produce no row in the twin)."""
-    from recon_spark.operators import text as T
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    col_form = (
-        T.with_text_stats(docs)
-        .filter(F.col("n_tokens") > 0)
-        .select("doc_id", "ttr", "top_token_share")
-    )
-    twin = T.repetition_stats_exploded(docs)
-    a = {r.doc_id: (r.ttr, r.top_token_share) for r in col_form.collect()}
-    b = {r.doc_id: (r.ttr, r.top_token_share) for r in twin.collect()}
-    assert a.keys() == b.keys() and len(a) > 0
-    for k in a:
-        assert a[k] == b[k], k  # exact double equality: same arithmetic
-
-
 def test_corpus_perplexity_stage_drops_expected_fraction(spark):
     from recon_spark.plans.corpus import build_training_corpus
 

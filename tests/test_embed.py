@@ -1,35 +1,57 @@
-"""Feature-hashing text embedder (operators/embed.py): bitwise parity
-between the Arrow-batched production path and the column-algebra twin,
-unit-norm/determinism invariants, and the end-to-end text -> embedding
--> ANN composition."""
+"""Feature-hashing text embedder (operators/embed.py): value parity of
+the Arrow-batched path against the independent DuckDB replay
+(llm_sql.embedding_micros), unit-norm/determinism invariants, and the
+end-to-end text -> embedding -> ANN composition."""
 
 from __future__ import annotations
 
 import math
 
+import duckdb
 from pyspark.sql import functions as F
 
 from recon_spark.operators import embed as E
 from recon_spark.operators import similarity as SIM
+from recon_spark.oracles import llm_sql
 
 
 def test_arrow_and_expr_paths_match_bitwise(spark):
-    docs = (
-        spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    """embed_texts at dim=32, serialized as ';'-joined micros exactly as
+    the graded text_stats row does, equals the DuckDB SQL replay of the
+    same hashing trick on 120 fixture documents (NULL where a doc has
+    no tokens)."""
+    rows = [
+        (r.doc_id, r.text)
+        for r in spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
         .select("doc_id", "text")
+        .orderBy("doc_id")
         .limit(120)
+        .collect()
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    micros = F.array_join(
+        F.transform(
+            F.col("embedding"),
+            lambda x: F.round(x * 1_000_000).cast("long").cast("string"),
+        ),
+        ";",
     )
-    a = {r.doc_id: r.embedding for r in E.embed_texts(docs, dim=32).collect()}
-    b = {r.doc_id: r.embedding for r in E.embed_texts_exprs(docs, dim=32).collect()}
-    assert a.keys() == b.keys() and len(a) == 120
-    n_vecs = 0
-    for k in a:
-        if a[k] is None:
-            assert b[k] is None
-            continue
-        n_vecs += 1
-        assert a[k] == b[k], k  # exact double equality, element-wise
-    assert n_vecs > 100  # the corpus is overwhelmingly non-empty
+    a = {
+        r.doc_id: r.m
+        for r in E.embed_texts(docs, dim=32).select("doc_id", micros.alias("m")).collect()
+    }
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+    b = dict(
+        con.sql(
+            f"WITH t AS (SELECT doc_id, {llm_sql.tokens('text')} AS toks FROM documents)"
+            f" SELECT doc_id, {llm_sql.embedding_micros('toks', 32)} FROM t"
+        ).fetchall()
+    )
+    con.close()
+    assert a == b and len(a) == 120
+    assert sum(v is not None for v in a.values()) > 100  # mostly non-empty
 
 
 def test_unit_norm_and_empty_docs(spark):

@@ -1,7 +1,7 @@
 """Token-entropy quality signal (operators/text.token_entropy, r14):
-hand-computed H, uniform/degenerate bounds, exploded-vs-rowlocal twin
-parity, null/empty anchoring, and DuckDB differential fuzz through the
-graded CTEs."""
+hand-computed H, uniform/degenerate bounds, null/empty anchoring, the
+inline corpus-filter expression, and DuckDB differential fuzz through
+the graded CTEs."""
 
 from __future__ import annotations
 
@@ -60,17 +60,6 @@ def test_gibberish_scores_lower(spark):
     assert got[1][3] < got[2][3]
 
 
-def test_rowlocal_twin_parity(spark):
-    from tests.test_dedup_fuzz import _corpus
-
-    rnd = random.Random(0xE27)
-    rows = list(_corpus(rnd, 60))
-    docs = spark.createDataFrame(rows, "doc_id long, text string").repartition(5)
-    a = _rows(T.token_entropy(docs))
-    b = _rows(T.token_entropy_rowlocal(docs))
-    assert a == b
-
-
 def test_differential_fuzz_vs_duckdb(spark):
     from recon_spark.oracles import llm_sql
     from tests.test_dedup_fuzz import _corpus
@@ -78,7 +67,9 @@ def test_differential_fuzz_vs_duckdb(spark):
     rnd = random.Random(0xE272)
     for trial in range(3):
         rows = list(_corpus(rnd, 50))
-        docs = spark.createDataFrame(rows, "doc_id long, text string")
+        # five input partitions: a doc's tokens meet across tasks in the
+        # (doc, term) groupBy, and the fold must not depend on the split
+        docs = spark.createDataFrame(rows, "doc_id long, text string").repartition(5)
         got = T.entropy_parity(docs).collect()[0]
         con = duckdb.connect()
         con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
@@ -114,6 +105,8 @@ def test_corpus_entropy_stage(spark):
 
 
 def test_inline_expr_matches_rowlocal(spark):
+    """The inline row-local corpus-filter expression equals
+    token_entropy's h_norm_micros, NULLs included."""
     from pyspark.sql import functions as F
 
     from recon_spark.operators import text as T
@@ -133,6 +126,6 @@ def test_inline_expr_matches_rowlocal(spark):
     }
     b = {
         r.doc_id: r.h_norm_micros
-        for r in T.token_entropy_rowlocal(docs).collect()
+        for r in T.token_entropy(docs).collect()
     }
     assert a == b

@@ -60,22 +60,14 @@ def test_flags_clean_vs_boilerplate(spark):
     assert flags[2][0] is False and flags[2][1] >= 5
 
 
-def test_row_local_twin_matches_exploded(spark):
-    """The zero-shuffle sorted-run-fold twin (r14) is value-identical to
-    the exploded substrate — every column, including the float ratios
-    (same longs divided the same way) and the top-gram tie direction —
-    over hand-built edge cases and ugly fuzz corpora."""
+def test_substrate_matches_duckdb_fuzz(spark):
+    """The INTEGER substrate row-set vs a direct DuckDB rendering of the
+    fold's rep_sub CTE, over a hand-built edge-case corpus and seeded
+    ugly corpora."""
     from tests.test_dedup_fuzz import _corpus
 
-    def rowset(df):
-        return sorted(
-            (
-                r.doc_id, r.n, r.top_cnt, r.top_chars, r.dup_chars,
-                r.total_chars, r.top_char_frac, r.dup_char_frac,
-            )
-            for r in df.collect()
-        )
-
+    sql = f"""WITH {llm_sql.REP_CTES}
+    SELECT doc_id, n, top_cnt, top_chars, dup_chars, total_chars FROM rep_sub"""
     hand = [
         (1, "a b a b a b a b a b a b"),  # dominant bigram
         (2, "one two three"),            # rows only for n=2,3
@@ -83,25 +75,8 @@ def test_row_local_twin_matches_exploded(spark):
         (4, "zz aa zz aa zz bb zz aa"),  # count tie -> largest gram wins
         (5, " ".join(f"w{i}" for i in range(40))),  # all-distinct runs
     ]
-    rnd = random.Random(0xA14B)
-    corpora = [hand] + [_corpus(rnd, 60) for _ in range(2)]
-    for rows in corpora:
-        docs = spark.createDataFrame(rows, "doc_id long, text string")
-        got = rowset(R.repetition_ngram_substrate_local(docs))
-        want = rowset(R.repetition_ngram_substrate(docs))
-        assert got == want
-
-
-def test_substrate_matches_duckdb_fuzz(spark):
-    """Seeded fuzz: the INTEGER substrate row-set vs a direct DuckDB
-    rendering of the fold's rep_sub CTE over ugly corpora."""
-    from tests.test_dedup_fuzz import _corpus
-
-    sql = f"""WITH {llm_sql.REP_CTES}
-    SELECT doc_id, n, top_cnt, top_chars, dup_chars, total_chars FROM rep_sub"""
     rnd = random.Random(0x5EEDC)
-    for _trial in range(3):
-        rows = _corpus(rnd, 70)
+    for rows in [hand] + [_corpus(rnd, 70) for _ in range(3)]:
         docs = spark.createDataFrame(rows, "doc_id long, text string")
         got = sorted(
             (r.doc_id, r.n, r.top_cnt, r.top_chars, r.dup_chars, r.total_chars)

@@ -74,24 +74,33 @@ def test_short_null_empty_docs(spark):
     assert got[3].clean_text == "" and got[4].clean_text == ""
 
 
-def test_hot_safe_matches_window_form(spark):
+def test_verdicts_match_duckdb_window_form(spark):
+    """The grouped first-occurrence verdicts equal the DuckDB replay's
+    row_number window form (llm_sql.SPAN_DEDUP_CTES) row for row, on a
+    three-word vocabulary that makes every span hot."""
     rnd = random.Random(7)
     vocab = ["a", "b", "c"]
     rows = [
         (i, " ".join(rnd.choice(vocab) for _ in range(rnd.randrange(0, 30))))
         for i in range(80)
+    ] + [
+        # the first occurrence is the lower doc_id, not the lower pos
+        (100, "q q q q q q q q z z z z z z z z"),
+        (101, "z z z z z z z z"),
     ]
     docs = _df(spark, rows)
     cols = ["doc_id", "pos", "span", "keep", "n_occ"]
-    a = sorted(
-        map(tuple, SP.span_dedup_verdicts(docs, hot_safe=True).select(*cols).collect())
-    )
+    a = sorted(map(tuple, SP.span_dedup_verdicts(docs).select(*cols).collect()))
+    con = duckdb.connect()
+    con.execute("CREATE TABLE docs_aug (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO docs_aug VALUES (?, ?)", rows)
     b = sorted(
-        map(
-            tuple,
-            SP.span_dedup_verdicts(docs, hot_safe=False).select(*cols).collect(),
-        )
+        con.sql(
+            f"WITH {llm_sql.SPAN_DEDUP_CTES} SELECT doc_id, pos, span, keep_i = 1,"
+            " count(*) OVER (PARTITION BY span) FROM sp_verdicts"
+        ).fetchall()
     )
+    con.close()
     assert a == b
     assert any(not t[3] for t in a)  # tiny vocab guarantees removals
 
@@ -329,7 +338,10 @@ def test_cdc_dedup_differential_fuzz(spark):
         assert got == want
 
 
-def test_cdc_hot_safe_matches_window_form(spark):
+def test_cdc_matches_duckdb_window_form(spark):
+    """cdc_span_dedup's grouped first-occurrence verdicts equal the
+    DuckDB replay's row_number window form (llm_sql.cdc_dedup_sql) on a
+    three-word vocabulary that makes every segment hot."""
     rnd = random.Random(11)
     vocab = ["a", "b", "c"]
     rows = [
@@ -337,9 +349,8 @@ def test_cdc_hot_safe_matches_window_form(spark):
         for i in range(60)
     ]
     docs = _df(spark, rows)
-    a = sorted(map(tuple, SP.cdc_span_dedup(docs, hot_safe=True).collect()))
-    b = sorted(map(tuple, SP.cdc_span_dedup(docs, hot_safe=False).collect()))
-    assert a == b
+    a = sorted(map(tuple, SP.cdc_span_dedup(docs).collect()))
+    assert a == sorted(_oracle(rows, llm_sql.cdc_dedup_sql()))
     assert any(t[2] > 0 for t in a)  # tiny vocab guarantees removals
 
 

@@ -2,7 +2,7 @@
 the noop sink, alternating A,B,A,B per lap so ambient drift hits both
 arms equally. Prints per-lap walls and the per-arm MIN.
 
-Usage: python tools/r14_ab.py <case> [laps]   (case: gopher|profile|semdedup)
+Usage: python tools/r14_ab.py <case> [laps]   (case: profile|semdedup)
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
 """
 
@@ -31,24 +31,7 @@ def main() -> None:
         spark.catalog.clearCache()
         staging.release_staged()
 
-    if case == "gopher":
-        from recon_spark.operators import repetition
-        from recon_spark.sources.tpch import load
-
-        def docs():
-            return load(spark, sf_dir, "documents").repartition(
-                spark.sparkContext.defaultParallelism
-            )
-
-        variants = {
-            "exploded": lambda: repetition.gopher_repetition_flags(
-                repetition.repetition_ngram_substrate(docs())
-            ),
-            "row_local": lambda: repetition.gopher_repetition_flags(
-                repetition.repetition_ngram_substrate_local(docs())
-            ),
-        }
-    elif case == "profile":
+    if case == "profile":
         # Shipped form = profile.profile_table (one-shot min_by argmax,
         # SortAggregate); experimental arm = the two-phase HashAggregate
         # + persisted value-count + broadcast tie-resolve form. Measured
@@ -140,75 +123,6 @@ def main() -> None:
             "sortagg_minby": lambda: profile.profile_table(li(), li().columns),
             "two_phase_hash": lambda: _profile_two_phase(li(), li().columns),
         }
-    elif case == "dsir":
-        # Shipped form = dsir.dsir_select over the r14 shuffle-free
-        # scoring projection (driver-collected bounded model + per-doc
-        # left fold); experimental arm = the former exploded
-        # (doc,bucket)-groupBy + broadcast-model-join + id-spine
-        # left-join weights feeding the same two-phase rank.
-        from recon_spark.operators import dsir, sampling
-        from recon_spark.sources.tpch import load
-
-        def _old_weights(raw, n_buckets, alpha, target_pred):
-            raw_feats = dsir.dsir_features(raw, n_buckets).persist()
-            t_counts = dsir.dsir_bucket_counts(raw_feats.filter(target_pred))
-            r_counts = dsir.dsir_bucket_counts(raw_feats)
-            t_total = t_counts.agg(F.sum("cnt").alias("__tt"))
-            r_total = r_counts.agg(F.sum("cnt").alias("__rt"))
-            model = (
-                r_counts.withColumnRenamed("cnt", "r_cnt")
-                .join(t_counts.withColumnRenamed("cnt", "t_cnt"), "bucket", "full")
-                .crossJoin(F.broadcast(t_total))
-                .crossJoin(F.broadcast(r_total))
-                .select(
-                    "bucket",
-                    (
-                        F.log(
-                            (F.coalesce(F.col("t_cnt"), F.lit(0)) + F.lit(alpha))
-                            / (F.col("__tt") + F.lit(alpha * n_buckets))
-                        )
-                        - F.log(
-                            (F.coalesce(F.col("r_cnt"), F.lit(0)) + F.lit(alpha))
-                            / (F.col("__rt") + F.lit(alpha * n_buckets))
-                        )
-                    ).alias("log_ratio"),
-                )
-            )
-            scored = (
-                raw_feats.join(F.broadcast(model), "bucket")
-                .groupBy("doc_id")
-                .agg(
-                    F.sum("cnt").cast("long").alias("n_feats"),
-                    F.sum(F.col("cnt") * F.col("log_ratio")).alias("log_weight"),
-                )
-            )
-            base = raw.select("doc_id")
-            return base.join(scored, "doc_id", "left").select(
-                "doc_id",
-                F.coalesce("n_feats", F.lit(0)).cast("long").alias("n_feats"),
-                F.coalesce("log_weight", F.lit(0.0)).alias("log_weight"),
-            )
-
-        def _setup():
-            base = load(spark, sf_dir, "documents")
-            docs = base.repartition(spark.sparkContext.defaultParallelism)
-            k = max(base.count() // 10, 1)
-            pred = sampling.hash_bucket(F.col("doc_id")) < sampling.TRAIN_EDGE
-            return docs, k, pred
-
-        def new_form():
-            docs, k, pred = _setup()
-            return dsir.dsir_select(docs, None, k=k, target_pred=pred)
-
-        def old_form():
-            # old weights + the SAME two-phase rank (dsir_select's
-            # weights= hook), so the A/B isolates the scoring strategy
-            docs, k, pred = _setup()
-            w = _old_weights(docs, dsir.DSIR_BUCKETS, dsir.DSIR_ALPHA, pred)
-            return dsir.dsir_select(docs, None, k=k, weights=w)
-
-        variants = {"old_weights_winrank": old_form, "new_rowlocal": new_form}
-
     elif case == "semdedup":
         from recon_spark.operators import semdedup
         from recon_spark.registry import emb_aug
