@@ -181,6 +181,16 @@ HEADLINE = [
     "langid_rank",
 ]
 
+#: ambient-load gate: before the run and at each lap boundary, wait up
+#: to LOADAVG_WAIT_S for the 1-min loadavg to fall below LOADAVG_GATE
+LOADAVG_GATE = 4.0
+LOADAVG_WAIT_S = 90.0
+#: a lap's sample is dropped from the steady min when external CPU
+#: exceeded this many cores during that query
+EXT_GATE_CORES = 4.0
+#: interleaved full laps (the first is the cold lap)
+LAPS = 2
+
 
 def _q_langid_rank(spark, sf_dir):
     from recon_spark.operators import langid as LID
@@ -608,24 +618,22 @@ def main() -> None:
     # loadavg to fall below the gate before starting; if it never does,
     # proceed but FLAG the artifact as contended so no future diff
     # mistakes ambient noise for a regression.
-    gate_thresh = float(os.environ.get("SPARK_GRAFT_LOADAVG_GATE", "4.0"))
-    gate_wait = float(os.environ.get("SPARK_GRAFT_LOADAVG_WAIT", "90"))
     waited = 0.0
     start_load = os.getloadavg()[0]
-    while start_load > gate_thresh and waited < gate_wait:
+    while start_load > LOADAVG_GATE and waited < LOADAVG_WAIT_S:
         time.sleep(10)
         waited += 10.0
         start_load = os.getloadavg()[0]
     ambient_gate = {
-        "threshold": gate_thresh,
+        "threshold": LOADAVG_GATE,
         "waited_sec": round(waited, 1),
         "loadavg_at_start": round(start_load, 2),
-        "contended": start_load > gate_thresh,
+        "contended": start_load > LOADAVG_GATE,
     }
     if ambient_gate["contended"]:
         print(
             f"bench: ambient loadavg {start_load:.1f} still > gate "
-            f"{gate_thresh} after {waited:.0f}s — run flagged contended",
+            f"{LOADAVG_GATE} after {waited:.0f}s — run flagged contended",
             file=sys.stderr,
         )
 
@@ -728,7 +736,7 @@ def main() -> None:
     # 1.41s in a quieter same-code sweep). Interleaving separates a
     # query's executions by a full suite pass (~1 min+), so a spike must
     # persist across the whole run to survive the min.
-    laps_n = max(2, int(os.environ.get("SPARK_GRAFT_BENCH_LAPS", "2")))
+
     # attribution subset (r14): SPARK_GRAFT_BENCH_ONLY=q1,q2,... runs
     # only the named entries — built to test suite-LENGTH effects (the
     # steady min over interleaved laps sees more page-cache/JIT churn
@@ -752,13 +760,12 @@ def main() -> None:
     # sample for a query is rejected from the steady min when external
     # load exceeded the gate DURING THAT QUERY; if every lap was
     # contended the min over all laps is kept and accepted=0 says so.
-    ext_gate_cores = float(os.environ.get("SPARK_GRAFT_BENCH_EXT_GATE", "4.0"))
     lap_times: list[dict[str, float]] = []
     lap_loads: list[dict[str, float]] = []
     lap_exts: list[dict[str, float]] = []
     lap_gates: list[dict[str, float | bool]] = []
     errors: dict[str, str] = {}
-    for _lap in range(laps_n):
+    for _lap in range(LAPS):
         # r11 (VERDICT r10 #6): the gate held only at RUN start, but
         # r10's laps ran under loadavg 4.3-6.1 that arrived mid-run —
         # re-hold the same bounded gate at each LAP boundary so a spike
@@ -774,11 +781,11 @@ def main() -> None:
         # level; self-load roughly halves per minute of idle wait).
         lap_wait = 0.0
         first_load = lap_load = os.getloadavg()[0]
-        while lap_load > gate_thresh and lap_wait < gate_wait:
+        while lap_load > LOADAVG_GATE and lap_wait < LOADAVG_WAIT_S:
             time.sleep(10)
             lap_wait += 10.0
             lap_load = os.getloadavg()[0]
-        lap_contended = lap_load > gate_thresh and lap_load >= first_load * 0.7
+        lap_contended = lap_load > LOADAVG_GATE and lap_load >= first_load * 0.7
         lap_gates.append(
             {
                 "waited_sec": round(lap_wait, 1),
@@ -790,7 +797,7 @@ def main() -> None:
         if lap_contended:
             print(
                 f"bench: lap {_lap} starting contended "
-                f"(loadavg {lap_load:.1f} > gate {gate_thresh} "
+                f"(loadavg {lap_load:.1f} > gate {LOADAVG_GATE} "
                 f"after {lap_wait:.0f}s wait, not decaying)",
                 file=sys.stderr,
             )
@@ -840,7 +847,7 @@ def main() -> None:
             for lt, le in zip(lap_times, lap_exts)
             if name in lt
         ]
-        ok = [t for t, e in samples if e is not None and e <= ext_gate_cores]
+        ok = [t for t, e in samples if e is not None and e <= EXT_GATE_CORES]
         timings[name] = min(ok) if ok else min(t for t, _ in samples)
         accepted_laps[name] = len(ok)
     # driver-JVM JIT compile time over the whole run (session start to
@@ -872,7 +879,7 @@ def main() -> None:
         "sf": sf,
         "setup_raw_sec": setup_raw_sec,
         "setup_clean_sec": setup_clean_sec,
-        "timing": f"cold_lap_plus_min_of_{laps_n}_interleaved",
+        "timing": f"cold_lap_plus_min_of_{LAPS}_interleaved",
         # secondary: per-query min across all interleaved laps and its sum
         "steady_queries": timings,
         "steady_total_sec": total_steady,
@@ -885,7 +892,7 @@ def main() -> None:
         # and how many lap samples survived the per-query gate into the
         # steady min (VERDICT r11 #8)
         "ext_cores_laps": lap_exts,
-        "ext_gate_cores": ext_gate_cores,
+        "ext_gate_cores": EXT_GATE_CORES,
         "steady_accepted_laps": accepted_laps,
         "ambient_gate": {**ambient_gate, "lap_gates": lap_gates},
         # which code and config produced the numbers

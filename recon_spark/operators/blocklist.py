@@ -32,6 +32,7 @@ import re
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.checksum import certificate
 from .text import TOKEN_SPLIT_RE, tokens
 
 #: neutral demo list over the fixture vocabulary (single + multi-token
@@ -180,20 +181,12 @@ def blocklist_parity(
     bl_ck)``; the oracle recomputes tokenization, every slice-equality
     count and the joined hit-term strings from scratch
     (plans_sql.blocklist_parity_ctes)."""
-    from .dedup import _hash32
-
-    v = blocklist_verdicts(docs, phrases)
-    ck = _hash32(
-        F.concat_ws(
-            "|",
-            F.col("doc_id").cast("string"),
-            F.col("n_hits").cast("string"),
-            F.col("n_hit_terms").cast("string"),
-            F.col("hit").cast("string"),
-            F.coalesce(F.col("hit_terms"), F.lit("~")),
-        )
-    )
-    return v.agg(
-        F.count(F.lit(1)).cast("long").alias("n_bl_rows"),
-        F.coalesce(F.sum(ck), F.lit(0)).cast("long").alias("bl_ck"),
+    return certificate(
+        blocklist_verdicts(docs, phrases),
+        "bl",
+        "doc_id",
+        "n_hits",
+        "n_hit_terms",
+        "hit",
+        F.coalesce(F.col("hit_terms"), F.lit("~")),
     )

@@ -11,7 +11,7 @@ fraction, never under-dropping.
 
 Portable determinism: probe ``j`` of key ``x`` is
 ``hash32(x || '#j') mod n_bits`` with the repo's md5-based
-:func:`recon_spark.operators.dedup._hash32` — the identical filter
+:func:`recon_spark.functions.checksum.hash32` — the identical filter
 rebuilds in any engine with md5 (the DuckDB oracle and the
 differential fuzz do), unlike library Blooms seeded with
 process-local hashes.
@@ -45,7 +45,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import _hash32
+from ..functions.checksum import hash32
 
 #: the 64 single-bit long masks (bit 63 is the sign bit -> stored as
 #: the negative two's-complement value; bit tests use != 0, never >)
@@ -67,7 +67,7 @@ BLOOM_HASHES = 3
 
 def _probe_positions(key: Column, n_bits: int, n_hashes: int) -> list[Column]:
     return [
-        _hash32(F.concat(key.cast("string"), F.lit(f"#{j}"))) % n_bits
+        hash32(F.concat(key.cast("string"), F.lit(f"#{j}"))) % n_bits
         for j in range(n_hashes)
     ]
 

@@ -60,8 +60,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.checksum import row_ck
 from . import text as T
-from .dedup import _hash32
 
 #: terminal word-boundary symbol (the paper's ``</w>``). Tokens are
 #: lowercase alnum (text.TOKEN_SPLIT_RE strips everything else), so the
@@ -356,13 +356,10 @@ def histogram_parity(hist: DataFrame) -> DataFrame:
     ``tokenizer_pair_counts`` row so the oracle pins the histogram too,
     not just the pair rollup): ``(n_dist_words, total_words,
     hist_ck)``."""
-    ck = _hash32(
-        F.concat_ws("|", F.col("word"), F.col("n").cast("string"))
-    )
     return hist.agg(
         F.count(F.lit(1)).cast("long").alias("n_dist_words"),
         F.coalesce(F.sum("n"), F.lit(0)).cast("long").alias("total_words"),
-        F.coalesce(F.sum(ck), F.lit(0)).cast("long").alias("hist_ck"),
+        F.coalesce(F.sum(row_ck("word", "n")), F.lit(0)).cast("long").alias("hist_ck"),
     )
 
 def pair_counts_parity(hist: DataFrame) -> DataFrame:
@@ -371,16 +368,8 @@ def pair_counts_parity(hist: DataFrame) -> DataFrame:
     oracle recomputes every pair row from its own histogram + symbol
     split, so tokenization, the ``</w>`` marker and the weighted
     overlap-inclusive counting must all match for the sum to agree."""
-    pc = pair_counts(hist)
-    ck = _hash32(
-        F.concat_ws(
-            "|",
-            F.col("sym_a"),
-            F.col("sym_b"),
-            F.col("pair_count").cast("string"),
-        )
-    )
-    return pc.agg(
+    ck = row_ck("sym_a", "sym_b", "pair_count")
+    return pair_counts(hist).agg(
         F.count(F.lit(1)).cast("long").alias("n_bpe_pairs"),
         F.coalesce(F.sum(ck), F.lit(0)).cast("long").alias("bpe_pairs_ck"),
     )

@@ -33,6 +33,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import staging
+from ..functions.checksum import hash32
 from . import text as T
 
 N_MINHASH = 12
@@ -45,7 +46,6 @@ def exact_dedup(
     df: DataFrame,
     key: Column,
     order_cols: list[str],
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Keep one row per ``key``; deterministic winner via ``order_cols``
     (which must be a TOTAL order within each key group — the callers
@@ -812,11 +812,6 @@ def verify_candidates(
     return out.select("id_a", "id_b", "est_jaccard", "jaccard")
 
 
-def _hash32(c: Column) -> Column:
-    """First 8 md5 hex chars as a 32-bit unsigned int (engine-portable)."""
-    return F.conv(F.substring(F.md5(c), 1, 8), 16, 10).cast("long")
-
-
 def simhash_from_hashes(hashes: Column, bits: int = SIMHASH_BITS) -> Column:
     """SimHash over an already-materialized token-hash array column: bit j
     of the result is set iff more than half the tokens have bit j set.
@@ -841,7 +836,7 @@ def simhash_from_hashes(hashes: Column, bits: int = SIMHASH_BITS) -> Column:
 def simhash(col: Column | str, bits: int = SIMHASH_BITS) -> Column:
     """Inline convenience form for tiny frames/tests — hot paths must
     stage the hash array and use :func:`simhash_from_hashes`."""
-    return simhash_from_hashes(F.transform(T.tokens(col), _hash32), bits)
+    return simhash_from_hashes(F.transform(T.tokens(col), hash32), bits)
 
 
 def with_simhash(
@@ -856,7 +851,7 @@ def with_simhash(
     battery's one tokenize pass into this fold too)."""
     toks = F.col(tokens_col) if tokens_col else T.tokens(text_col)
     return (
-        df.withColumn("__th", F.transform(toks, _hash32))
+        df.withColumn("__th", F.transform(toks, hash32))
         .withColumn(out, simhash_from_hashes(F.col("__th"), bits))
         .drop("__th")
     )

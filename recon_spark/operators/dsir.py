@@ -11,8 +11,9 @@ The paper's recipe, re-expressed Spark-first:
 1. **Features** — unigrams + bigrams hashed into ``n_buckets`` buckets
    (the paper uses hashed n-grams precisely so the feature space is
    fixed-size and the models are two count vectors, not vocabularies).
-   Here the hash is the repo-standard md5-derived :func:`~.dedup._hash32`
-   so the DuckDB oracle replays bucket assignment bit-for-bit.
+   Here the hash is the repo-standard md5-derived
+   :func:`~recon_spark.functions.checksum.hash32` so the DuckDB oracle
+   replays bucket assignment bit-for-bit.
 2. **Models** — unigram bag models over buckets with Laplace smoothing
    ``alpha``: ``p(f) = (count_f + alpha) / (total + alpha * n_buckets)``.
    Each model is at most ``n_buckets`` rows -> broadcast.
@@ -50,8 +51,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import staging
+from ..functions.checksum import hash32
 from . import text as T
-from .dedup import _hash32
 
 #: feature-space size: the paper uses 10k hashed buckets; 4096 keeps
 #: the broadcast tables trivially small while leaving the fixture
@@ -90,7 +91,7 @@ def dsir_features(
         .select("doc_id", F.explode("__f").alias("feat"))
     )
     return (
-        exploded.withColumn("bucket", (_hash32(F.col("feat")) % n_buckets).cast("int"))
+        exploded.withColumn("bucket", (hash32(F.col("feat")) % n_buckets).cast("int"))
         .groupBy("doc_id", "bucket")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     )
@@ -176,7 +177,7 @@ def dsir_log_weights(
         raw_docs.select(
             F.col(id_col).alias("doc_id"),
             F.transform(
-                feats, lambda x: (_hash32(x) % n_buckets).cast("int")
+                feats, lambda x: (hash32(x) % n_buckets).cast("int")
             ).alias("__b"),
         )
     )
@@ -214,7 +215,7 @@ def dsir_log_weights(
             .filter(F.col("__f").isNotNull())
             .select(F.explode("__f").alias("feat"))
             .groupBy(
-                (_hash32(F.col("feat")) % n_buckets).cast("int").alias("bucket")
+                (hash32(F.col("feat")) % n_buckets).cast("int").alias("bucket")
             )
             .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
             .collect()

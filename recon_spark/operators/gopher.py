@@ -53,6 +53,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.checksum import certificate
 from ..functions.normalizers import _c
 from .lines import WS_CLASS
 from .text import tokens
@@ -254,17 +255,8 @@ def gopher_parity(docs: DataFrame, text_col: str = "text") -> DataFrame:
     ``(n_gq_rows, gq_ck)`` covering every counter, micros ratio and
     verdict; the DuckDB oracle recomputes all of it from the raw text
     (llm_sql.gopher_ctes)."""
-    from .dedup import _hash32
-
-    g = gopher_quality(docs, text_col)
-    parts = [F.col("doc_id").cast("string")]
-    for c in GOPHER_COLUMNS:
-        if c.endswith("_micros"):
-            parts.append(F.coalesce(F.col(c), F.lit(-1)).cast("string"))
-        else:
-            parts.append(F.col(c).cast("string"))
-    ck = _hash32(F.concat_ws("|", *parts))
-    return g.agg(
-        F.count(F.lit(1)).cast("long").alias("n_gq_rows"),
-        F.coalesce(F.sum(ck), F.lit(0)).cast("long").alias("gq_ck"),
-    )
+    parts = [
+        F.coalesce(F.col(c), F.lit(-1)) if c.endswith("_micros") else c
+        for c in GOPHER_COLUMNS
+    ]
+    return certificate(gopher_quality(docs, text_col), "gq", "doc_id", *parts)

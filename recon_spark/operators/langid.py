@@ -43,6 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.checksum import certificate
 from .text import tokens
 
 LANGID_NGRAM_MAX = 3
@@ -253,14 +254,5 @@ def langid_parity(docs: DataFrame, k: int = LANGID_PROFILE_K) -> DataFrame:
     """1-row checksum frame over the FULL verdict table — ``(n_lid_rows,
     lid_ck)``; the oracle replays split, padding, gram explosion, both
     rankings, penalties and the argmin (llm_sql.langid_ctes)."""
-    from .dedup import _hash32
-
-    v = langid_verdicts(docs, k=k)
-    parts = [F.col("doc_id").cast("string")] + [
-        F.coalesce(F.col(c).cast("string"), F.lit("~")) for c in LANGID_COLUMNS
-    ]
-    ck = _hash32(F.concat_ws("|", *parts))
-    return v.agg(
-        F.count(F.lit(1)).cast("long").alias("n_lid_rows"),
-        F.coalesce(F.sum(ck), F.lit(0)).cast("long").alias("lid_ck"),
-    )
+    parts = [F.coalesce(F.col(c).cast("string"), F.lit("~")) for c in LANGID_COLUMNS]
+    return certificate(langid_verdicts(docs, k=k), "lid", "doc_id", *parts)

@@ -45,6 +45,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.checksum import certificate
 from ..functions.normalizers import WS, _c
 
 #: C4's terminal punctuation marks: period, exclamation, question,
@@ -142,40 +143,28 @@ def dedup_paragraphs(
         .alias("n_dupes"),
     )
 
-def _ck(*cols: Column) -> Column:
-    from .dedup import _hash32
-
-    return _hash32(F.concat_ws("|", *cols))
-
-
 def c4_parity(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """1-row checksum frame over the full C4 line-filter verdict table
     (the data_sample_stratified fold): ``(n_c4_rows, c4_ck)``."""
-    v = c4_line_filter(docs, id_col, text_col)
-    ck = _ck(
-        F.col(id_col).cast("string"),
+    return certificate(
+        c4_line_filter(docs, id_col, text_col),
+        "c4",
+        id_col,
         F.md5(F.coalesce(F.col("clean_text"), F.lit("\x00"))),
-        F.coalesce(F.col("n_lines"), F.lit(-1)).cast("string"),
-        F.coalesce(F.col("n_kept"), F.lit(-1)).cast("string"),
-        F.col("dropped").cast("string"),
-    )
-    return v.agg(
-        F.count(F.lit(1)).cast("long").alias("n_c4_rows"),
-        F.coalesce(F.sum(ck), F.lit(0)).cast("long").alias("c4_ck"),
+        F.coalesce(F.col("n_lines"), F.lit(-1)),
+        F.coalesce(F.col("n_kept"), F.lit(-1)),
+        "dropped",
     )
 
 
 def para_parity(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """1-row checksum frame over the full within-doc paragraph-dedup
     verdict table: ``(n_para_rows, para_ck)``."""
-    v = dedup_paragraphs(docs, id_col, text_col)
-    ck = _ck(
-        F.col(id_col).cast("string"),
+    return certificate(
+        dedup_paragraphs(docs, id_col, text_col),
+        "para",
+        id_col,
         F.md5(F.coalesce(F.col("clean_text"), F.lit("\x00"))),
-        F.coalesce(F.col("n_paras"), F.lit(-1)).cast("string"),
-        F.coalesce(F.col("n_dupes"), F.lit(-1)).cast("string"),
-    )
-    return v.agg(
-        F.count(F.lit(1)).cast("long").alias("n_para_rows"),
-        F.coalesce(F.sum(ck), F.lit(0)).cast("long").alias("para_ck"),
+        F.coalesce(F.col("n_paras"), F.lit(-1)),
+        F.coalesce(F.col("n_dupes"), F.lit(-1)),
     )

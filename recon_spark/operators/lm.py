@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import staging
+from ..functions.checksum import certificate
 from . import text as T
 
 #: sentence-start pseudo-token (cannot collide: real tokens never hold a
@@ -436,28 +437,20 @@ def kn_parity(
     never trains on plants, so the unseen-bigram / unseen-context /
     unseen-continuation branches all fire at any SF instead of being
     certified vacuously (tests/test_lm.py asserts it)."""
-    from ..operators.dedup import _hash32
-
-    sub = kn_graded_substrate(docs, id_col=id_col, text_col=text_col)
-    ck = _hash32(
-        F.concat_ws(
-            "|",
-            F.col(id_col).cast("string"),
-            F.col("kn_n_scored").cast("string"),
-            F.col("kn_sum_c2").cast("string"),
-            F.col("kn_unseen_bigrams").cast("string"),
-            F.col("kn_sum_c1").cast("string"),
-            F.col("kn_unseen_contexts").cast("string"),
-            F.col("kn_sum_n1f").cast("string"),
-            F.col("kn_sum_n1b").cast("string"),
-            F.col("kn_unseen_cont").cast("string"),
-            F.col("kn_t_types").cast("string"),
-            F.col("kn_n1").cast("string"),
-            F.col("kn_n2").cast("string"),
-            F.col("kn_v").cast("string"),
-        )
-    )
-    return sub.agg(
-        F.count(F.lit(1)).cast("long").alias("n_kn_rows"),
-        F.coalesce(F.sum(ck), F.lit(0)).cast("long").alias("kn_ck"),
+    return certificate(
+        kn_graded_substrate(docs, id_col=id_col, text_col=text_col),
+        "kn",
+        id_col,
+        "kn_n_scored",
+        "kn_sum_c2",
+        "kn_unseen_bigrams",
+        "kn_sum_c1",
+        "kn_unseen_contexts",
+        "kn_sum_n1f",
+        "kn_sum_n1b",
+        "kn_unseen_cont",
+        "kn_t_types",
+        "kn_n1",
+        "kn_n2",
+        "kn_v",
     )

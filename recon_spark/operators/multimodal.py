@@ -26,6 +26,8 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.checksum import certificate
+
 FEATURE_DIM = 8
 
 #: output schema of the feature-extraction stage
@@ -234,19 +236,5 @@ def phash_parity(docs: DataFrame) -> DataFrame:
     ``(n_ph_rows, ph_ck)``; the oracle recomputes stripe features,
     all 28 comparison bits, keeper assignment and the dup flag from raw
     text (llm_sql phash CTEs on the frame-sample row)."""
-    from .dedup import _hash32
-
     v = phash_dedup(extract_features(attach_binary(docs)))
-    ck = _hash32(
-        F.concat_ws(
-            "|",
-            F.col("id").cast("string"),
-            F.col("ph").cast("string"),
-            F.col("keeper_id").cast("string"),
-            F.col("is_dup").cast("string"),
-        )
-    )
-    return v.agg(
-        F.count(F.lit(1)).cast("long").alias("n_ph_rows"),
-        F.coalesce(F.sum(ck), F.lit(0)).cast("long").alias("ph_ck"),
-    )
+    return certificate(v, "ph", "id", "ph", "keeper_id", "is_dup")

@@ -45,6 +45,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.checksum import certificate
+
 
 def profile_table(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     """Exact per-column profile: ``(column, n_rows, n_null, n_distinct,
@@ -124,25 +126,18 @@ def profile_parity(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     prof_ck) covering every column's complete stat row. Rides a graded
     host (the zero-slot fold convention); the oracle recomputes the
     whole profile from scratch (plans_sql.profile_parity_ctes)."""
-    from .dedup import _hash32
-
     z = F.lit("\x00")  # null sentinel (chr(0), the folds' convention)
-    ck = _hash32(
-        F.concat_ws(
-            "|",
-            F.col("column"),
-            F.col("n_rows").cast("string"),
-            F.col("n_null").cast("string"),
-            F.col("n_distinct").cast("string"),
-            F.coalesce(F.col("min_value"), z),
-            F.coalesce(F.col("max_value"), z),
-            F.coalesce(F.col("top_value"), z),
-            F.col("top_value_n").cast("string"),
-        )
-    )
-    return profile_table(df, cols).agg(
-        F.count(F.lit(1)).cast("long").alias("n_prof_rows"),
-        F.coalesce(F.sum(ck), F.lit(0)).cast("long").alias("prof_ck"),
+    return certificate(
+        profile_table(df, cols),
+        "prof",
+        "column",
+        "n_rows",
+        "n_null",
+        "n_distinct",
+        F.coalesce(F.col("min_value"), z),
+        F.coalesce(F.col("max_value"), z),
+        F.coalesce(F.col("top_value"), z),
+        "top_value_n",
     )
 
 
@@ -242,19 +237,11 @@ def histogram_parity(
     bit-identical to the two-phase rank by the analytics_value_
     percentiles row) and replays membership + counts
     (plans_sql.histogram_parity_ctes)."""
-    from .dedup import _hash32
-
-    h = profile_histogram(df, numeric_cols, k)
-    ck = _hash32(
-        F.concat_ws(
-            "|",
-            F.col("col_name"),
-            F.col("bucket").cast("string"),
-            F.coalesce(F.col("hi_micros"), F.lit(-1)).cast("string"),
-            F.col("n").cast("string"),
-        )
-    )
-    return h.agg(
-        F.count(F.lit(1)).cast("long").alias("n_hist_rows"),
-        F.coalesce(F.sum(ck), F.lit(0)).cast("long").alias("hist_ck"),
+    return certificate(
+        profile_histogram(df, numeric_cols, k),
+        "hist",
+        "col_name",
+        "bucket",
+        F.coalesce(F.col("hi_micros"), F.lit(-1)),
+        "n",
     )

@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import staging
+from ..functions.checksum import certificate, hash32
 
 SPLIT_SALT = "split:v1"
 
@@ -38,9 +39,7 @@ def hash_bucket(id_col: Column | str, salt: str = SPLIT_SALT) -> Column:
     """First 8 md5 hex chars of ``salt || id`` as a uint32-ranged long —
     the uniform deterministic coin every operator here flips."""
     c = F.col(id_col) if isinstance(id_col, str) else id_col
-    return F.conv(
-        F.substring(F.md5(F.concat(F.lit(salt), c.cast("string"))), 1, 8), 16, 10
-    ).cast("long")
+    return hash32(F.concat(F.lit(salt), c.cast("string")))
 
 
 def with_split(
@@ -390,22 +389,10 @@ def pps_parity(
     the dsir/qclf/bpe convention); the DuckDB oracle recomputes the
     keys, the selection, the rank order and the inclusion probabilities
     from scratch (llm_sql.pps_parity_ctes)."""
-    from .dedup import _hash32
-
     sel = pps_sample(docs.select(F.col(id_col), weight_expr.alias("__w")), "__w", k,
                      id_col=id_col, salt=salt)
-    ck = _hash32(
-        F.concat_ws(
-            "|",
-            F.col("id").cast("string"),
-            F.col("weight").cast("long").cast("string"),
-            F.col("rank").cast("string"),
-            F.col("p_micros").cast("string"),
-        )
-    )
-    return sel.agg(
-        F.count(F.lit(1)).cast("long").alias("n_pps_rows"),
-        F.coalesce(F.sum(ck), F.lit(0)).cast("long").alias("pps_ck"),
+    return certificate(
+        sel, "pps", "id", F.col("weight").cast("long"), "rank", "p_micros"
     )
 
 

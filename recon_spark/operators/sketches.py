@@ -59,6 +59,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import staging
+from ..functions.checksum import attach, certificate, hash32, row_ck
 
 #: default DataSketches lgConfigK: 2^12 registers, ~1.6% rel. error
 HLL_LGK = 12
@@ -453,17 +454,12 @@ def cm_cells(
     bounded). NULL items are skipped (the count_distinct convention);
     ``weight_col`` turns occurrence counting into weighted totals.
     """
-    from .dedup import _hash32
-
     src = _cm_item(df, item_col, weight_col)
     probes = F.array(
         *[
             F.struct(
                 F.lit(r).cast("int").alias("row"),
-                (
-                    _hash32(F.concat(F.lit(f"cm{r}#"), F.col("__item")))
-                    % width
-                )
+                (hash32(F.concat(F.lit(f"cm{r}#"), F.col("__item"))) % width)
                 .cast("int")
                 .alias("bucket"),
             )
@@ -504,8 +500,6 @@ def cm_point_estimates(
     0). The cells frame is bounded (<= depth*width rows) and broadcast;
     the probe fan-out is ``depth`` rows per query — no shuffle of
     anything corpus-sized."""
-    from .dedup import _hash32
-
     q = queries.filter(F.col(item_col).isNotNull()).select(
         F.col(item_col).cast("string").alias("__item")
     )
@@ -513,10 +507,7 @@ def cm_point_estimates(
         *[
             F.struct(
                 F.lit(r).cast("int").alias("row"),
-                (
-                    _hash32(F.concat(F.lit(f"cm{r}#"), F.col("__item")))
-                    % width
-                )
+                (hash32(F.concat(F.lit(f"cm{r}#"), F.col("__item"))) % width)
                 .cast("int")
                 .alias("bucket"),
             )
@@ -551,18 +542,9 @@ def cm_parity(
     not just the cell sums (plans_sql.cm_parity_ctes replays hashing,
     cell sums, the query sample, true counts and every min from
     scratch)."""
-    from .dedup import _hash32
-
     # both branches sit in this one plan, so exchange reuse shares the cells
     cells = cm_cells(df, item_col, depth, width)
-    cell_ck = _hash32(
-        F.concat_ws(
-            "|",
-            F.col("row").cast("string"),
-            F.col("bucket").cast("string"),
-            F.col("cnt").cast("string"),
-        )
-    )
+    cell_ck = row_ck("row", "bucket", "cnt")
     cell_parity = cells.agg(
         F.count(F.lit(1)).cast("long").alias("n_cm_cells"),
         F.coalesce(F.sum(cell_ck), F.lit(0)).cast("long").alias("cm_ck"),
@@ -570,7 +552,7 @@ def cm_parity(
     src = _cm_item(df, item_col, None)
     truth = (
         src.filter(
-            _hash32(F.concat(F.lit("cmq#"), F.col("__item"))) % query_mod == 0
+            hash32(F.concat(F.lit("cmq#"), F.col("__item"))) % query_mod == 0
         )
         .groupBy(F.col("__item").alias("item"))
         .agg(F.count(F.lit(1)).cast("long").alias("true_cnt"))
@@ -582,17 +564,5 @@ def cm_parity(
         "est",
         (F.col("est") - F.col("true_cnt")).alias("overcount"),
     )
-    v_ck = _hash32(
-        F.concat_ws(
-            "|",
-            F.col("item"),
-            F.col("true_cnt").cast("string"),
-            F.col("est").cast("string"),
-            F.col("overcount").cast("string"),
-        )
-    )
-    v_parity = verdicts.agg(
-        F.count(F.lit(1)).cast("long").alias("n_cmq_rows"),
-        F.coalesce(F.sum(v_ck), F.lit(0)).cast("long").alias("cmq_ck"),
-    )
-    return cell_parity.crossJoin(F.broadcast(v_parity))
+    v_parity = certificate(verdicts, "cmq", "item", "true_cnt", "est", "overcount")
+    return attach(cell_parity, v_parity)

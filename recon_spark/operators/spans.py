@@ -55,11 +55,11 @@ entry with an oracle on the documents table").
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.checksum import hash32
 from . import text as T
-from .dedup import _hash32
 
 #: default window width (tokens); 8 keeps multi-window docs common on
 #: the 10-100-token fixture documents
@@ -277,7 +277,6 @@ def cdc_spans(
     p: int = CDC_P,
     id_col: str = "doc_id",
     text_col: str = "text",
-    method: str = "fold",
 ) -> DataFrame:
     """(doc_id, pos, span): CONTENT-DEFINED segments — a token closes a
     segment when ``hash32(token) % p == 0`` (the rolling-hash breakpoint
@@ -293,87 +292,57 @@ def cdc_spans(
     block always align; only the partial head/tail segments at the
     block's edges differ — the standard CDC guarantee).
 
-    Two value-identical physical forms (asserted in tests):
-
-    - ``method='fold'`` (default): ONE narrow per-doc segment build —
-      no token-row explode, no per-doc window shuffle. Measured 2.6s ->
-      ~0.5s for the grading fold at sf0.1. Since round 11 (ADVICE r10)
-      the build is LINEAR in doc length: breakpoint positions via
-      ``transform``+``filter``, then one ``zip_with(starts, ends)`` of
-      ``slice``+``array_join`` — total element copies are O(n_tokens),
-      vs the old per-token ``concat(acc, array(t))`` accumulate whose
-      array copying was O(n_tokens²) per doc (a single 100k-token doc
-      implied ~10^10 copies on one task; now it's one pass).
-    - ``method='window'``: token posexplode + running-count window
-      partitioned by doc + (doc, seg) groupBy — the obvious relational
-      form the DuckDB oracle mirrors; degrades via shuffle rather than
-      per-task compute for pathological single-document lengths.
+    ONE narrow per-doc segment build — no token-row explode, no per-doc
+    window shuffle. Measured 2.6s -> ~0.5s for the grading fold at
+    sf0.1 against the token posexplode + running-count window form.
+    Since round 11 (ADVICE r10) the build is LINEAR in doc length:
+    breakpoint positions via ``transform``+``filter``, then one
+    ``zip_with(starts, ends)`` of ``slice``+``array_join`` — total
+    element copies are O(n_tokens), vs the old per-token
+    ``concat(acc, array(t))`` accumulate whose array copying was
+    O(n_tokens²) per doc (a single 100k-token doc implied ~10^10 copies
+    on one task; now it's one pass). The relational window form lives
+    on as the DuckDB oracle's ``cdc_spans`` CTE
+    (``llm_sql.cdc_parity_ctes``), which tests compare this build
+    against.
     """
     toked = docs.select(
         F.col(id_col).alias("doc_id"), T.tokens(text_col).alias("__toks")
     ).filter(F.col("__toks").isNotNull())
-    if method == "fold":
-        toks = F.col("__toks")
-        n = F.size(toks)
-        # 1-based positions of segment-closing tokens
-        closers = F.filter(
-            F.transform(
-                toks,
-                lambda t, i: F.when((_hash32(t) % p) == 0, i + 1).otherwise(
-                    F.lit(-1)
-                ),
-            ),
-            lambda x: x >= 0,
-        )
-        # segment end positions, plus the open tail if the last token
-        # doesn't close a segment; empty docs emit no segments
-        ends = F.when(n == 0, F.array().cast("array<int>")).otherwise(
-            F.when(
-                (F.size(closers) == 0) | (F.element_at(closers, -1) != n),
-                F.concat(closers, F.array(n.cast("int"))),
-            ).otherwise(closers)
-        )
-        # staged column: `__ends` is referenced three times below
-        # (starts shift + zip_with), and as a column attribute it stays
-        # a per-row value — CollapseProject refuses to inline multi-use
-        # non-trivial expressions, so the breakpoint scan runs once
-        staged = toked.withColumn("__ends", ends)
-        starts = F.concat(
-            F.array(F.lit(0)),
-            F.slice(F.col("__ends"), 1, F.size(F.col("__ends")) - 1),
-        )
-        segs = F.zip_with(
-            F.when(F.size(F.col("__ends")) == 0, F.array().cast("array<int>"))
-            .otherwise(starts),
-            F.col("__ends"),
-            lambda s, e: F.array_join(F.slice(toks, s + 1, e - s), " "),
-        )
-        return staged.select(
-            "doc_id", F.posexplode(segs).alias("pos", "span")
-        )
-    tok = toked.select(
-        "doc_id", F.posexplode(F.col("__toks")).alias("idx", "tok")
+    toks = F.col("__toks")
+    n = F.size(toks)
+    # 1-based positions of segment-closing tokens
+    closers = F.filter(
+        F.transform(
+            toks,
+            lambda t, i: F.when((hash32(t) % p) == 0, i + 1).otherwise(F.lit(-1)),
+        ),
+        lambda x: x >= 0,
     )
-    brk = F.when((_hash32(F.col("tok")) % p) == 0, 1).otherwise(0)
-    w = (
-        Window.partitionBy("doc_id")
-        .orderBy("idx")
-        .rowsBetween(Window.unboundedPreceding, -1)
+    # segment end positions, plus the open tail if the last token
+    # doesn't close a segment; empty docs emit no segments
+    ends = F.when(n == 0, F.array().cast("array<int>")).otherwise(
+        F.when(
+            (F.size(closers) == 0) | (F.element_at(closers, -1) != n),
+            F.concat(closers, F.array(n.cast("int"))),
+        ).otherwise(closers)
     )
-    seg = F.coalesce(F.sum(brk).over(w), F.lit(0)).cast("int")
-    return (
-        tok.withColumn("pos", seg)
-        .groupBy("doc_id", "pos")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("idx", "tok"))),
-                    lambda s: s.getField("tok"),
-                ),
-                " ",
-            ).alias("span")
-        )
+    # staged column: `__ends` is referenced three times below
+    # (starts shift + zip_with), and as a column attribute it stays
+    # a per-row value — CollapseProject refuses to inline multi-use
+    # non-trivial expressions, so the breakpoint scan runs once
+    staged = toked.withColumn("__ends", ends)
+    starts = F.concat(
+        F.array(F.lit(0)),
+        F.slice(F.col("__ends"), 1, F.size(F.col("__ends")) - 1),
     )
+    segs = F.zip_with(
+        F.when(F.size(F.col("__ends")) == 0, F.array().cast("array<int>"))
+        .otherwise(starts),
+        F.col("__ends"),
+        lambda s, e: F.array_join(F.slice(toks, s + 1, e - s), " "),
+    )
+    return staged.select("doc_id", F.posexplode(segs).alias("pos", "span"))
 
 
 def cdc_span_dedup(

@@ -18,6 +18,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .. import staging
+from ..functions.checksum import certificate
 from ..functions.normalizers import WS, _c
 
 #: word-splitting pattern: runs of non-alphanumerics (BPE-ish baseline)
@@ -459,21 +460,8 @@ def bm25_parity(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     bm25_micros, rank) at the graded defaults — rides the
     text_tfidf_top_terms row (zero-slot fold); the oracle rederives the
     query terms, every score and the rank order from scratch."""
-    from .dedup import _hash32
-
     sel = bm25_topk(docs, id_col=id_col, text_col=text_col)
-    ck = _hash32(
-        F.concat_ws(
-            "|",
-            F.col(id_col).cast("string"),
-            F.col("bm25_micros").cast("string"),
-            F.col("rank").cast("string"),
-        )
-    )
-    return sel.agg(
-        F.count(F.lit(1)).cast("long").alias("n_bm25_rows"),
-        F.coalesce(F.sum(ck), F.lit(0)).cast("long").alias("bm25_ck"),
-    )
+    return certificate(sel, "bm25", id_col, "bm25_micros", "rank")
 
 
 def repetition_stats(toks: Column) -> tuple[Column, Column]:
@@ -790,25 +778,17 @@ def pmi_parity(docs: DataFrame, min_count: int = PMI_MIN_COUNT) -> DataFrame:
     pmi_ck) covering every pair's counts, totals and pmi_micros; the
     DuckDB oracle recomputes the bigram explode, both count tables and
     the pinned-order PMI from scratch (llm_sql.pmi_ctes)."""
-    from .dedup import _hash32
-
-    t = pmi_collocations(docs, min_count)
-    ck = _hash32(
-        F.concat_ws(
-            "|",
-            F.col("term_a"),
-            F.col("term_b"),
-            F.col("c_ab").cast("string"),
-            F.col("c_a").cast("string"),
-            F.col("c_b").cast("string"),
-            F.col("n_bigrams").cast("string"),
-            F.col("n_unigrams").cast("string"),
-            F.col("pmi_micros").cast("string"),
-        )
-    )
-    return t.agg(
-        F.count(F.lit(1)).cast("long").alias("n_pmi_rows"),
-        F.coalesce(F.sum(ck), F.lit(0)).cast("long").alias("pmi_ck"),
+    return certificate(
+        pmi_collocations(docs, min_count),
+        "pmi",
+        "term_a",
+        "term_b",
+        "c_ab",
+        "c_a",
+        "c_b",
+        "n_bigrams",
+        "n_unigrams",
+        "pmi_micros",
     )
 
 
@@ -916,20 +896,12 @@ def entropy_parity(docs: DataFrame) -> DataFrame:
     """1-row checksum frame over the FULL entropy table — ``(n_ent_rows,
     ent_ck)``; the oracle recomputes counts and the pinned fold from its
     own tf substrate (llm_sql entropy CTEs on the tfidf row)."""
-    from .dedup import _hash32
-
-    e = token_entropy(docs)
-    ck = _hash32(
-        F.concat_ws(
-            "|",
-            F.col("doc_id").cast("string"),
-            F.col("n_tokens").cast("string"),
-            F.col("n_types").cast("string"),
-            F.coalesce(F.col("h_micros"), F.lit(-1)).cast("string"),
-            F.coalesce(F.col("h_norm_micros"), F.lit(-1)).cast("string"),
-        )
-    )
-    return e.agg(
-        F.count(F.lit(1)).cast("long").alias("n_ent_rows"),
-        F.coalesce(F.sum(ck), F.lit(0)).cast("long").alias("ent_ck"),
+    return certificate(
+        token_entropy(docs),
+        "ent",
+        "doc_id",
+        "n_tokens",
+        "n_types",
+        F.coalesce(F.col("h_micros"), F.lit(-1)),
+        F.coalesce(F.col("h_norm_micros"), F.lit(-1)),
     )

@@ -43,7 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import _hash32
+from ..functions.checksum import certificate
 
 #: supported UAX#15 forms; NFC is the oracle-replayable one
 UNICODE_FORMS = ("NFC", "NFKC", "NFD", "NFKD")
@@ -108,17 +108,11 @@ def nfc_parity(
     data_contamination_check fold): ``(n_nfc_rows, nfc_ck)``. The
     oracle recomputes every row with DuckDB's ``nfc_normalize``, so the
     normalization itself — not just row counts — must agree."""
-    v = normalize_text(docs, "NFC", id_col, text_col)
-    ck = _hash32(
-        F.concat_ws(
-            "|",
-            F.col(id_col).cast("string"),
-            F.md5(F.coalesce(F.col("norm_text"), F.lit("\x00"))),
-            F.col("changed").cast("string"),
-            F.coalesce(F.col("n_chars_after"), F.lit(-1)).cast("string"),
-        )
-    )
-    return v.agg(
-        F.count(F.lit(1)).cast("long").alias("n_nfc_rows"),
-        F.coalesce(F.sum(ck), F.lit(0)).cast("long").alias("nfc_ck"),
+    return certificate(
+        normalize_text(docs, "NFC", id_col, text_col),
+        "nfc",
+        id_col,
+        F.md5(F.coalesce(F.col("norm_text"), F.lit("\x00"))),
+        "changed",
+        F.coalesce(F.col("n_chars_after"), F.lit(-1)),
     )

@@ -236,9 +236,9 @@ def near_miss_audit(
         cents("gross_amt").alias("cents_m"),
     )
     if plant_demos:
-        from ..operators.dedup import _hash32
+        from ..functions.checksum import hash32
 
-        mod = _hash32(F.col("ssn_r")) % 3
+        mod = hash32(F.col("ssn_r")) % 3
         swapped = F.concat(
             F.when(F.substring("ssn_r", 1, 1) == "9", F.lit("8")).otherwise(
                 F.lit("9")

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from . import staging
 from .engines import age_taxcode, ira_rollover, match_planid, roth_taxable
 from .functions import normalizers as N
+from .functions.checksum import attach, certificate, hash32, row_ck
 from .operators import cleaning
 from .oracles import engines_sql, sql
 from .oracles.cleaning_sql import PRELUDE
@@ -47,7 +48,7 @@ def _issues_joined(df: DataFrame) -> DataFrame:
     return df.withColumn("validation_issues", F.array_join("validation_issues", ";"))
 
 
-#: analyzed-PLAN memo for clean_tables(materialized=False). DataFrames are
+#: analyzed-PLAN memo for _lazy_clean_tables. DataFrames are
 #: immutable lazy plans, so handing the same objects to every query is
 #: semantics-free — what it saves is the driver-side plan construction +
 #: analysis of the four (large) cleaner expression trees, re-paid
@@ -60,7 +61,7 @@ def _issues_joined(df: DataFrame) -> DataFrame:
 #: bench-time materialize_raw invalidates earlier plans.
 _CLEAN_PLAN_MEMO: dict[tuple[str, str, int], dict[str, DataFrame]] = {}
 
-#: bucketed-TABLE memo for clean_tables(materialized=True) — same key.
+#: bucketed-TABLE memo for clean_tables — same key.
 _CLEAN_TABLE_MEMO: dict[tuple[str, str, int], dict[str, DataFrame]] = {}
 
 #: the clean-once layout: every cleaned table bucketed by the (plan_id,
@@ -72,6 +73,9 @@ CLEAN_BUCKETS = 32
 
 
 def _lazy_clean_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
+    """The four cleaned tables as lazy analyzed plans straight off the
+    raw fixtures, nothing written — for lineage-shape tests and anywhere
+    a write is undesirable."""
     key = (spark.sparkContext.applicationId, sf_dir, len(fixtures._RAW_OVERRIDE))
     memo = _CLEAN_PLAN_MEMO.get(key)
     if memo is None:
@@ -84,32 +88,24 @@ def _lazy_clean_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]
     return memo
 
 
-def clean_tables(
-    spark: SparkSession, sf_dir: str, *, materialized: bool = True
-) -> dict[str, DataFrame]:
+def clean_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """The four cleaned canonical tables from the fixture derivation.
 
-    ``materialized=True`` (default): the "clean once, reconcile many"
-    deployment shape. The cleaners run ONCE per (session, sf_dir) and
-    their output is persisted as catalog tables bucketed by
-    ``(plan_id, ssn)`` (operators/partitioning.py); every consumer —
-    the four engines, the corrections deliverable, the merged analytics
-    unions — reads the bucketed scan instead of re-executing the full
-    cleaning lineage per branch. At 100 TB this is the difference
+    The "clean once, reconcile many" deployment shape: the cleaners run
+    ONCE per (session, sf_dir) and their output is persisted as catalog
+    tables bucketed by ``(plan_id, ssn)`` (operators/partitioning.py);
+    every consumer — the four engines, the corrections deliverable, the
+    merged analytics unions — reads the bucketed scan instead of
+    re-executing the full cleaning lineage per branch. At 100 TB this is the difference
     between reading the fact table once and re-cleaning it per engine
     (the round-5 verdict's `corrections_all` defect: scans=32,
     reused exchanges=0), and the bucketed scan's hash clustering makes
     the engine joins/windows exchange-free (tests/test_bucketed_engine).
     Parquet round-trips every column type here exactly (doubles bitwise,
     dates/strings/arrays verbatim), so results are value-identical to
-    the lazy lineage and the DuckDB oracles are unchanged.
-
-    ``materialized=False``: the prior behavior — lazy analyzed plans
-    straight off the raw fixtures, nothing written. Used by lineage-
-    shape tests and anywhere a write is undesirable.
+    the lazy lineage (:func:`_lazy_clean_tables`) and the DuckDB oracles
+    are unchanged.
     """
-    if not materialized:
-        return _lazy_clean_tables(spark, sf_dir)
     key = (spark.sparkContext.applicationId, sf_dir, len(fixtures._RAW_OVERRIDE))
     memo = _CLEAN_TABLE_MEMO.get(key)
     if memo is None:
@@ -438,7 +434,7 @@ def q_engine_a(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("engine_b_age_taxcode", engines_sql.ENGINE_B_SQL)
 def q_engine_b(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = _engine_outputs(spark, sf_dir, materialized=False)["engine_b"]
+    out = _lazy_engine_output(spark, sf_dir, "engine_b")
     return out.select(*age_taxcode.OUTPUT_COLUMNS)
 
 
@@ -449,7 +445,7 @@ def q_engine_c(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("engine_d_ira_rollover", engines_sql.ENGINE_D_SQL)
 def q_engine_d(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = _engine_outputs(spark, sf_dir, materialized=False)["engine_d"]
+    out = _lazy_engine_output(spark, sf_dir, "engine_d")
     return out.select(*ira_rollover.OUTPUT_COLUMNS)
 
 
@@ -666,8 +662,7 @@ def _engine_step(spark: SparkSession, sf_dir: str, eng: str) -> DataFrame:
 class _EngineOutputs:
     """Lazy per-engine view over the engine outputs.
 
-    ``materialized=True`` (default for the downstream consumers): the
-    Engine A and Engine C outputs — read by corrections + six
+    The Engine A and Engine C outputs — read by corrections + six
     analytics queries — are executed ONCE per session and persisted as
     parquet, mirroring the reference deployment where engine results
     are written deliverables the analytics layer then reads. Each engine
@@ -686,17 +681,16 @@ class _EngineOutputs:
     KPI-style consumers per session would flip _MATERIALIZED_ENGINES to
     all four. Parquet round-trips every engine output type exactly, so
     the DuckDB oracles are untouched. If a write fails, that engine
-    falls back to its lazy plan for the rest of the session.
-
-    ``materialized=False``: lazy analyzed plans, nothing written — and
-    only the ACCESSED engine's plan is built.
+    falls back to its lazy plan for the rest of the session. Only the
+    ACCESSED engine's plan is built; callers that want an engine's lazy
+    lineage call :func:`_lazy_engine_output`.
     """
 
-    def __init__(self, spark: SparkSession, sf_dir: str, materialized: bool):
-        self._spark, self._sf_dir, self._materialized = spark, sf_dir, materialized
+    def __init__(self, spark: SparkSession, sf_dir: str):
+        self._spark, self._sf_dir = spark, sf_dir
 
     def __getitem__(self, eng: str) -> DataFrame:
-        if self._materialized and eng in _MATERIALIZED_ENGINES:
+        if eng in _MATERIALIZED_ENGINES:
             return _materialized_engine_output(self._spark, self._sf_dir, eng)
         return _lazy_engine_output(self._spark, self._sf_dir, eng)
 
@@ -704,12 +698,10 @@ class _EngineOutputs:
         return [(eng, self[eng]) for eng in _ENGINE_NAMES]
 
 
-def _engine_outputs(
-    spark: SparkSession, sf_dir: str, *, materialized: bool = True
-) -> _EngineOutputs:
+def _engine_outputs(spark: SparkSession, sf_dir: str) -> _EngineOutputs:
     """The four engine output frames as a lazy per-engine mapping (see
     :class:`_EngineOutputs` for the materialization contract)."""
-    return _EngineOutputs(spark, sf_dir, materialized)
+    return _EngineOutputs(spark, sf_dir)
 
 
 def _union_tagged(parts: list[DataFrame]) -> DataFrame:
@@ -915,15 +907,7 @@ def q_user_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey",
         Z.zorder_value(orders, ["o_totalprice", "o_custkey"], bits=8),
     )
-    z_ck = DD._hash32(
-        F.concat_ws(
-            "|", F.col("o_orderkey").cast("string"), F.col("zvalue").cast("string")
-        )
-    )
-    z_parity = zdf.agg(
-        F.count(F.lit(1)).cast("long").alias("n_zorder_rows"),
-        F.coalesce(F.sum(z_ck), F.lit(0)).cast("long").alias("zorder_ck"),
-    )
+    z_parity = certificate(zdf, "zorder", "o_orderkey", "zvalue")
     # round-13 fold: the streaming Misra-Gries heavy-hitter rollup
     # (streaming/heavy_hitters.py) replayed IN-PLAN over the
     # deterministic event_id % 3 micro-batch split: per-batch exact
@@ -939,19 +923,7 @@ def q_user_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .streaming import heavy_hitters as _HH
 
     hh = _HH.replay_heavy_hitters(ev)
-    hh_ck = DD._hash32(
-        F.concat_ws(
-            "|",
-            F.col("item"),
-            F.col("est").cast("string"),
-            F.col("n_total").cast("string"),
-            F.col("err_bound").cast("string"),
-        )
-    )
-    hh_parity = hh.agg(
-        F.count(F.lit(1)).cast("long").alias("n_mgg_rows"),
-        F.coalesce(F.sum(hh_ck), F.lit(0)).cast("long").alias("mgg_ck"),
-    )
+    hh_parity = certificate(hh, "mgg", "item", "est", "n_total", "err_bound")
     # round-14 fold: the Count-Min sketch (operators/sketches.cm_cells /
     # cm_point_estimates — the one sketch whose state is EXACTLY
     # partition-invariant, so the full cell grid AND the point-estimate
@@ -972,12 +944,7 @@ def q_user_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators import profile as _prof
 
     hist_parity = _prof.histogram_parity(orders, plans_sql.HIST_COLS)
-    return (
-        out.crossJoin(F.broadcast(z_parity))
-        .crossJoin(F.broadcast(hh_parity))
-        .crossJoin(F.broadcast(cm_parity))
-        .crossJoin(F.broadcast(hist_parity))
-    )
+    return attach(out, z_parity, hh_parity, cm_parity, hist_parity)
 
 
 @register("streaming_click_purchase_join", plans_sql.STREAM_JOIN_SQL)
@@ -1059,16 +1026,7 @@ def q_events_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = P.salted_join(
         ev.select("event_id", "event_type"), typedim, ["event_type"]
     )
-    s_ck = DD._hash32(
-        F.concat_ws(
-            "|", F.col("event_id").cast("string"), F.col("type_n").cast("string")
-        )
-    )
-    s_parity = joined.agg(
-        F.count(F.lit(1)).cast("long").alias("n_salted_rows"),
-        F.coalesce(F.sum(s_ck), F.lit(0)).cast("long").alias("salted_ck"),
-    )
-    return out.crossJoin(F.broadcast(s_parity))
+    return attach(out, certificate(joined, "salted", "event_id", "type_n"))
 
 
 # --- QA layer (J5 join coverage, V7 warning metrics) -------------------------
@@ -1152,17 +1110,14 @@ def q_warning_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("e")
     ).select("e.*")
     nm = quality.near_miss_audit(t["relius"], t["matrix"], plant_demos=True)
-    nm_ck = DD._hash32(
-        F.concat_ws(
-            "|",
-            F.col("plan_id"),
-            F.col("ssn_relius"),
-            F.col("ssn_matrix"),
-            F.col("ssn_edit_distance").cast("string"),
-            F.col("amount_diff_cents").cast("string"),
-            F.col("name_match").cast("string"),
-            F.col("reason"),
-        )
+    nm_ck = row_ck(
+        "plan_id",
+        "ssn_relius",
+        "ssn_matrix",
+        "ssn_edit_distance",
+        "amount_diff_cents",
+        "name_match",
+        "reason",
     )
     nm_parity = nm.agg(
         F.count(F.lit(1)).cast("long").alias("n_nearmiss"),
@@ -1177,20 +1132,15 @@ def q_warning_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators import blocklist as _BL
 
     bl_parity = _BL.blocklist_parity(_load_table(spark, sf_dir, "documents"))
-    return (
+    return attach(
         quality.build_warning_metrics(t["relius"], t["matrix"], t["demo"])
         .unionByName(cov_rows)
-        .unionByName(benford_rows)
-        .crossJoin(
-            F.broadcast(
-                _profile.profile_parity(
-                    _load_table(spark, sf_dir, "documents"),
-                    plans_sql.PROFILE_COLS,
-                )
-            )
-        )
-        .crossJoin(F.broadcast(nm_parity))
-        .crossJoin(F.broadcast(bl_parity))
+        .unionByName(benford_rows),
+        _profile.profile_parity(
+            _load_table(spark, sf_dir, "documents"), plans_sql.PROFILE_COLS
+        ),
+        nm_parity,
+        bl_parity,
     )
 
 
@@ -1491,32 +1441,9 @@ def q_mixing_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     per = sampling.unimax_mixture(sampling.temperature_mixture(per))
     tot = per.agg(F.sum("n_tokens").alias("t"))
     feats = _dsir.dsir_features(docs)
-    d_ck = DD._hash32(
-        F.concat_ws(
-            "|",
-            F.col("doc_id").cast("string"),
-            F.col("bucket").cast("string"),
-            F.col("cnt").cast("string"),
-        )
-    )
-    dsir_parity = feats.agg(
-        F.count(F.lit(1)).cast("long").alias("n_dsir_rows"),
-        F.coalesce(F.sum(d_ck), F.lit(0)).cast("long").alias("dsir_ck"),
-    )
+    dsir_parity = certificate(feats, "dsir", "doc_id", "bucket", "cnt")
     sub = _qclf.qclf_substrate(docs)
-    q_ck = DD._hash32(
-        F.concat_ws(
-            "|",
-            F.col("doc_id").cast("string"),
-            F.col("label").cast("string"),
-            F.col("bucket").cast("string"),
-            F.col("cnt").cast("string"),
-        )
-    )
-    qclf_parity = sub.agg(
-        F.count(F.lit(1)).cast("long").alias("n_qclf_rows"),
-        F.coalesce(F.sum(q_ck), F.lit(0)).cast("long").alias("qclf_ck"),
-    )
+    qclf_parity = certificate(sub, "qclf", "doc_id", "label", "bucket", "cnt")
     # BPE fold: hist feeds two consumers (pair rollup + checksum);
     # persisting the vocabulary-sized aggregate keeps its corpus scan
     # single-pass
@@ -1697,20 +1624,15 @@ def q_data_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     # to its document-level sibling, the C4 line-filter fold; the
     # battery's wall time is priced standalone in bench.py
     # (gopher_quality entry).
-    out = (
-        strat.unionByName(mix)
-        .crossJoin(F.broadcast(_lines.c4_parity(docs)))
-        .crossJoin(F.broadcast(_lines.para_parity(docs)))
-        .crossJoin(
-            F.broadcast(
-                sampling.pps_parity(
-                    docs, F.size(T.tokens("text")).cast("long"), k=llm_sql.PPS_K
-                )
-            )
-        )
-        .crossJoin(F.broadcast(GOPHER.gopher_parity(docs)))
+    return attach(
+        strat.unionByName(mix),
+        _lines.c4_parity(docs),
+        _lines.para_parity(docs),
+        sampling.pps_parity(
+            docs, F.size(T.tokens("text")).cast("long"), k=llm_sql.PPS_K
+        ),
+        GOPHER.gopher_parity(docs),
     )
-    return out
 
 
 @register("data_contamination_check", llm_sql.CONTAMINATION_SQL)
@@ -1823,20 +1745,8 @@ def tfidf_with_repetition_parity(docs: DataFrame) -> DataFrame:
     # 4.4s at sf0.1) — at cluster scale the input arrives pre-split
     spread = docs.repartition(docs.sparkSession.sparkContext.defaultParallelism)
     rep = REP.repetition_ngram_substrate(spread)
-    rep_ck = DD._hash32(
-        F.concat_ws(
-            "|",
-            F.col("doc_id").cast("string"),
-            F.col("n").cast("string"),
-            F.col("top_cnt").cast("string"),
-            F.col("top_chars").cast("string"),
-            F.col("dup_chars").cast("string"),
-            F.col("total_chars").cast("string"),
-        )
-    )
-    rep_parity = rep.agg(
-        F.count(F.lit(1)).cast("long").alias("n_rep_rows"),
-        F.coalesce(F.sum(rep_ck), F.lit(0)).cast("long").alias("rep_ck"),
+    rep_parity = certificate(
+        rep, "rep", "doc_id", "n", "top_cnt", "top_chars", "dup_chars", "total_chars"
     )
     # round-13 fold: per-language tokenizer fertility diagnostics
     # (operators/text.fertility_stats) — the oracle recomputes the full
@@ -1844,22 +1754,17 @@ def tfidf_with_repetition_parity(docs: DataFrame) -> DataFrame:
     # aggregation, so grouping, all four counters and the pinned-order
     # ratio arithmetic must match row-for-row
     fert = T.fertility_stats(docs)
-    fert_ck = DD._hash32(
-        F.concat_ws(
-            "|",
-            F.coalesce(F.col("lang"), F.lit("\x00")),
-            F.col("n_docs").cast("string"),
-            F.col("n_chars").cast("string"),
-            F.col("n_bytes").cast("string"),
-            F.col("n_words").cast("string"),
-            F.col("n_tokens_bpe").cast("string"),
-            F.coalesce(F.col("chars_per_token_micros"), F.lit(-1)).cast("string"),
-            F.coalesce(F.col("tokens_per_word_micros"), F.lit(-1)).cast("string"),
-        )
-    )
-    fert_parity = fert.agg(
-        F.count(F.lit(1)).cast("long").alias("n_fert_rows"),
-        F.coalesce(F.sum(fert_ck), F.lit(0)).cast("long").alias("fert_ck"),
+    fert_parity = certificate(
+        fert,
+        "fert",
+        F.coalesce(F.col("lang"), F.lit("\x00")),
+        "n_docs",
+        "n_chars",
+        "n_bytes",
+        "n_words",
+        "n_tokens_bpe",
+        F.coalesce(F.col("chars_per_token_micros"), F.lit(-1)),
+        F.coalesce(F.col("tokens_per_word_micros"), F.lit(-1)),
     )
     # round-14 fold (VERDICT r13 #6): TRAINED-tokenizer fertility — the
     # real distributed bpe_encode (Arrow mapInPandas, merge table in the
@@ -1870,25 +1775,16 @@ def tfidf_with_repetition_parity(docs: DataFrame) -> DataFrame:
     # scratch via the unrolled bracketed replace chain
     # (llm_sql.trained_fert_ctes), plus both pinned-order micros ratios.
     tfert = T.fertility_stats_trained(docs, llm_sql.fertility_merges())
-    tfert_ck = DD._hash32(
-        F.concat_ws(
-            "|",
-            F.coalesce(F.col("lang"), F.lit("\x00")),
-            F.col("n_docs").cast("string"),
-            F.col("n_words").cast("string"),
-            F.col("n_word_chars").cast("string"),
-            F.col("n_tokens_trained").cast("string"),
-            F.coalesce(F.col("trained_chars_per_token_micros"), F.lit(-1)).cast(
-                "string"
-            ),
-            F.coalesce(F.col("trained_tokens_per_word_micros"), F.lit(-1)).cast(
-                "string"
-            ),
-        )
-    )
-    tfert_parity = tfert.agg(
-        F.count(F.lit(1)).cast("long").alias("n_tfert_rows"),
-        F.coalesce(F.sum(tfert_ck), F.lit(0)).cast("long").alias("tfert_ck"),
+    tfert_parity = certificate(
+        tfert,
+        "tfert",
+        F.coalesce(F.col("lang"), F.lit("\x00")),
+        "n_docs",
+        "n_words",
+        "n_word_chars",
+        "n_tokens_trained",
+        F.coalesce(F.col("trained_chars_per_token_micros"), F.lit(-1)),
+        F.coalesce(F.col("trained_tokens_per_word_micros"), F.lit(-1)),
     )
     # round-13 fold: BM25 retrieval (operators/text.bm25_topk — the
     # engine's full-text search surface) graded through (n_bm25_rows,
@@ -1920,13 +1816,8 @@ def tfidf_with_repetition_parity(docs: DataFrame) -> DataFrame:
     # oracle recomputes counts and the pinned term-ascending fold off
     # the same tf substrate it already replays (llm_sql.ENT_CTES).
     ent_parity = T.entropy_parity(docs)
-    return (
-        out.crossJoin(F.broadcast(rep_parity))
-        .crossJoin(F.broadcast(fert_parity))
-        .crossJoin(F.broadcast(tfert_parity))
-        .crossJoin(F.broadcast(bm_parity))
-        .crossJoin(F.broadcast(kn_parity))
-        .crossJoin(F.broadcast(ent_parity))
+    return attach(
+        out, rep_parity, fert_parity, tfert_parity, bm_parity, kn_parity, ent_parity
     )
 
 
@@ -1969,27 +1860,19 @@ def chunk_docs_with_span_parity(docs: DataFrame, aug: DataFrame) -> DataFrame:
     # twice (r9 VERDICT "What's wrong" #1 — the fold was paying its
     # certificate double).
     verdicts = staging.stage(SP.span_dedup_verdicts(aug))
-    v_ck = DD._hash32(
-        F.concat_ws(
-            "|",
-            F.col("doc_id").cast("string"),
-            F.col("pos").cast("string"),
-            F.when(F.col("keep"), F.lit("1")).otherwise(F.lit("0")),
-            F.col("span"),
-        )
-    )
+    keep_i = F.when(F.col("keep"), F.lit("1")).otherwise(F.lit("0"))
+    v_ck = row_ck("doc_id", "pos", keep_i, "span")
     p1 = verdicts.agg(
         F.count_if(~F.col("keep")).cast("long").alias("n_span_removed"),
         F.coalesce(F.sum(v_ck), F.lit(0)).cast("long").alias("span_verdict_ck"),
     )
     clean = SP.span_dedup(aug, verdicts=verdicts)
-    c_ck = DD._hash32(
-        F.concat_ws("|", F.col("doc_id").cast("string"), F.col("clean_text"))
-    )
     p2 = clean.agg(
-        F.coalesce(F.sum(c_ck), F.lit(0)).cast("long").alias("span_clean_ck")
+        F.coalesce(F.sum(row_ck("doc_id", "clean_text")), F.lit(0))
+        .cast("long")
+        .alias("span_clean_ck")
     )
-    return out.crossJoin(F.broadcast(p1)).crossJoin(F.broadcast(p2))
+    return attach(out, p1, p2)
 
 
 #: memoized Bloom-gate replay verdicts, keyed (applicationId, sf_dir) —
@@ -2102,18 +1985,13 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # in the count regime — see dedup.ngram_regime_probe).
     probe: dict = {}
     auto = DD.ngram_jaccard_auto(None, sh=sh, index=index, probe_out=probe)
-    au_ck = DD._hash32(
-        F.concat(
-            F.col("id_a").cast("string"), F.lit("|"), F.col("id_b").cast("string")
-        )
-    )
     au_parity = auto.agg(
         F.count(F.lit(1)).cast("long").alias("n_pairs_auto"),
-        F.coalesce(F.sum(au_ck), F.lit(0)).cast("long").alias("auto_pairs_ck"),
+        F.coalesce(F.sum(row_ck("id_a", "id_b")), F.lit(0))
+        .cast("long")
+        .alias("auto_pairs_ck"),
     )
-    out = out.crossJoin(F.broadcast(au_parity)).withColumn(
-        "auto_route", F.lit(probe["route"])
-    )
+    out = attach(out, au_parity).withColumn("auto_route", F.lit(probe["route"]))
 
     # round-13 fold: MinHash-LSH candidate RECALL/PRECISION against the
     # exact n-gram-Jaccard truth set (dedup.near_dup_recall_from_shingles
@@ -2130,20 +2008,12 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     aug_rep = aug.repartition(spark.sparkContext.defaultParallelism)
     cdc = SP.cdc_span_dedup(aug_rep)
-    cdc_ck_col = DD._hash32(
-        F.concat_ws(
-            "|",
-            F.col("doc_id").cast("string"),
-            F.col("n_spans").cast("string"),
-            F.col("n_removed").cast("string"),
-            F.col("clean_text"),
-        )
-    )
+    cdc_ck_col = row_ck("doc_id", "n_spans", "n_removed", "clean_text")
     cdc_parity = cdc.agg(
         F.coalesce(F.sum("n_removed"), F.lit(0)).cast("long").alias("n_cdc_removed"),
         F.coalesce(F.sum(cdc_ck_col), F.lit(0)).cast("long").alias("cdc_ck"),
     )
-    out = out.crossJoin(F.broadcast(cdc_parity))
+    out = attach(out, cdc_parity)
 
     # round-11 fold #2 (r10 VERDICT task #4): EXACTSUBSTR dedup (Lee et
     # al. 2021) — sorted md5 window-fingerprint index + interval-masked
@@ -2152,23 +2022,17 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # output, recomputed by the oracle's own window/verdict/mask replay
     # (llm_sql.exact_substr_ctes)
     es = exact_substr_corpus_clean(spark, sf_dir)
-    es_ck_col = DD._hash32(
-        F.concat_ws(
-            "|",
-            F.col("doc_id").cast("string"),
-            F.col("n_spans").cast("string"),
-            F.col("n_removed").cast("string"),
-            F.col("clean_text"),
-        )
-    )
+    es_ck_col = row_ck("doc_id", "n_spans", "n_removed", "clean_text")
     es_parity = es.agg(
         F.coalesce(F.sum("n_removed"), F.lit(0)).cast("long").alias("n_esub_removed"),
         F.coalesce(F.sum(es_ck_col), F.lit(0)).cast("long").alias("esub_ck"),
     )
-    out = out.crossJoin(F.broadcast(es_parity))
+    out = attach(out, es_parity)
 
     v = _bgate_replay_cached(spark, sf_dir)
-    ck = DD._hash32(
+    # null-propagating concat, not row_ck: the verdicts come back as a
+    # rows frame, so a NULL part must null the row hash as the oracle's || does
+    ck = hash32(
         F.concat(
             F.col("id").cast("string"),
             F.lit("|"),
@@ -2221,18 +2085,9 @@ def dedup_exact_with_simhash_parity(
         "doc_id", "fingerprint"
     )
     sp = simhash_banded_pairs(aug)
-    pair_ck = DD._hash32(
-        F.concat(
-            F.col("id_a").cast("string"),
-            F.lit("|"),
-            F.col("id_b").cast("string"),
-            F.lit("|"),
-            F.col("hamming").cast("string"),
-        )
-    )
     parity = sp.agg(
         F.count(F.lit(1)).alias("n_simhash_pairs"),
-        F.coalesce(F.sum(pair_ck), F.lit(0))
+        F.coalesce(F.sum(row_ck("id_a", "id_b", "hamming")), F.lit(0))
         .cast("long")
         .alias("simhash_pairs_ck"),
     )
@@ -2244,16 +2099,13 @@ def dedup_exact_with_simhash_parity(
     if sh is None:
         sh = DD.staged_shingles(aug)
     px = DD.ngram_jaccard_pairs_prefix_from_shingles(sh, index=index)
-    px_ck = DD._hash32(
-        F.concat(
-            F.col("id_a").cast("string"), F.lit("|"), F.col("id_b").cast("string")
-        )
-    )
     px_parity = px.agg(
         F.count(F.lit(1)).alias("n_pairs_prefix"),
-        F.coalesce(F.sum(px_ck), F.lit(0)).cast("long").alias("prefix_pairs_ck"),
+        F.coalesce(F.sum(row_ck("id_a", "id_b")), F.lit(0))
+        .cast("long")
+        .alias("prefix_pairs_ck"),
     )
-    out = out.crossJoin(F.broadcast(px_parity))
+    out = attach(out, px_parity)
     # round-9 fold: Bloom-filter membership (operators/bloom.py) — the
     # filter builds on the TRAIN hash-split's fingerprints, every row is
     # probed through the distributed (join-form) path, and the checksum
@@ -2277,16 +2129,15 @@ def dedup_exact_with_simhash_parity(
         train.withColumn("__m", F.lit(True)), "fingerprint", "left"
     )
     seen_i = F.when(F.col("bloom_seen"), F.lit("1")).otherwise(F.lit("0"))
-    bl_ck = DD._hash32(
-        F.concat_ws("|", F.col("doc_id").cast("string"), seen_i)
-    )
     bl_parity = verdicts.agg(
         F.count_if(F.col("bloom_seen") & ~F.coalesce(F.col("__m"), F.lit(False)))
         .cast("long")
         .alias("n_bloom_fp"),
-        F.coalesce(F.sum(bl_ck), F.lit(0)).cast("long").alias("bloom_ck"),
+        F.coalesce(F.sum(row_ck("doc_id", seen_i)), F.lit(0))
+        .cast("long")
+        .alias("bloom_ck"),
     )
-    return out.crossJoin(F.broadcast(parity)).crossJoin(F.broadcast(bl_parity))
+    return attach(out, parity, bl_parity)
 
 
 @register("dedup_minhash_lsh", llm_sql.MINHASH_LSH_SQL)
@@ -2365,18 +2216,13 @@ def ngram_jaccard_with_prefix_parity(aug: DataFrame) -> DataFrame:
     index = staging.stage(DD.shingle_index(sh))
     pairs = DD.ngram_jaccard_pairs_from_shingles(sh, index=index)
     prefix = DD.ngram_jaccard_pairs_prefix_from_shingles(sh, index=index)
-    pair_ck = DD._hash32(
-        F.concat(
-            F.col("id_a").cast("string"), F.lit("|"), F.col("id_b").cast("string")
-        )
-    )
     parity = prefix.agg(
         F.count(F.lit(1)).alias("n_pairs_prefix"),
-        F.coalesce(F.sum(pair_ck), F.lit(0))
+        F.coalesce(F.sum(row_ck("id_a", "id_b")), F.lit(0))
         .cast("long")
         .alias("prefix_pairs_ck"),
     )
-    return pairs.crossJoin(F.broadcast(parity))
+    return attach(pairs, parity)
 
 
 def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2494,20 +2340,13 @@ def emb_near_dup_with_semdedup_parity(aug: DataFrame) -> DataFrame:
     out = similarity.cosine_near_dup_pairs(aug, threshold=0.95)
     ranked = staging.stage(SD.assign_with_rank(aug))
     verdicts = SD.semdedup_verdicts(aug, ranked=ranked)
-    ck = DD._hash32(
-        F.concat_ws(
-            "|",
-            F.col("vec_id").cast("string"),
-            F.col("cell_id").cast("string"),
-            F.col("rnk").cast("string"),
-            F.when(F.col("keep"), F.lit("1")).otherwise(F.lit("0")),
-        )
-    )
+    keep_i = F.when(F.col("keep"), F.lit("1")).otherwise(F.lit("0"))
+    ck = row_ck("vec_id", "cell_id", "rnk", keep_i)
     parity = verdicts.agg(
         F.count_if(~F.col("keep")).cast("long").alias("n_semdedup_pruned"),
         F.coalesce(F.sum(ck), F.lit(0)).cast("long").alias("semdedup_ck"),
     )
-    return out.crossJoin(F.broadcast(parity))
+    return attach(out, parity)
 
 
 @register("multimodal_features", llm_sql.MULTIMODAL_FEATURES_SQL)
@@ -2671,7 +2510,9 @@ def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = stateful.run_dedup_to_memory(spark, sf_dir, name="event_dedup_check")
     docs = _load_table(spark, sf_dir, "documents").select("doc_id", "text")
     v = dedup_ingest.run_gate_replay(spark, docs)
-    ck = DD._hash32(
+    # null-propagating concat, not row_ck: the verdicts come back as a
+    # rows frame, so a NULL part must null the row hash as the oracle's || does
+    ck = hash32(
         F.concat(
             F.col("id").cast("string"),
             F.lit("|"),
@@ -2686,7 +2527,7 @@ def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_gate_verdicts"),
         F.coalesce(F.sum(ck), F.lit(0)).cast("long").alias("gate_ck"),
     )
-    return out.select("user_id", "event_type").crossJoin(F.broadcast(parity))
+    return attach(out.select("user_id", "event_type"), parity)
 
 
 @register("streaming_running_totals", plans_sql.STREAM_RUNNING_TOTALS_SQL)

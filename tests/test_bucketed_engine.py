@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from recon_spark.engines import match_planid
 from recon_spark.operators import partitioning as P
-from recon_spark.registry import clean_tables
+from recon_spark.registry import _lazy_clean_tables, clean_tables
 
 SF = "/root/testdata/sf0.001"
 
@@ -22,10 +22,10 @@ def _plan(df) -> str:
 
 
 def test_engine_a_exchange_free_over_bucketed_cleans(spark, tmp_path):
-    # materialized=False: this test writes its OWN bucketed tables to
-    # exercise write_bucketed end-to-end (the default materialized path
-    # is covered by test_clean_tables_materialized_* below)
-    t = clean_tables(spark, SF, materialized=False)
+    # the lazy lineage: this test writes its OWN bucketed tables to
+    # exercise write_bucketed end-to-end (the clean_tables path is
+    # covered by test_clean_tables_materialized_* below)
+    t = _lazy_clean_tables(spark, SF)
     # Bucket by the STRING key prefix (plan_id, ssn), not the full 3-part
     # join key: gross_amt is DOUBLE, and Spark's NormalizeFloatingNumbers
     # rewrites float join keys, which makes the planner disable bucketed
@@ -61,7 +61,7 @@ def test_engine_a_reuses_cleaner_exchanges_unbucketed(spark):
     3-key full-outer SMJ must add no exchange of its own — exactly one
     hash exchange per cleaned side (subset partitioning satisfies the
     superset clustering requirement)."""
-    t = clean_tables(spark, SF, materialized=False)
+    t = _lazy_clean_tables(spark, SF)
     out = match_planid.reconcile_relius_matrix(t["relius"], t["matrix"])
     plan = out._jdf.queryExecution().executedPlan().toString()
     import re
@@ -78,7 +78,7 @@ def test_engine_c_window_reuses_matrix_exchange(spark):
     (one per cleaned input), none introduced by the engine itself."""
     from recon_spark.engines import roth_taxable
 
-    t = clean_tables(spark, SF, materialized=False)
+    t = _lazy_clean_tables(spark, SF)
     out = roth_taxable.run_roth_taxable_analysis(t["matrix"], t["demo"], t["basis"])
     plan = out._jdf.queryExecution().executedPlan().toString()
     import re
@@ -92,7 +92,7 @@ def test_clean_tables_materialized_matches_lazy_and_is_exchange_free(spark):
     value-identical to the lazy lineage AND give Engine A an
     exchange-free plan (the deployment shape is now the DEFAULT shape,
     not just a test artifact)."""
-    lazy = clean_tables(spark, SF, materialized=False)
+    lazy = _lazy_clean_tables(spark, SF)
     mat = clean_tables(spark, SF)
 
     # value parity on every table (arrays joined for hashable tuples)

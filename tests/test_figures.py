@@ -12,15 +12,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from recon_spark.plans import figures as G
-from recon_spark.registry import _engine_outputs
+from recon_spark.registry import _ENGINE_NAMES, _lazy_engine_output
 
 SF_DIR = "/root/testdata/sf0.001"
 
 
 @pytest.fixture(scope="module")
 def engines(spark):
-    outs = _engine_outputs(spark, SF_DIR, materialized=False)
-    return {k: v.persist() for k, v in outs.items()}
+    return {e: _lazy_engine_output(spark, SF_DIR, e).persist() for e in _ENGINE_NAMES}
 
 
 def _engine_for(name: str) -> str:

@@ -134,10 +134,11 @@ def test_engine_outputs_lazy_and_materialized_give_same_rows(spark, monkeypatch)
         assert written(first) and not written(second), name
         assert rows(first) == rows(second), name
 
-    lazy = R._engine_outputs(spark, SF, materialized=False)
     assert rows(R.q_action_mix_c(spark, SF)) == rows(
-        analytics.build_action_mix(lazy["engine_c"])
+        analytics.build_action_mix(R._lazy_engine_output(spark, SF, "engine_c"))
     )
     assert rows(R.q_unmatched_a(spark, SF)) == rows(
-        analytics.build_unmatched_summary(lazy["engine_a"], micros=True)
+        analytics.build_unmatched_summary(
+            R._lazy_engine_output(spark, SF, "engine_a"), micros=True
+        )
     )

@@ -362,19 +362,25 @@ def test_cdc_short_null_empty_docs(spark):
     assert got[3].clean_text == "" and got[3].n_spans == 0
 
 
+def _cdc_spans_oracle(rows) -> list[tuple]:
+    """The DuckDB replay's ``cdc_spans`` CTE: token unnest + running
+    breakpoint count window + (doc, seg) string_agg — the relational
+    form of :func:`spans.cdc_spans`."""
+    ctes = llm_sql.cdc_parity_ctes(src="documents")
+    return sorted(_oracle(rows, f"WITH {ctes} SELECT doc_id, pos, span FROM cdc_spans"))
+
+
 def test_cdc_fold_form_matches_window_form(spark):
-    """The narrow per-doc array fold (default) and the explode+window
-    relational form (the oracle's shape) must be value-identical."""
+    """The narrow per-doc array fold must be value-identical to the
+    explode+window relational form the DuckDB oracle spells."""
     rnd = random.Random(17)
     vocab = ["a", "b", "c", "d", "e"]
     rows = [
         (i, " ".join(rnd.choice(vocab) for _ in range(rnd.randrange(0, 40))))
         for i in range(60)
     ]
-    docs = _df(spark, rows)
-    a = sorted(map(tuple, SP.cdc_spans(docs, method="fold").collect()))
-    b = sorted(map(tuple, SP.cdc_spans(docs, method="window").collect()))
-    assert a == b
+    a = sorted(map(tuple, SP.cdc_spans(_df(spark, rows)).collect()))
+    assert a == _cdc_spans_oracle(rows)
     assert a  # non-empty
 
 
@@ -388,12 +394,12 @@ def test_cdc_fold_linear_on_long_doc(spark):
 
     rnd = random.Random(23)
     text = " ".join("w%d" % rnd.randrange(2000) for _ in range(50_000))
-    docs = _df(spark, [(1, text), (2, "short tail doc")])
+    rows = [(1, text), (2, "short tail doc")]
+    docs = _df(spark, rows)
     t0 = time.time()
-    a = sorted(map(tuple, SP.cdc_spans(docs, method="fold").collect()))
+    a = sorted(map(tuple, SP.cdc_spans(docs).collect()))
     fold_secs = time.time() - t0
-    b = sorted(map(tuple, SP.cdc_spans(docs, method="window").collect()))
-    assert a == b
+    assert a == _cdc_spans_oracle(rows)
     assert len(a) > 100
     # quadratic copying would take minutes here; linear is ~1-3s
     assert fold_secs < 30

@@ -55,6 +55,8 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from recon_spark.functions.checksum import hash32  # noqa: E402
+
 SRC = "/root/testdata/sf0.1"
 OUT = os.path.join(REPO, ".scratch", "full", "sf1")
 COPIES = 10
@@ -72,9 +74,7 @@ OFFSETS = {
 
 def _coin(*cols):
     """uint32 md5 coin (no rand() — reproducible across runs/sessions)."""
-    return F.conv(
-        F.substring(F.md5(F.concat_ws("#", *cols)), 1, 8), 16, 10
-    ).cast("long")
+    return hash32(F.concat_ws("#", *cols))
 
 
 def _replicate(spark, table: str) -> None:

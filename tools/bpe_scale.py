@@ -53,10 +53,10 @@ def synthesize_documents(spark, out_dir: str, n_docs: int) -> str:
     its own md5 so lengths spread 2..12 chars — enough symbol/pair
     diversity that 30k merges stay meaningful (16-hex-digit words
     would collapse the pair space to 256)."""
-    from recon_spark.operators.dedup import _hash32
+    from recon_spark.functions.checksum import hash32
 
-    # repo-standard uint32 md5 coin (operators/dedup._hash32)
-    coin = lambda *cols: _hash32(F.concat_ws("#", *cols))  # noqa: E731
+    # repo-standard uint32 md5 coin
+    coin = lambda *cols: hash32(F.concat_ws("#", *cols))  # noqa: E731
     docs = (
         spark.range(n_docs)
         .withColumnRenamed("id", "doc_id")

@@ -90,13 +90,9 @@ def _boilerplate_docs(spark, n_docs: int, n_templates: int = 8):
 def _pair_cert(pairs):
     """(n_pairs, checksum) — the same 32-bit-hash pair-set certificate as
     the graded parity fold (registry.q_ngram_jaccard)."""
-    from recon_spark.operators.dedup import _hash32
+    from recon_spark.functions.checksum import row_ck
 
-    ck = _hash32(
-        F.concat(
-            F.col("id_a").cast("string"), F.lit("|"), F.col("id_b").cast("string")
-        )
-    )
+    ck = row_ck("id_a", "id_b")
     row = pairs.agg(
         F.count(F.lit(1)).alias("n"),
         F.coalesce(F.sum(ck), F.lit(0)).cast("long").alias("ck"),

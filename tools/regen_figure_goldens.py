@@ -32,12 +32,11 @@ GOLDEN_DIR = os.path.join(REPO, "tests", "goldens", "figures")
 def build_all_specs(spark) -> dict[str, dict]:
     """name -> spec for all 19 figures over the sf0.001 engine outputs."""
     from recon_spark.plans import figures as G
-    from recon_spark.registry import _engine_outputs
+    from recon_spark.registry import _lazy_engine_output
 
-    outs = _engine_outputs(spark, SF_DIR, materialized=False)
     specs: dict[str, dict] = {}
     for eng, names in G.ENGINE_FIGURES.items():
-        df = outs[f"engine_{eng}"].persist()
+        df = _lazy_engine_output(spark, SF_DIR, f"engine_{eng}").persist()
         try:
             for name in names:
                 specs[name] = G.ALL_FIGURES[name](df)

@@ -32,6 +32,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from recon_spark.functions.checksum import hash32  # noqa: E402
+
 VOCAB = (
     "a agg batch big column customer data dup fast filter group hash join "
     "key line merge order part query row scan slow small sort spark stream "
@@ -54,9 +56,8 @@ def synthesize_documents(spark, out_dir: str, n_docs: int) -> str:
     per (doc_id, position) — no rand(), reproducible across runs)."""
     vocab = F.array(*[F.lit(w) for w in VOCAB])
     langs = F.array(*[F.lit(lang) for lang in LANGS])
-    coin = lambda *cols: F.conv(  # noqa: E731 — uint32 md5 coin
-        F.substring(F.md5(F.concat_ws("#", *cols)), 1, 8), 16, 10
-    ).cast("long")
+    # uint32 md5 coin
+    coin = lambda *cols: hash32(F.concat_ws("#", *cols))  # noqa: E731
     docs = (
         spark.range(0, n_docs, 1, 32)
         .select(F.col("id").alias("doc_id"))
