@@ -23,6 +23,7 @@ expensive operators (the (plan_id, ssn) engine joins, the reconciliation
 
 from __future__ import annotations
 
+import math
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -50,6 +51,33 @@ def write_bucketed(
     if path is not None:
         writer = writer.option("path", str(path))
     writer.saveAsTable(table)
+
+
+def bucket_count(input_bytes: int, shuffle_partitions: int, min_partition_bytes: int) -> int:
+    """Buckets for a table written from ``input_bytes`` of storage: one
+    per ``min_partition_bytes``, at least one, at most
+    ``shuffle_partitions``. With ``parallelismFirst`` on, AQE coalesces a
+    shuffle toward pieces of ``coalescePartitions.minPartitionSize``, so
+    passing that size gives a bucket the size AQE gives a shuffle
+    partition."""
+    return min(shuffle_partitions, max(1, math.ceil(input_bytes / min_partition_bytes)))
+
+
+def storage_bytes(df: DataFrame) -> int:
+    """Bytes on storage under ``df``'s file scans, each file set counted
+    once, from the sizes its file indexes listed when ``df`` was built:
+    no job starts. Not the optimizer's estimate for ``df``: a join it
+    cannot bound is estimated as the product of its sides' sizes."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    sizes = {}
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() != "LogicalRelation":
+            continue
+        rel = leaf.relation()
+        if rel.getClass().getSimpleName() == "HadoopFsRelation":
+            sizes[rel.location().rootPaths().toString()] = rel.sizeInBytes()
+    return sum(sizes.values())
 
 
 def bucketed_join(

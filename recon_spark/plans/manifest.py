@@ -37,6 +37,8 @@ from typing import Any
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
+from ..session import shuffle_partitions
+
 
 class RunManifest:
     """Collects per-stage Observation metrics for one pipeline run."""
@@ -169,18 +171,6 @@ def instrumented_engine_a(
 SKEW_FACTOR = 5.0
 
 
-def _shuffle_partitions(spark) -> int:
-    """spark.sql.shuffle.partitions as an int — platforms that let AQE
-    pick the count report a non-numeric value (e.g. Databricks "auto"),
-    which must fall back to the cluster's default parallelism rather
-    than raise mid-probe (ADVICE r9)."""
-    raw = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        return int(raw)
-    except (TypeError, ValueError):
-        return spark.sparkContext.defaultParallelism
-
-
 def key_profile(
     df: DataFrame,
     key: str,
@@ -207,7 +197,7 @@ def key_profile(
     """
     spark = df.sparkSession
     if partitions is None:
-        partitions = _shuffle_partitions(spark)
+        partitions = shuffle_partitions(spark)
     top = (
         df.groupBy(key)
         .count()

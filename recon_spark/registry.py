@@ -67,9 +67,11 @@ _CLEAN_TABLE_MEMO: dict[tuple[str, str, int], dict[str, DataFrame]] = {}
 #: the clean-once layout: every cleaned table bucketed by the (plan_id,
 #: ssn) prefix of its match/join keys — the one partitioning every
 #: downstream consumer clusters on (Engine A's 3-key full-outer SMJ,
-#: Engines B/C's demo/basis joins, Engine C's participant window).
+#: Engines B/C's demo/basis joins, Engine C's participant window). The
+#: bucket count is sized to the data when the tables are written
+#: (clean_tables) and shared by all four: Engine A's relius ⋈ matrix join
+#: is co-partitioned only when both sides have the same count.
 CLEAN_BUCKET_KEYS = ["plan_id", "ssn"]
-CLEAN_BUCKETS = 32
 
 
 def _lazy_clean_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
@@ -105,6 +107,17 @@ def clean_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     dates/strings/arrays verbatim), so results are value-identical to
     the lazy lineage (:func:`_lazy_clean_tables`) and the DuckDB oracles
     are unchanged.
+
+    All four tables share one bucket count, sized to the largest raw
+    input: one bucket per ``coalescePartitions.minPartitionSize`` (1 MiB
+    by default) of its storage bytes, at most the shuffle partition
+    count (operators/partitioning.bucket_count). A cleaned frame scans
+    exactly its raw frame's files, so its storage bytes are the raw
+    input's. With the raw exports on disk that is 1 bucket at sf0.01, 4
+    at sf0.1 and the shuffle partition count at sf1; a fixed count
+    would write files of a few KB each at small scale and run that many
+    tasks in every scan and engine write over them. Sizing reads the
+    file listings already made and starts no job.
     """
     key = (spark.sparkContext.applicationId, sf_dir, len(fixtures._RAW_OVERRIDE))
     memo = _CLEAN_TABLE_MEMO.get(key)
@@ -114,11 +127,20 @@ def clean_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
         import tempfile
 
         from .operators import partitioning as P
+        from .session import shuffle_partitions
 
         token = hashlib.md5(repr(key).encode()).hexdigest()[:8]
         try:
             base_dir = tempfile.mkdtemp(prefix="recon_clean_")
             lazy = _lazy_clean_tables(spark, sf_dir)
+            min_bytes = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+                spark.conf.get("spark.sql.adaptive.coalescePartitions.minPartitionSize")
+            )
+            buckets = P.bucket_count(
+                max(P.storage_bytes(df) for df in lazy.values()),
+                shuffle_partitions(spark),
+                min_bytes,
+            )
             memo = {}
             for name, df in lazy.items():
                 table = f"clean_{name}_b{token}"
@@ -126,7 +148,7 @@ def clean_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
                     df,
                     table,
                     CLEAN_BUCKET_KEYS,
-                    buckets=CLEAN_BUCKETS,
+                    buckets=buckets,
                     sort_by=CLEAN_BUCKET_KEYS,
                     path=f"{base_dir}/{name}",
                 )
@@ -632,8 +654,9 @@ def _materialized_engine_output(spark: SparkSession, sf_dir: str, eng: str) -> D
 
         try:
             path = f"{tempfile.mkdtemp(prefix='recon_engines_')}/{eng}"
-            _lazy_engine_output(spark, sf_dir, eng).write.mode("overwrite").parquet(path)
-            df = spark.read.parquet(path)
+            lazy = _lazy_engine_output(spark, sf_dir, eng)
+            lazy.write.mode("overwrite").parquet(path)
+            df = spark.read.schema(fixtures.parquet_schema(lazy.schema)).parquet(path)
         except Exception as exc:  # noqa: BLE001
             # same correctness-gate insurance as clean_tables: lazy
             # plans are value-identical, so degrade instead of failing

@@ -15,6 +15,9 @@ chosen so the same logical plans scale to a multi-executor cluster:
   C1 already runs well enough; truly hot executor loops still reach C2
 - driver heap ``min(24g, 60% of physical RAM)`` (``driver_memory``);
   ``SPARK_GRAFT_DRIVER_MEM`` overrides it
+- the package root first on the Python workers' ``PYTHONPATH``
+  (``executor_pythonpath``), so a UDF or ``mapInPandas`` that imports
+  ``recon_spark`` works whatever the driver's working directory
 """
 
 from __future__ import annotations
@@ -54,6 +57,28 @@ def driver_memory(phys_bytes: int | None = None) -> str:
         phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
     share_mb = int(phys_bytes * DRIVER_MEM_RAM_SHARE) // 2**20
     return f"{min(DRIVER_MEM_CAP_MB, share_mb)}m"
+
+
+#: the directory that holds the ``recon_spark`` package
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def executor_pythonpath(caller: str | None = None) -> str:
+    """``spark.executorEnv.PYTHONPATH``: the package root, then any path
+    the caller set."""
+    return os.pathsep.join(p for p in (PACKAGE_ROOT, caller) if p)
+
+
+def shuffle_partitions(spark) -> int:
+    """spark.sql.shuffle.partitions as an int — platforms that let AQE
+    pick the count report a non-numeric value (e.g. Databricks "auto"),
+    which must fall back to the cluster's default parallelism rather
+    than raise."""
+    raw = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        return int(raw)
+    except (TypeError, ValueError):
+        return spark.sparkContext.defaultParallelism
 
 
 def get_spark(
@@ -124,7 +149,10 @@ def get_spark(
         # exchange; silent corruption is not a trade.
         .config("spark.sql.unionOutputPartitioning", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    pythonpath = "spark.executorEnv.PYTHONPATH"
+    conf[pythonpath] = executor_pythonpath(conf.get(pythonpath))
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

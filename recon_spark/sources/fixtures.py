@@ -21,14 +21,36 @@ from typing import Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 from . import spec
 from .tpch import load
 
-#: (sf_dir, table) -> parquet path written by :func:`materialize_raw`.
-#: Empty in normal operation — the correctness path always re-derives the
-#: raw tables from the driver's parquet so nothing can go stale.
-_RAW_OVERRIDE: dict[tuple[str, str], str] = {}
+#: (sf_dir, table) -> (parquet path, its schema) written by
+#: :func:`materialize_raw`. Empty in normal operation — the correctness
+#: path always re-derives the raw tables from the driver's parquet so
+#: nothing can go stale.
+_RAW_OVERRIDE: dict[tuple[str, str], tuple[str, StructType]] = {}
+
+
+def parquet_schema(schema: StructType) -> StructType:
+    """The schema ``spark.read.parquet`` infers for files Spark wrote
+    from a frame of ``schema``: the same, with every field and element
+    nullable. Passing it to ``spark.read.schema`` skips the inference
+    job."""
+
+    def nullable(dt: DataType) -> DataType:
+        if isinstance(dt, StructType):
+            return StructType(
+                [StructField(f.name, nullable(f.dataType), True, f.metadata) for f in dt]
+            )
+        if isinstance(dt, ArrayType):
+            return ArrayType(nullable(dt.elementType), True)
+        if isinstance(dt, MapType):
+            return MapType(nullable(dt.keyType), nullable(dt.valueType), True)
+        return dt
+
+    return nullable(schema)
 
 
 def materialize_raw(spark: SparkSession, sf_dir: str, target_dir: str) -> None:
@@ -53,13 +75,17 @@ def materialize_raw(spark: SparkSession, sf_dir: str, target_dir: str) -> None:
         if key in _RAW_OVERRIDE:
             continue
         path = os.path.join(target_dir, f"{name}_raw.parquet")
-        build(spark, sf_dir).write.mode("overwrite").parquet(path)
-        _RAW_OVERRIDE[key] = path
+        df = build(spark, sf_dir)
+        df.write.mode("overwrite").parquet(path)
+        _RAW_OVERRIDE[key] = (path, parquet_schema(df.schema))
 
 
 def _materialized(spark: SparkSession, sf_dir: str, name: str) -> DataFrame | None:
-    path = _RAW_OVERRIDE.get((sf_dir, name))
-    return spark.read.parquet(path) if path else None
+    written = _RAW_OVERRIDE.get((sf_dir, name))
+    if written is None:
+        return None
+    path, schema = written
+    return spark.read.schema(schema).parquet(path)
 
 
 def pick(key: Column, values: Sequence[str | None]) -> Column:

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from recon_spark.engines import match_planid
 from recon_spark.operators import partitioning as P
 from recon_spark.registry import _lazy_clean_tables, clean_tables
+from recon_spark.session import shuffle_partitions
 
 SF = "/root/testdata/sf0.001"
 
@@ -106,3 +107,77 @@ def test_clean_tables_materialized_matches_lazy_and_is_exchange_free(spark):
     out = match_planid.reconcile_relius_matrix(mat["relius"], mat["matrix"])
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan
+
+
+def test_bucket_count_follows_input_bytes():
+    """One bucket per MiB of the largest raw input, at least one, at most
+    the shuffle partition count: 0.40 MB (matrix_raw at sf0.01) gives 1,
+    3.75 MB (sf0.1) gives 4."""
+    mib = 2**20
+    assert P.bucket_count(0, 8, mib) == 1
+    assert P.bucket_count(400_000, 8, mib) == 1
+    assert P.bucket_count(3_750_000, 8, mib) == 4
+    assert P.bucket_count(37_500_000, 32, mib) == 32
+    assert P.bucket_count(3_750_000, 2, mib) == 2
+
+    class _Conf:
+        def get(self, k):
+            return "auto"
+
+    class _SC:
+        defaultParallelism = 3
+
+    class _Auto:
+        conf = _Conf()
+        sparkContext = _SC()
+
+    assert P.bucket_count(3_750_000, shuffle_partitions(_Auto()), mib) == 3
+    assert P.bucket_count(400_000, shuffle_partitions(_Auto()), mib) == 1
+
+
+def _num_buckets(spark, df) -> int:
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    table = leaves.apply(0).catalogTable().get().identifier().unquotedString()
+    rows = spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect()
+    return int(next(r.data_type for r in rows if r.col_name == "Num Buckets"))
+
+
+def test_clean_tables_share_one_bucket_count(spark):
+    """All four clean tables carry the same bucket count (Engine A's join
+    is co-partitioned only then), sized from the raw input: sf0.001's
+    inputs are far below 1 MiB, so one bucket."""
+    counts = {name: _num_buckets(spark, df) for name, df in clean_tables(spark, SF).items()}
+    assert counts == dict.fromkeys(("relius", "matrix", "demo", "basis"), 1), counts
+
+
+def test_engines_same_rows_at_1_and_4_buckets(spark, tmp_path):
+    """Engine A and Engine C rows do not depend on the clean-once
+    layout's bucket count."""
+    from recon_spark.engines import roth_taxable
+
+    t = _lazy_clean_tables(spark, SF)
+    keys = ["plan_id", "ssn"]
+
+    def rows(df):
+        return sorted(map(repr, df.collect()))
+
+    out = {}
+    try:
+        for n in (1, 4):
+            b = {}
+            for name, df in t.items():
+                table = f"nb{n}_{name}"
+                P.write_bucketed(df, table, keys, buckets=n, sort_by=keys,
+                                 path=str(tmp_path / table))
+                b[name] = spark.table(table)
+            out[n] = (
+                rows(match_planid.reconcile_relius_matrix(b["relius"], b["matrix"])),
+                rows(roth_taxable.run_roth_taxable_analysis(b["matrix"], b["demo"], b["basis"])),
+            )
+    finally:
+        for n in (1, 4):
+            for name in t:
+                spark.sql(f"DROP TABLE IF EXISTS nb{n}_{name}")
+    assert out[1][0] == out[4][0]
+    assert out[1][1] == out[4][1]
+    assert out[1][0] and out[1][1]

@@ -204,7 +204,9 @@ def test_key_profile_survives_auto_shuffle_partitions(spark):
         conf = _Conf()
         sparkContext = _SC()
 
-    assert manifest._shuffle_partitions(_Fake()) == 8
-    assert manifest._shuffle_partitions(spark) == int(
+    from recon_spark.session import shuffle_partitions
+
+    assert shuffle_partitions(_Fake()) == 8
+    assert shuffle_partitions(spark) == int(
         spark.conf.get("spark.sql.shuffle.partitions")
     )

@@ -142,3 +142,28 @@ def test_engine_outputs_lazy_and_materialized_give_same_rows(spark, monkeypatch)
             R._lazy_engine_output(spark, SF, "engine_a"), micros=True
         )
     )
+
+
+def test_read_back_schemas_equal_inference(spark, monkeypatch, tmp_path):
+    """The raw exports and the engine outputs are read back with the
+    schema of the frame that wrote them, which skips Spark's schema-
+    inference job. Each schema passed in must equal what inference gives
+    on the written files, nullability included."""
+    from recon_spark import registry as R
+    from recon_spark.sources import fixtures
+
+    monkeypatch.setattr(fixtures, "_RAW_OVERRIDE", {})
+    fixtures.materialize_raw(spark, SF, str(tmp_path))
+    assert len(fixtures._RAW_OVERRIDE) == 4
+    tracker = spark.sparkContext.statusTracker()
+    for (_, name), (path, schema) in fixtures._RAW_OVERRIDE.items():
+        assert schema == spark.read.parquet(path).schema, name
+        jobs = len(tracker.getJobIdsForGroup(None))
+        assert fixtures._materialized(spark, SF, name).schema == schema, name
+        assert len(tracker.getJobIdsForGroup(None)) == jobs, name
+
+    for eng in R._MATERIALIZED_ENGINES:
+        lazy = R._lazy_engine_output(spark, SF, eng)
+        path = str(tmp_path / eng)
+        lazy.write.parquet(path)
+        assert fixtures.parquet_schema(lazy.schema) == spark.read.parquet(path).schema, eng

@@ -1,5 +1,6 @@
 """The driver JVM that get_spark launches runs with the C2 thresholds of
-``session.DRIVER_JIT_OPTIONS`` and a heap sized to the host.
+``session.DRIVER_JIT_OPTIONS`` and a heap sized to the host, and its
+Python workers can import ``recon_spark``.
 
 Spark starts the driver with ``-XX:+IgnoreUnrecognizedVMOptions``, so a
 misspelled flag starts cleanly and leaves the default in place. The test
@@ -10,7 +11,12 @@ from __future__ import annotations
 
 import os
 
-from recon_spark.session import DRIVER_JIT_OPTIONS, driver_memory
+from recon_spark.session import (
+    DRIVER_JIT_OPTIONS,
+    PACKAGE_ROOT,
+    driver_memory,
+    executor_pythonpath,
+)
 
 EXPECTED = {
     "Tier4InvocationThreshold": "50000",
@@ -48,3 +54,14 @@ def test_default_driver_heap_is_sized_to_the_host():
 def test_session_heap_follows_the_sizing(spark):
     want = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or driver_memory()
     assert spark.sparkContext.getConf().get("spark.driver.memory") == want
+
+
+def test_workers_get_the_package_root_first(spark):
+    """The package root leads the Python workers' path, so a UDF that
+    imports ``recon_spark`` works from any working directory; a path the
+    caller set is kept after it."""
+    assert os.path.isdir(os.path.join(PACKAGE_ROOT, "recon_spark"))
+    conf = spark.sparkContext.getConf().get("spark.executorEnv.PYTHONPATH")
+    assert conf.split(os.pathsep)[0] == PACKAGE_ROOT
+    assert executor_pythonpath() == PACKAGE_ROOT
+    assert executor_pythonpath("/a:/b") == os.pathsep.join((PACKAGE_ROOT, "/a:/b"))
