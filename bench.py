@@ -181,7 +181,7 @@ HEADLINE = [
     "langid_rank",
 ]
 
-#: ambient-load gate: before the run and at each lap boundary, wait up
+#: ambient-load gate: before each lap (the first is the run start), wait up
 #: to LOADAVG_WAIT_S for the 1-min loadavg to fall below LOADAVG_GATE
 LOADAVG_GATE = 4.0
 LOADAVG_WAIT_S = 90.0
@@ -612,30 +612,25 @@ def main() -> None:
     except ValueError:
         sf = -1.0
 
-    # ambient-load gate (VERDICT r9 #2): a lap started while the shared
-    # VM is already busy reads 2×+ slow on untouched queries, which
-    # poisons round-over-round comparison. Wait (bounded) for the 1-min
-    # loadavg to fall below the gate before starting; if it never does,
-    # proceed but FLAG the artifact as contended so no future diff
-    # mistakes ambient noise for a regression.
-    waited = 0.0
-    start_load = os.getloadavg()[0]
-    while start_load > LOADAVG_GATE and waited < LOADAVG_WAIT_S:
-        time.sleep(10)
-        waited += 10.0
-        start_load = os.getloadavg()[0]
-    ambient_gate = {
-        "threshold": LOADAVG_GATE,
-        "waited_sec": round(waited, 1),
-        "loadavg_at_start": round(start_load, 2),
-        "contended": start_load > LOADAVG_GATE,
+    # attribution subset (r14): SPARK_GRAFT_BENCH_ONLY=q1,q2,... runs
+    # only the named entries — built to test suite-LENGTH effects (the
+    # steady min over interleaved laps sees more page-cache/JIT churn
+    # between repeats as the suite grows, which uniform per-query
+    # ambient attribution cannot explain). Never used for the canonical
+    # committed artifact, which always runs the full HEADLINE. An
+    # unknown name fails the run rather than shrink the subset unseen.
+    only = {
+        q.strip()
+        for q in os.environ.get("SPARK_GRAFT_BENCH_ONLY", "").split(",")
+        if q.strip()
     }
-    if ambient_gate["contended"]:
-        print(
-            f"bench: ambient loadavg {start_load:.1f} still > gate "
-            f"{LOADAVG_GATE} after {waited:.0f}s — run flagged contended",
-            file=sys.stderr,
+    unknown = sorted(only - set(HEADLINE))
+    if unknown:
+        sys.exit(
+            f"bench: SPARK_GRAFT_BENCH_ONLY names no bench entry: {', '.join(unknown)}; "
+            f"valid names: {', '.join(HEADLINE)}"
         )
+    headline = [q for q in HEADLINE if not only or q in only]
 
     from pyspark.sql import functions as F
 
@@ -737,18 +732,6 @@ def main() -> None:
     # query's executions by a full suite pass (~1 min+), so a spike must
     # persist across the whole run to survive the min.
 
-    # attribution subset (r14): SPARK_GRAFT_BENCH_ONLY=q1,q2,... runs
-    # only the named entries — built to test suite-LENGTH effects (the
-    # steady min over interleaved laps sees more page-cache/JIT churn
-    # between repeats as the suite grows, which uniform per-query
-    # ambient attribution cannot explain). Never used for the canonical
-    # committed artifact, which always runs the full HEADLINE.
-    only = {
-        q.strip()
-        for q in os.environ.get("SPARK_GRAFT_BENCH_ONLY", "").split(",")
-        if q.strip()
-    }
-    headline = [q for q in HEADLINE if not only or q in only]
     # Per-QUERY contended-lap rejection (VERDICT r11 #8): the 1-min
     # loadavg cannot attribute a mid-lap spike — on a QUIET run the
     # bench's own local[32] bursts read 3-9 at query starts, the same
@@ -766,13 +749,13 @@ def main() -> None:
     lap_gates: list[dict[str, float | bool]] = []
     errors: dict[str, str] = {}
     for _lap in range(LAPS):
-        # r11 (VERDICT r10 #6): the gate held only at RUN start, but
-        # r10's laps ran under loadavg 4.3-6.1 that arrived mid-run —
-        # re-hold the same bounded gate at each LAP boundary so a spike
-        # between laps delays the lap instead of poisoning it, and
-        # record the per-lap verdict so diffs can discount what the
-        # wait couldn't cure. Decay awareness: right after a heavy lap
-        # the 1-min loadavg is dominated by the bench's OWN just-
+        # ambient-load gate (VERDICT r9 #2, r10 #6): a lap started while
+        # the shared VM is already busy reads 2×+ slow on untouched
+        # queries, so before each lap (lap 0's wait is the run-start
+        # wait) hold a bounded wait for the 1-min loadavg to fall below
+        # the gate, and record the per-lap verdict so diffs can discount
+        # what the wait couldn't cure. Decay awareness: right after a
+        # heavy lap the 1-min loadavg is dominated by the bench's OWN just-
         # finished work (an sf1 lap leaves it at ~20-30 on local[32]),
         # which drains monotonically and cannot pollute the next lap —
         # so a lap is flagged contended only if the load both stays
@@ -894,17 +877,16 @@ def main() -> None:
         "ext_cores_laps": lap_exts,
         "ext_gate_cores": EXT_GATE_CORES,
         "steady_accepted_laps": accepted_laps,
-        "ambient_gate": {**ambient_gate, "lap_gates": lap_gates},
+        # a run is contended if any lap gate timed out over threshold
+        "ambient_gate": {
+            "contended": any(g["contended"] for g in lap_gates),
+            "lap_gates": lap_gates,
+        },
         # which code and config produced the numbers
         "cpus": spark.sparkContext.defaultParallelism,
         "git_sha": _git_sha(),
         "jit_compile_s": jit_compile_s,
     }
-    # a run is contended if EITHER the start gate or any lap gate
-    # timed out over threshold (r11: per-lap holds)
-    out["ambient_gate"]["contended"] = bool(
-        ambient_gate["contended"] or any(g["contended"] for g in lap_gates)
-    )
     if errors:
         out["errors"] = errors
     # The printed line is the driver's bounded-tail capture: keep it

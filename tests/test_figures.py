@@ -12,14 +12,17 @@ import pytest
 from pyspark.sql import functions as F
 
 from recon_spark.plans import figures as G
-from recon_spark.registry import _ENGINE_NAMES, _lazy_engine_output
+from recon_spark.registry import _lazy_engine_output
 
 SF_DIR = "/root/testdata/sf0.001"
 
 
 @pytest.fixture(scope="module")
 def engines(spark):
-    return {e: _lazy_engine_output(spark, SF_DIR, e).persist() for e in _ENGINE_NAMES}
+    return {
+        f"engine_{e}": _lazy_engine_output(spark, SF_DIR, f"engine_{e}").persist()
+        for e in G.ENGINE_FIGURES
+    }
 
 
 def _engine_for(name: str) -> str:

@@ -118,15 +118,18 @@ def test_engine_outputs_lazy_and_materialized_give_same_rows(spark, monkeypatch)
     the lazy lineage, and an engine step's first call (the write) must
     return the same rows as its second (the lineage)."""
     from recon_spark import registry as R
+    from recon_spark import staging
     from recon_spark.plans import analytics
 
     def rows(df):
         return sorted(map(tuple, df.collect()), key=repr)
 
-    def written(df):
-        return any("recon_engines_" in f for f in df.inputFiles())
+    monkeypatch.setattr(staging, "_STORE", {})
+    clean = {f for t in R.clean_tables(spark, SF).values() for f in t.inputFiles()}
 
-    monkeypatch.setattr(R, "_ENGINE_TABLE_MEMO", {})
+    def written(df):
+        # a read-back scans the engine's output files, the lineage the clean tables
+        return not clean & set(df.inputFiles())
     for name in ("engine_a_match_planid", "engine_c_roth_taxable"):
         fn = R._REGISTERED[name][0]
         first = fn(spark, SF)
@@ -150,19 +153,29 @@ def test_read_back_schemas_equal_inference(spark, monkeypatch, tmp_path):
     inference job. Each schema passed in must equal what inference gives
     on the written files, nullability included."""
     from recon_spark import registry as R
+    from recon_spark import staging
     from recon_spark.sources import fixtures
 
-    monkeypatch.setattr(fixtures, "_RAW_OVERRIDE", {})
-    fixtures.materialize_raw(spark, SF, str(tmp_path))
-    assert len(fixtures._RAW_OVERRIDE) == 4
+    monkeypatch.setattr(staging, "_STORE", {})
     tracker = spark.sparkContext.statusTracker()
-    for (_, name), (path, schema) in fixtures._RAW_OVERRIDE.items():
+    builders = {
+        "relius": fixtures.relius_raw,
+        "matrix": fixtures.matrix_raw,
+        "demo": fixtures.relius_demo_raw,
+        "basis": fixtures.roth_basis_raw,
+    }
+    schemas = {name: fixtures.parquet_schema(b(spark, SF).schema) for name, b in builders.items()}
+    fixtures.materialize_raw(spark, SF, str(tmp_path))
+    for name, schema in schemas.items():
+        path = str(tmp_path / f"{name}_raw.parquet")
         assert schema == spark.read.parquet(path).schema, name
         jobs = len(tracker.getJobIdsForGroup(None))
-        assert fixtures._materialized(spark, SF, name).schema == schema, name
+        served = builders[name](spark, SF)
+        assert served.schema == schema, name
         assert len(tracker.getJobIdsForGroup(None)) == jobs, name
+        assert served.inputFiles() and all(path in f for f in served.inputFiles()), name
 
-    for eng in R._MATERIALIZED_ENGINES:
+    for eng in ("engine_a", "engine_c"):
         lazy = R._lazy_engine_output(spark, SF, eng)
         path = str(tmp_path / eng)
         lazy.write.parquet(path)

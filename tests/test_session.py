@@ -16,6 +16,7 @@ from recon_spark.session import (
     PACKAGE_ROOT,
     driver_memory,
     executor_pythonpath,
+    oracle_resources,
 )
 
 EXPECTED = {
@@ -49,6 +50,19 @@ def test_default_driver_heap_is_sized_to_the_host():
     assert driver_memory(40 * 2**30) == "24576m"
     assert driver_memory(64 * 2**30) == "24576m"
     assert driver_memory(2**30) == "614m"
+
+
+def test_oracle_gets_half_what_the_heap_leaves():
+    """DuckDB next to the default 9 GiB heap on a 15 GiB host gets 3 GiB
+    and one thread, so heap plus oracle stay well under the host's RAM;
+    a 64 GiB host's oracle gets 20 GiB and four threads."""
+    def heap_mib(phys_bytes):
+        return int(driver_memory(phys_bytes).removesuffix("m"))
+
+    assert oracle_resources(heap_mib(15 * 2**30), 15 * 2**30) == (1, 3072)
+    assert oracle_resources(8192, 16 * 2**30) == (1, 4096)
+    assert oracle_resources(heap_mib(64 * 2**30), 64 * 2**30) == (4, 20480)
+    assert oracle_resources(1024, 2**30) == (1, 512)
 
 
 def test_session_heap_follows_the_sizing(spark):

@@ -21,17 +21,12 @@ Usage: python tools/check_correctness.py [--approx] [sf_dir] [query ...]
 from __future__ import annotations
 
 import math
+import os
 import re
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
-
-import duckdb  # noqa: E402
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 APPROX = False
 
@@ -129,18 +124,10 @@ def main():
     only = set(argv[1:])
 
     import __spark_entry__ as E
+    from recon_spark.oracles import duckdb_oracle
     from recon_spark.session import get_spark
 
     spark = get_spark("check", cpus=8)
-
-    def fresh_con():
-        con = duckdb.connect()
-        # explicit limits: default memory autodetection misfires in this
-        # sandbox ("bad allocation" at tiny block sizes)
-        con.execute("SET threads=4; SET memory_limit='8GB'")
-        for t in TABLES:
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-        return con
 
     qs = E.queries()
     oracles = E.oracle_sql()
@@ -155,7 +142,7 @@ def main():
                 n = sdf.count()
                 print(f"  {nm}: rows-only ({n} rows) [{time.time()-t0:.1f}s]")
                 continue
-            con = fresh_con()
+            con = duckdb_oracle(spark, sf_dir)
             rel = con.sql(oracles[nm])
             duck_cols = rel.columns
             duck_types = rel.types

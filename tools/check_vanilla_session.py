@@ -26,12 +26,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import duckdb  # noqa: E402
 from pyspark.sql import SparkSession  # noqa: E402
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
 
 
 def main() -> None:
@@ -40,6 +35,7 @@ def main() -> None:
     import __spark_entry__ as E
 
     from recon_spark import staging
+    from recon_spark.oracles import duckdb_oracle
 
     spark = (
         SparkSession.builder.master("local[8]")
@@ -59,12 +55,7 @@ def main() -> None:
     for nm, fn in qs.items():
         try:
             n_spark = len(fn(spark, sf_dir).collect())
-            con = duckdb.connect()
-            con.execute("SET threads=4; SET memory_limit='6GB'")
-            for t in TABLES:
-                con.execute(
-                    f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-                )
+            con = duckdb_oracle(spark, sf_dir)
             n_oracle = len(con.execute(oracles[nm]).fetchall())
             con.close()
             if n_spark != n_oracle:
